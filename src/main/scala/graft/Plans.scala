@@ -68,7 +68,7 @@ object Plans {
         .explain("formatted")
     }
     section("fused_greedy_errors (kernel gated behind valid)") {
-      df.select(size(compiled.greedyErrors).as("n")).agg(sum("n"))
+      df.select(size(compiled.errors).as("n")).agg(sum("n"))
         .explain("formatted")
     }
     spark.stop()

@@ -2,7 +2,10 @@ package graft.compile
 
 import graft.json._
 import graft.schema.SchemaResolver
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{AnalysisException, Column, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,23 +15,24 @@ import org.apache.spark.sql.types._
   *    (jsen.js:900-902 — non-greedy emits an early return at every error
   *    site; combinators always run greedily internally and roll back).
   *  - `formats`: custom named formats — a regex source string or an
-  *    arbitrary Column predicate; custom formats run for ALL value types
-  *    and run last (jsen.js:1015-1035, test/format.js:210-265).
+  *    arbitrary Column predicate of the value alone; custom formats run
+  *    for ALL value types and run last (jsen.js:1015-1035,
+  *    test/format.js:210-265).
   *  - `schemas`: external registry keyed by id/URI (README.md:205-215).
   *  - `missingRef`: unresolvable $ref ≡ always-pass {} (test/missing.js).
+  *
+  * The `valid` column is [[ConstraintCompiler]]'s whole-stage-codegen
+  * predicate; the `errors` array is always the fused kernel
+  * ([[KernelCompiler]]).
   */
 final case class ValidatorOptions(
     greedy: Boolean = false,
     formats: Map[String, Either[String, Column => Column]] = Map.empty,
     schemas: Option[JObj] = None,
-    missingRef: Boolean = false,
-    /** Use the fused v2 error kernel ([[KernelCompiler]]) for the error
-      * array when the spec supports it; false pins the v1 Column tree
-      * (kept as the oracle — KernelParitySpec compares the two). The
-      * `valid` fast path is v1 whole-stage-codegen either way. */
-    useFusedErrors: Boolean = true)
+    missingRef: Boolean = false)
 
-/** Compiles a draft-4 constraint spec into Catalyst expression trees.
+/** Compiles a draft-4 constraint spec into its `valid` Catalyst predicate
+  * and wires the fused error kernel behind it.
   *
   * This is the Spark-native analog of the reference's code generator
   * (/root/reference/lib/jsen.js:932-1036): where jsen emits JavaScript
@@ -41,7 +45,8 @@ final case class ValidatorOptions(
   *   - `valid`:  boolean — analog of `validate(data)`'s return value;
   *   - `errors`: array<struct<path,keyword,message,additionalProperties>>
   *     — analog of `validate.errors` (jsen.js:871-903) with dot-delimited
-  *     paths and numeric array indices ("tokens.3").
+  *     paths and numeric array indices ("tokens.3"), produced by the
+  *     [[KernelCompiler]] kernel ([[FusedErrors]]) for invalid rows only.
   *
   * Missing-vs-null contract (SURVEY.md §7.4.1): for closed StructType data
   * a missing property ≡ NULL (presence test = isNotNull); for open MapType
@@ -56,91 +61,25 @@ object ConstraintCompiler {
     StructField("message", StringType),
     StructField("additionalProperties", StringType)))
   val errorsType: ArrayType = ArrayType(errorSchema, containsNull = false)
-  private val errorsDdl = "array<struct<path:string,keyword:string,message:string,additionalProperties:string>>"
 
-  private def emptyErrors: Column =
-    typedlit(Seq.empty[(String, String, String, String)]).cast(errorsDdl)
-
-  private def mkError(path: Column, keyword: String, message: Option[String],
-                      additional: Option[Column]): Column =
-    struct(
-      path.as("path"),
-      lit(keyword).as("keyword"),
-      message.map(lit(_)).getOrElse(lit(null).cast(StringType)).as("message"),
-      additional.getOrElse(lit(null).cast(StringType)).as("additionalProperties"))
-
-  /** Dot-delimited error path (jsen getPathExpression, jsen.js:591-647):
-    * literal segments for properties, dynamic segments for array indices
-    * and map keys; root path is the empty string. */
-  final case class JPath(parts: Vector[Either[String, Column]]) {
-    def /(seg: String): JPath = JPath(parts :+ Left(seg))
-    def /(seg: Column): JPath = JPath(parts :+ Right(seg))
-    def render: Column =
-      if (parts.isEmpty) lit("")
-      else if (parts.forall(_.isLeft)) lit(parts.map(_.swap.toOption.get).mkString("."))
-      else concat_ws(".", parts.map {
-        case Left(s)  => lit(s)
-        case Right(c) => c.cast(StringType)
-      }: _*)
-  }
-  object JPath { val root: JPath = JPath(Vector.empty) }
-
-  /** A value under validation: its column, static Spark type, and error
-    * path. Values reaching a compile site are always "present" in jsen's
-    * sense (the `!== undefined` guard is applied by the parent generator);
-    * they may still be SQL NULL (≡ JSON null) in array-element / map-value
+  /** A value under validation: its column and static Spark type. Values
+    * reaching a compile site are always "present" in jsen's sense (the
+    * `!== undefined` guard is applied by the parent generator); they may
+    * still be SQL NULL (≡ JSON null) in array-element / map-value
     * positions. `knownNonNull` marks values already guarded by a presence
     * check (struct fields under properties, map values under key-presence)
     * so type predicates skip the redundant isNotNull — a tree-size
     * optimization mirroring jsen's fused presence/descend branches. */
-  final case class Val(col: Column, dt: DataType, path: JPath,
-                       knownNonNull: Boolean = false)
+  final case class Val(col: Column, dt: DataType, knownNonNull: Boolean = false)
 
-  /** Compiled fragment: pure boolean validity (fast path), greedy error
-    * array, and non-greedy ("first error group") error array. */
-  final case class Comp(valid: Column, greedyErrs: Column, firstErrs: Column)
-
-  private object Comp {
-    def pass: Comp = Comp(lit(true), emptyErrors, emptyErrors)
-    def check(ok: Column, error: => Column): Comp = {
-      // `when(ok, ...)` treats NULL ok as false → error, matching JS where
-      // a failed/undefined comparison falls into the error branch only if
-      // the generator's condition evaluates truthy; all our `ok` exprs are
-      // three-valued-safe by construction (guards ensure non-null inputs).
-      val errs = when(ok, emptyErrors).otherwise(array(error))
-      Comp(coalesce(ok, lit(false)), errs, errs)
-    }
-    def seq(parts: Seq[Comp]): Comp = parts match {
-      case Seq()  => pass
-      case Seq(p) => p
-      case ps => Comp(
-        ps.map(_.valid).reduce(_ && _),
-        concat(ps.map(_.greedyErrs): _*),
-        firstNonEmpty(ps.map(_.firstErrs)))
-    }
-    /** Non-greedy composition: the first failing site's error group wins
-      * (jsen.js:900-902 `return` after the first errors.push). */
-    def firstNonEmpty(cols: Seq[Column]): Column =
-      cols.foldRight(emptyErrors)((c, acc) => when(size(c) > 0, c).otherwise(acc))
-    /** Gate a fragment on a condition: when gate is false/null, fragment is
-      * skipped entirely (no errors, valid). */
-    def gated(gate: Column, comp: => Comp): Comp = {
-      val c = comp
-      Comp(
-        when(gate, c.valid).otherwise(lit(true)),
-        when(gate, c.greedyErrs).otherwise(emptyErrors),
-        when(gate, c.firstErrs).otherwise(emptyErrors))
-    }
-  }
-
-  final case class Compiled(valid: Column, errors: Column, greedyErrors: Column)
+  final case class Compiled(valid: Column, errors: Column)
 
   /** Compile a constraint spec against a row schema. The resulting columns
     * reference the input columns by name.
     *
     * Column pruning: the fused error kernel takes the row as ONE struct,
     * which would otherwise force the scan to read every column whether
-    * or not the spec constrains it (the v1 Column tree prunes naturally —
+    * or not the spec constrains it (the `valid` tree prunes naturally —
     * Catalyst simplifies struct(...).field back to the column). When the
     * top-level spec uses only per-property keywords (type / properties /
     * required and message/doc keys — no patternProperties, no
@@ -187,54 +126,67 @@ object ConstraintCompiler {
     case _ => None
   }
 
-  /** Compile against an arbitrary value column of a known type. */
+  /** Compile against an arbitrary value column of a known type. The kernel
+    * compiles eagerly on the driver, so a spec the engine cannot validate
+    * over `dt` fails here with an IllegalArgumentException, not mid-job;
+    * the compile also warms the JVM-wide cache driver-side evaluation
+    * reuses. */
   def compileForValue(spec: JValue, value: Column, dt: DataType,
                       opts: ValidatorOptions = ValidatorOptions()): Compiled = {
-    spec match {
-      case _: JObj => ()
-      case _ => throw new IllegalArgumentException("graft: invalid schema object")
-    }
+    val json = Json.render(spec)
+    val kcfg = kernelCfg(spec, dt, opts)
+    KernelCompiler.compileCached(json, dt, kcfg)
     val resolver = new SchemaResolver(spec, opts.schemas, opts.missingRef)
-    val ctx = new Ctx(resolver, opts)
-    val comp = ctx.generate(spec, Val(value, dt, JPath.root), Nil)
+    val valid = new Ctx(resolver, opts).generate(spec, Val(value, dt), Nil)
     // Hot-path gate: `valid == errors.isEmpty` by construction, and
-    // CaseWhen short-circuits per row, so the error path is only evaluated
-    // for invalid rows — on mostly-valid data the greedy path runs at
-    // fast-path speed, mirroring jsen's design where the happy path never
-    // touches the error buffer (jsen.js:900-902).
-    //
-    // Error path: the fused v2 kernel (one JVM pass, KernelCompiler) when
-    // the spec supports it, else the v1 interpreted-HOF Column tree.
-    val kcfg = KernelCompiler.cfgOf(opts)
-    // driver-side support probe: decides fused vs v1 fallback before any
-    // expression ships to executors. Goes through the JVM-wide kernel
-    // cache, so the probe's compile IS the compile driver-side evaluation
-    // reuses (no double compilation).
-    val fused: Option[String] = if (opts.useFusedErrors) {
-      val json = Json.render(spec)
-      if (KernelCompiler.compileCached(json, dt, kcfg).isDefined) Some(json) else None
-    } else None
-    def fusedCol(greedy: Boolean): Option[Column] = fused.map { json =>
-      import org.apache.spark.sql.graftbridge.ColumnBridge
-      ColumnBridge.column(FusedErrors(
-        ColumnBridge.expression(value), json, greedy, kcfg))
+    // CaseWhen short-circuits per row, so the kernel only runs for invalid
+    // rows — on mostly-valid data the greedy path runs at fast-path
+    // speed, mirroring jsen's design where the happy path never touches
+    // the error buffer (jsen.js:900-902).
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val kernel = ColumnBridge.column(FusedErrors(
+      ColumnBridge.expression(value), json, opts.greedy, kcfg))
+    val noErrors = typedlit(Seq.empty[(String, String, String, String)]).cast(
+      "array<struct<path:string,keyword:string,message:string,additionalProperties:string>>")
+    Compiled(valid, when(valid, noErrors).otherwise(kernel))
+  }
+
+  private def kernelCfg(spec: JValue, dt: DataType,
+                        opts: ValidatorOptions): KernelCompiler.KernelCfg = {
+    val base = KernelCompiler.cfgOf(opts)
+    val fns = opts.formats.collect { case (name, Right(fn)) => name -> fn }
+    if (fns.isEmpty) base
+    else KernelCompiler.withFormatPredicates(spec, dt, base,
+      (name, t) => formatPredicate(name, fns(name), t))
+  }
+
+  /** A Column-function custom format as a bound, analyzed catalyst
+    * predicate over ordinal 0 — the embedding the kernel evaluates it in.
+    * jsen's custom formats receive only the value, so a function that
+    * reads other columns fails analysis and is rejected. */
+  private def formatPredicate(name: String, fn: Column => Column,
+                              dt: DataType): Expression = {
+    def reject(why: String, cause: Throwable = null) = throw new IllegalArgumentException(
+      s"graft: custom format '$name' must be a boolean predicate of the value alone: $why", cause)
+    val spark = SparkSession.active
+    val in = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField("value", dt))))
+    val analyzed =
+      try in.select(fn(in.col("value"))).queryExecution.analyzed
+      catch { case e: AnalysisException => reject(e.getMessage, e) }
+    ReplaceExpressions(analyzed) match {
+      case Project(Seq(Alias(pred, _)), child) =>
+        if (pred.dataType != BooleanType) reject(s"returns ${pred.dataType.simpleString}")
+        if (!pred.deterministic) reject("non-deterministic")
+        BindReferences.bindReference(pred, child.output)
+      case other => reject(s"unexpected plan ${other.simpleString(3)}")
     }
-    // one shared instance per mode: in greedy validators `errors` and
-    // `greedyErrors` are the same expression, so each executor compiles
-    // the kernel once, not once per output column
-    val fusedGreedy = fusedCol(greedy = true)
-    val fusedMode = if (opts.greedy) fusedGreedy else fusedCol(greedy = false)
-    val errs = when(comp.valid, emptyErrors).otherwise(
-      fusedMode.getOrElse(if (opts.greedy) comp.greedyErrs else comp.firstErrs))
-    val greedyGated = when(comp.valid, emptyErrors).otherwise(
-      fusedGreedy.getOrElse(comp.greedyErrs))
-    Compiled(comp.valid, errs, greedyGated)
   }
 
   private def quoted(name: String): String = s"`${name.replace("`", "``")}`"
 
   // --------------------------------------------------------------------
-  // keyword machinery (shared with the v2 kernel — see [[Draft4Tables]])
+  // keyword machinery (grouping shared with the kernel — see [[Draft4Tables]])
   // --------------------------------------------------------------------
 
   private val keywordType = Draft4Tables.keywordType
@@ -248,10 +200,23 @@ object ConstraintCompiler {
       * satisfy (SURVEY.md §7.4.6). */
     type Stack = List[(JValue, DataType)]
 
-    def generate(schemaV: JValue, v: Val, stack: Stack): Comp = {
+    private def all(parts: Seq[Column]): Column =
+      if (parts.isEmpty) lit(true) else parts.reduce(_ && _)
+
+    /** Gate a fragment on a condition: when gate is false/null, the
+      * fragment is skipped (valid). */
+    private def gated(gate: Column, ok: Column): Column =
+      when(gate, ok).otherwise(lit(true))
+
+    /** `when(ok, ...)` treats NULL as false; every `ok` below is
+      * three-valued-safe by construction (guards ensure non-null inputs),
+      * and a NULL from a user predicate counts as a failure. */
+    private def check(ok: Column): Column = coalesce(ok, lit(false))
+
+    def generate(schemaV: JValue, v: Val, stack: Stack): Column = {
       val schema0 = schemaV match {
         case o: JObj => o
-        case _       => return Comp.pass // type(schema)!=='object' → no code
+        case _       => return lit(true) // type(schema)!=='object' → no code
       }
       // $ref: resolve and inline (compile-time analog of jsen.js:949-962)
       val schema = if (schema0.has("$ref")) {
@@ -261,14 +226,14 @@ object ConstraintCompiler {
             "graft: unbounded recursive $ref cannot be compiled over a finite row schema")
         resolved match {
           case o: JObj => o
-          case _       => return Comp.pass
+          case _       => return lit(true)
         }
       } else schema0
       val stack2 = (schema: JValue, v.dt) :: stack
 
       // enum short-circuits every other keyword (jsen.js:966-970)
       schema.arr("enum") match {
-        case Some(lits) if lits.nonEmpty => return kEnum(schema, lits, v)
+        case Some(lits) if lits.nonEmpty => return check(lits.map(litEquals(v, _)).reduce(_ || _))
         case _ => ()
       }
 
@@ -283,41 +248,32 @@ object ConstraintCompiler {
       // (jsen groupKeywords, jsen.js:541-589)
       val hasPatternProps = schema.obj("patternProperties").isDefined
       val perType = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
-      val allType = Vector.newBuilder[String]
       schema.keys.foreach { key =>
-        if (key != "enum" && key != "type") {
-          if (combinators(key)) allType += key
-          else keywordType.get(key).foreach { t =>
+        if (key != "enum" && key != "type" && !combinators(key))
+          keywordType.get(key).foreach { t =>
             // additionalProperties is fused into the patternProperties
             // generator when both are present (jsen.js:545,577)
             if (!(key == "additionalProperties" && hasPatternProps))
               perType(t) = perType.getOrElse(t, Vector.empty) :+ key
           }
-        }
       }
 
-      val parts = Vector.newBuilder[Comp]
+      val parts = Vector.newBuilder[Column]
 
       // type union check (jsen.js:978-985)
       val typeOk: Option[Column] = declaredTypes.map { ts =>
         ts.map(t => typePred(t, v)).reduce(_ || _)
       }
-      typeOk.foreach { ok =>
-        parts += Comp.check(ok, mkError(v.path.render, "type",
-          messageFor(schema, "type", None), None))
-      }
+      typeOk.foreach(ok => parts += check(ok))
 
       // per-type keyword groups, gated on (type union passed) && (value is
-      // that type) — the reference's else-if ladder (jsen.js:987-1003):
-      // a type-mismatched value gets only the type error, never keyword
-      // errors (test/greedy.js:65-103).
+      // that type) — the reference's else-if ladder (jsen.js:987-1003)
       perType.foreach { case (t, kws) =>
-        val pred = typePred(t, v)
-        if (!isStaticFalse(pred, t, v.dt)) {
+        if (!isStaticFalse(t, v.dt)) {
+          val pred = typePred(t, v)
           val gate = typeOk.map(_ && pred).getOrElse(pred)
-          val groupParts = kws.flatMap(k => keywordComp(k, schema, v, stack2))
-          if (groupParts.nonEmpty)
-            parts += Comp.gated(gate, Comp.seq(groupParts))
+          val groupParts = kws.flatMap(k => keywordValid(k, schema, v, stack2))
+          if (groupParts.nonEmpty) parts += gated(gate, all(groupParts))
         }
       }
 
@@ -327,13 +283,13 @@ object ConstraintCompiler {
           subs.foreach(sub => parts += generate(sub, v, stack2))
         }
         case "anyOf" => schema.arr("anyOf").foreach { subs =>
-          parts += kAnyOf(schema, subs, v, stack2)
+          parts += subs.map(generate(_, v, stack2)).reduce(_ || _)
         }
         case "oneOf" => schema.arr("oneOf").foreach { subs =>
-          parts += kOneOf(schema, subs, v, stack2)
+          parts += subs.map(generate(_, v, stack2).cast(IntegerType)).reduce(_ + _) === 1
         }
         case "not" => schema.obj("not").foreach { sub =>
-          parts += kNot(schema, sub, v, stack2)
+          parts += !generate(sub, v, stack2)
         }
         case _ => ()
       }
@@ -341,17 +297,12 @@ object ConstraintCompiler {
       // custom formats run last, for all value types (jsen.js:1015-1035)
       schema.str("format").foreach { name =>
         opts.formats.get(name).foreach {
-          case Left(regexSrc) =>
-            val ok = v.col.cast(StringType).rlike(JsRegex.toJava(regexSrc))
-            parts += Comp.check(ok, mkError(v.path.render, "format",
-              messageFor(schema, "format", None), None))
-          case Right(fn) =>
-            parts += Comp.check(fn(v.col), mkError(v.path.render, "format",
-              messageFor(schema, "format", None), None))
+          case Left(regexSrc) => parts += check(v.col.cast(StringType).rlike(JsRegex.toJava(regexSrc)))
+          case Right(fn)      => parts += check(fn(v.col))
         }
       }
 
-      Comp.seq(parts.result())
+      all(parts.result())
     }
 
     // ------------------------------------------------------------------
@@ -401,7 +352,7 @@ object ConstraintCompiler {
     }
 
     /** Static pruning: group never applies → skip compiling it. */
-    private def isStaticFalse(pred: Column, t: String, dt: DataType): Boolean = t match {
+    private def isStaticFalse(t: String, dt: DataType): Boolean = t match {
       case "boolean" => dt != BooleanType
       case "string"  => dt != StringType
       case "number" | "integer" => !isNumeric(dt)
@@ -410,10 +361,6 @@ object ConstraintCompiler {
       case "date"    => !(dt == DateType || dt == TimestampType || dt == TimestampNTZType)
       case _ => false
     }
-
-    // error messages: shared table logic (jsen.js:871-903)
-    def messageFor(schema: JObj, keyword: String, key: Option[String]): Option[String] =
-      Draft4Tables.messageFor(resolver, schema, keyword, key)
 
     // ------------------------------------------------------------------
     // scalar keywords
@@ -424,93 +371,69 @@ object ConstraintCompiler {
 
     private def isFloating(dt: DataType): Boolean = dt == FloatType || dt == DoubleType
 
-    def keywordComp(keyword: String, schema: JObj, v: Val, stack: Stack): Option[Comp] = {
-      def e(kw: String, key: Option[String] = None, additional: Option[Column] = None,
-            path: JPath = v.path): Column = {
-        val p = key.map(path / _).getOrElse(path)
-        mkError(p.render, kw, messageFor(schema, kw, key), additional)
-      }
+    def keywordValid(keyword: String, schema: JObj, v: Val, stack: Stack): Option[Column] =
       keyword match {
         // ---- number group (value guaranteed numeric non-null) ----
         case "minimum" => schema.num("minimum").map { m =>
           // fail iff x < min (jsen.js:91-97); NaN comparisons are false in
           // JS → NaN passes; Spark sorts NaN above all → add isnan escape
           val ok0 = !(v.col < numLit(m))
-          val ok = if (isFloating(v.dt)) isnan(v.col) || ok0 else ok0
-          Comp.check(ok, e("minimum"))
+          check(if (isFloating(v.dt)) isnan(v.col) || ok0 else ok0)
         }
         case "exclusiveMinimum" =>
           // modifier: only with boolean true AND numeric minimum
           // (jsen.js:99-105, draft-4 boolean form)
           (schema.bool("exclusiveMinimum"), schema.num("minimum")) match {
-            case (Some(true), Some(m)) =>
-              Some(Comp.check(!(v.col === numLit(m)), e("exclusiveMinimum")))
+            case (Some(true), Some(m)) => Some(check(!(v.col === numLit(m))))
             case _ => None
           }
         case "maximum" => schema.num("maximum").map { m =>
           val ok0 = !(v.col > numLit(m))
-          val ok = if (isFloating(v.dt)) isnan(v.col) || ok0 else ok0
-          Comp.check(ok, e("maximum"))
+          check(if (isFloating(v.dt)) isnan(v.col) || ok0 else ok0)
         }
         case "exclusiveMaximum" =>
           (schema.bool("exclusiveMaximum"), schema.num("maximum")) match {
-            case (Some(true), Some(m)) =>
-              Some(Comp.check(!(v.col === numLit(m)), e("exclusiveMaximum")))
+            case (Some(true), Some(m)) => Some(check(!(v.col === numLit(m))))
             case _ => None
           }
-        case "multipleOf" => schema.num("multipleOf").map { mul =>
-          kMultipleOf(mul, v, e("multipleOf"))
-        }
+        case "multipleOf" => schema.num("multipleOf").map(kMultipleOf(_, v))
 
         // ---- string group ----
         case "minLength" => schema.int("minLength").map { n =>
           // Spark length() counts code points, matching ucs2length
           // (/root/reference/lib/ucs2length.js:5-25)
-          Comp.check(length(v.col) >= lit(n), e("minLength"))
+          check(length(v.col) >= lit(n))
         }
-        case "maxLength" => schema.int("maxLength").map { n =>
-          Comp.check(length(v.col) <= lit(n), e("maxLength"))
-        }
+        case "maxLength" => schema.int("maxLength").map(n => check(length(v.col) <= lit(n)))
         case "pattern" => schema.str("pattern").map { p =>
           // JS RegExp.test is find-anywhere; rlike is too (jsen.js:157-165)
-          Comp.check(v.col.rlike(JsRegex.toJava(p)), e("pattern"))
+          check(v.col.rlike(JsRegex.toJava(p)))
         }
         case "format" => schema.str("format").flatMap { name =>
           // built-in formats: strings only (jsen.js:167-175); customs are
           // handled in generate() after all other keywords
           if (opts.formats.contains(name)) None
-          else Formats.builtin.get(name).map { re =>
-            Comp.check(v.col.rlike(re), e("format"))
-          }
+          else Formats.builtin.get(name).map(re => check(v.col.rlike(re)))
         }
 
         // ---- array group ----
-        case "minItems" => schema.int("minItems").map { n =>
-          Comp.check(size(v.col) >= lit(n), e("minItems"))
-        }
-        case "maxItems" => schema.int("maxItems").map { n =>
-          Comp.check(size(v.col) <= lit(n), e("maxItems"))
-        }
+        case "minItems" => schema.int("minItems").map(n => check(size(v.col) >= lit(n)))
+        case "maxItems" => schema.int("maxItems").map(n => check(size(v.col) <= lit(n)))
         case "additionalItems" =>
           (schema.bool("additionalItems"), schema.arr("items")) match {
-            case (Some(false), Some(tuple)) =>
-              Some(Comp.check(size(v.col) <= lit(tuple.length), e("additionalItems")))
+            case (Some(false), Some(tuple)) => Some(check(size(v.col) <= lit(tuple.length)))
             case _ => None
           }
         case "uniqueItems" => schema.bool("uniqueItems").collect { case true =>
           // deep structural dedup (lib/unique.js) ≡ array_distinct on
           // Spark's structural equality
-          Comp.check(size(array_distinct(v.col)) === size(v.col), e("uniqueItems"))
+          check(size(array_distinct(v.col)) === size(v.col))
         }
         case "items" => kItems(schema, v, stack)
 
         // ---- object group ----
-        case "maxProperties" => schema.int("maxProperties").map { n =>
-          Comp.check(propertyCount(v) <= lit(n), e("maxProperties"))
-        }
-        case "minProperties" => schema.int("minProperties").map { n =>
-          Comp.check(propertyCount(v) >= lit(n), e("minProperties"))
-        }
+        case "maxProperties" => schema.int("maxProperties").map(n => check(propertyCount(v) <= lit(n)))
+        case "minProperties" => schema.int("minProperties").map(n => check(propertyCount(v) >= lit(n)))
         case "required" => kRequired(schema, v)
         case "properties" => kProperties(schema, v, stack)
         case "patternProperties" | "additionalProperties" => kPatternAndAdditional(schema, v, stack)
@@ -518,25 +441,22 @@ object ConstraintCompiler {
 
         case _ => None
       }
-    }
 
     /** multipleOf with the reference's decimal-scaling fix for fractional
       * divisors (jsen.js:123-139): `18.15 % 0.01` must pass. We cast to
       * DecimalType at 2× the divisor's scale — the decimal analog of
       * jsen's round-via-exponent-string trick. */
-    private def kMultipleOf(mul: BigDecimal, v: Val, error: => Column): Comp = {
+    private def kMultipleOf(mul: BigDecimal, v: Val): Column = {
       // multipleOf 0: jsen's `x % 0` is NaN, NaN !== 0 → every numeric
       // value fails (jsen.js:123-139). Spark's `%` would THROW
       // REMAINDER_BY_ZERO under ANSI instead — compile the constant.
-      if (mul == 0) return Comp.check(lit(false), error)
+      if (mul == 0) return lit(false)
       val m = BigDecimal(mul.underlying.stripTrailingZeros())
       val decimals = math.max(0, m.scale)
-      if (decimals == 0) {
-        val ok =
-          if (isIntegral(v.dt)) v.col % lit(m.toLongExact) === lit(0L)
-          else (v.col * lit(1)) % lit(m.toLongExact) === lit(0)
-        Comp.check(ok, error)
-      } else {
+      if (decimals == 0) check(
+        if (isIntegral(v.dt)) v.col % lit(m.toLongExact) === lit(0L)
+        else (v.col * lit(1)) % lit(m.toLongExact) === lit(0))
+      else {
         val scale = math.min(2 * decimals, 18)
         // decimal inputs: the integer-digit bound is known, so cast to
         // the TIGHTEST sufficient precision — a result precision ≤ 18
@@ -553,23 +473,15 @@ object ConstraintCompiler {
             DecimalType(math.min(38, intDigits + scale), scale)
           case _ => DecimalType(38, scale)
         }
-        // try_cast: out-of-range doubles → NULL → `ok` NULL → error branch
+        // try_cast: out-of-range doubles → NULL → `ok` NULL → invalid
         val scaled = v.col.try_cast(decT)
-        val ok = scaled % lit(m.underlying).cast(decT) === lit(BigDecimal(0).underlying).cast(decT)
-        Comp.check(ok, error)
+        check(scaled % lit(m.underlying).cast(decT) === lit(BigDecimal(0).underlying).cast(decT))
       }
     }
 
     // ------------------------------------------------------------------
     // enum (jsen.js:83-89 + equalAny kernel 680-688, lib/equal.js)
     // ------------------------------------------------------------------
-
-    private def kEnum(schema: JObj, lits: Vector[JValue], v: Val): Comp = {
-      val tests = lits.map(litEquals(v, _))
-      val ok = tests.reduce(_ || _)
-      Comp.check(ok, mkError(v.path.render, "enum",
-        messageFor(schema, "enum", None), None))
-    }
 
     /** Deep structural equality of a value column against a spec literal,
       * specialized at compile time (the equal kernel, lib/equal.js:28-69).
@@ -584,7 +496,7 @@ object ConstraintCompiler {
         if (items.isEmpty) v.col.isNotNull && size(v.col) === 0
         else {
           val elemChecks = items.zipWithIndex.map { case (item, i) =>
-            litEquals(Val(get(v.col, lit(i)), et, v.path), item)
+            litEquals(Val(get(v.col, lit(i)), et), item)
           }
           v.col.isNotNull && size(v.col) === lit(items.length) && elemChecks.reduce(_ && _)
         }
@@ -597,7 +509,7 @@ object ConstraintCompiler {
         else {
           val checks = st.fields.toSeq.map { f =>
             o.get(f.name) match {
-              case Some(fv) => litEquals(Val(v.col.getField(f.name), f.dataType, v.path), fv)
+              case Some(fv) => litEquals(Val(v.col.getField(f.name), f.dataType), fv)
               case None     => v.col.getField(f.name).isNull
             }
           }
@@ -606,7 +518,7 @@ object ConstraintCompiler {
       case (o: JObj, MapType(StringType, vt, _)) =>
         val checks = o.fields.map { case (k, fv) =>
           map_contains_key(v.col, lit(k)) &&
-            litEquals(Val(try_element_at(v.col, lit(k)), vt, v.path), fv)
+            litEquals(Val(try_element_at(v.col, lit(k)), vt), fv)
         }
         v.col.isNotNull && size(v.col) === lit(o.fields.length) &&
           checks.foldLeft(lit(true))(_ && _)
@@ -617,52 +529,45 @@ object ConstraintCompiler {
     // array descent (items / additionalItems schema form, jsen.js:209-236)
     // ------------------------------------------------------------------
 
-    private def kItems(schema: JObj, v: Val, stack: Stack): Option[Comp] = {
+    private def kItems(schema: JObj, v: Val, stack: Stack): Option[Column] = {
       val (et, elemNullable) = v.dt match {
         case ArrayType(t, n) => (t, n)
         case _ => return None
       }
       schema.get("items") match {
         case Some(sub: JObj) =>
-          def elemComp(x: Column, i: Column): Comp =
-            generate(sub, Val(x, et, v.path / i, knownNonNull = !elemNullable), stack)
-          val general = arrayComp(v.col, elemComp, from = 0)
           // Fast path: a pure-bounds element schema over non-nullable
-          // integral elements compiles the VALID column to
-          // array_min/array_max comparisons — builtin expressions with
-          // real doGenCode, unlike higher-order functions which are
-          // CodegenFallback and evaluate the lambda interpreted per
-          // element. This keeps the hot loop (e.g. token-id bounds over a
-          // 10^12-row table) inside whole-stage codegen; the error tree
-          // still uses the general per-element path, but it is gated
-          // behind `valid` and only runs for violating rows.
-          Some(scalarBoundsValid(sub, et, elemNullable, v.col)
-            .map(fast => general.copy(valid = fast))
-            .getOrElse(general))
+          // integral elements compiles to the fused ArrayBoundsCheck —
+          // a builtin expression with real doGenCode, unlike higher-order
+          // functions which are CodegenFallback and evaluate the lambda
+          // interpreted per element. This keeps the hot loop (e.g.
+          // token-id bounds over a 10^12-row table) inside whole-stage
+          // codegen.
+          Some(scalarBoundsValid(sub, et, elemNullable, v.col).getOrElse(
+            arrayValid(v.col, x => generate(sub, Val(x, et, knownNonNull = !elemNullable), stack),
+              from = 0)))
         case Some(JArr(tuple)) =>
           val positional = tuple.zipWithIndex.map { case (sub, i) =>
             // guarded on arr.length-1 >= i (jsen.js:222): get() is
             // null-safe OOB, but the guard keeps jsen's skip semantics
-            Comp.gated(size(v.col) - 1 >= lit(i),
-              generate(sub, Val(get(v.col, lit(i)), et, v.path / i.toString), stack))
+            gated(size(v.col) - 1 >= lit(i), generate(sub, Val(get(v.col, lit(i)), et), stack))
           }
           val rest = schema.get("additionalItems") match {
-            case Some(restSub: JObj) =>
-              def elemComp(x: Column, i: Column): Comp =
-                generate(restSub, Val(x, et, v.path / i, knownNonNull = !elemNullable), stack)
-              Vector(arrayComp(v.col, elemComp, from = tuple.length))
+            case Some(restSub: JObj) => Vector(arrayValid(v.col,
+              x => generate(restSub, Val(x, et, knownNonNull = !elemNullable), stack),
+              from = tuple.length))
             case _ => Vector.empty
           }
-          Some(Comp.seq(positional ++ rest))
+          Some(all(positional ++ rest))
         case _ => None
       }
     }
 
     /** Detect an element schema that is nothing but integral bounds and
-      * compile the VALID column to the fused single-pass
-      * [[ArrayBoundsCheck]] codegen expression. Returns None when
-      * semantics could diverge (floats/NaN, fractional bounds, extra
-      * keywords, enum, combinators, a type excluding integers). */
+      * compile it to the fused single-pass [[ArrayBoundsCheck]] codegen
+      * expression. Returns None when semantics could diverge
+      * (floats/NaN, fractional bounds, extra keywords, enum, combinators,
+      * a type excluding integers). */
     private def scalarBoundsValid(sub: JObj, et: DataType, elemNullable: Boolean,
                                   arr: Column): Option[Column] = {
       val integral = et == IntegerType || et == LongType || et == ShortType || et == ByteType
@@ -699,25 +604,11 @@ object ConstraintCompiler {
         exMin, exMax, failOnNull)))
     }
 
-    /** Per-element validation over an array column starting at `from`.
-      * Greedy errors: all elements', in order; non-greedy: the first
-      * failing element's first error group. */
-    private def arrayComp(arr: Column, elemComp: (Column, Column) => Comp,
-                          from: Int): Comp = {
-      def fromGate(i: Column, c: Column) =
-        if (from == 0) c else when(i >= lit(from), c).otherwise(lit(true))
-      def fromGateErrs(i: Column, c: Column) =
-        if (from == 0) c else when(i >= lit(from), c).otherwise(emptyErrors)
-
-      val valid = size(filter(
-        transform(arr, (x, i) => fromGate(i, elemComp(x, i).valid)),
+    /** Every element from index `from` on is valid. */
+    private def arrayValid(arr: Column, elem: Column => Column, from: Int): Column =
+      size(filter(
+        transform(arr, (x, i) => if (from == 0) elem(x) else gated(i >= lit(from), elem(x))),
         b => !b)) === 0
-      val greedy = flatten(transform(arr, (x, i) => fromGateErrs(i, elemComp(x, i).greedyErrs)))
-      val first = flatten(slice(filter(
-        transform(arr, (x, i) => fromGateErrs(i, elemComp(x, i).firstErrs)),
-        a => size(a) > 0), 1, 1))
-      Comp(valid, greedy, first)
-    }
 
     // ------------------------------------------------------------------
     // object keywords, specialized per StructType (closed) / MapType (open)
@@ -735,79 +626,61 @@ object ConstraintCompiler {
     private def structField(st: StructType, name: String): Option[StructField] =
       st.fields.find(_.name == name)
 
+    /** Presence of a property: missing ≡ NULL for closed structs (a
+      * statically-absent column is always undefined); key presence for
+      * open maps. */
+    private def present(v: Val, name: String): Column = v.dt match {
+      case st: StructType =>
+        if (structField(st, name).isDefined) v.col.getField(name).isNotNull else lit(false)
+      case _: MapType => map_contains_key(v.col, lit(name))
+      case _ => lit(false)
+    }
+
     /** required (jsen.js:255-273): names carrying an object sub-schema in
-      * `properties` are skipped — the properties generator emits their
-      * required error in its else branch (bug #81 ordering fix). */
-    private def kRequired(schema: JObj, v: Val): Option[Comp] = {
+      * `properties` are checked by the properties generator instead. */
+    private def kRequired(schema: JObj, v: Val): Option[Column] = {
       val required = schema.arr("required").getOrElse(return None)
         .collect { case JStr(s) => s }
       val props = schema.obj("properties")
       def hasObjectSubSchema(name: String): Boolean =
         props.flatMap(_.get(name)).exists(_.isInstanceOf[JObj])
-      val checks = required.filterNot(hasObjectSubSchema).map { name =>
-        val present: Column = v.dt match {
-          case st: StructType =>
-            if (structField(st, name).isDefined) v.col.getField(name).isNotNull
-            else lit(false) // statically-absent column is always undefined
-          case _: MapType => map_contains_key(v.col, lit(name))
-          case _ => lit(false)
-        }
-        Comp.check(present, mkError((v.path / name).render, "required",
-          messageFor(schema, "required", Some(name)), None))
-      }
-      if (checks.isEmpty) None else Some(Comp.seq(checks))
+      val checks = required.filterNot(hasObjectSubSchema).map(n => check(present(v, n)))
+      if (checks.isEmpty) None else Some(all(checks))
     }
 
     /** properties (jsen.js:275-301): presence-guarded descent; absent +
-      * required → required error in the else branch. */
-    private def kProperties(schema: JObj, v: Val, stack: Stack): Option[Comp] = {
+      * required is invalid. */
+    private def kProperties(schema: JObj, v: Val, stack: Stack): Option[Column] = {
       val props = schema.obj("properties").getOrElse(return None)
       if (props.fields.isEmpty) return None
       val required = schema.arr("required").getOrElse(Vector.empty)
         .collect { case JStr(s) => s }.toSet
 
       val parts = props.fields.map { case (name, sub) =>
-        def requiredErr: Option[Comp] =
-          if (required.contains(name))
-            Some(Comp.check(lit(false), mkError((v.path / name).render, "required",
-              messageFor(schema, "required", Some(name)), None)))
-          else None
-        v.dt match {
-          case st: StructType =>
-            structField(st, name) match {
-              case Some(f) =>
-                val fieldCol = v.col.getField(name)
-                val present = fieldCol.isNotNull
-                val descend = Comp.gated(present,
-                  generate(sub, Val(fieldCol, f.dataType, v.path / name,
-                    knownNonNull = true), stack))
-                requiredErr match {
-                  case Some(re) => Comp.seq(Seq(descend, Comp.gated(!present, re)))
-                  case None     => descend
-                }
-              case None =>
-                // column absent from the row schema: always undefined
-                requiredErr.getOrElse(Comp.pass)
-            }
-          case MapType(StringType, vt, _) =>
-            val present = map_contains_key(v.col, lit(name))
-            val descend = Comp.gated(present,
-              generate(sub, Val(try_element_at(v.col, lit(name)), vt, v.path / name), stack))
-            requiredErr match {
-              case Some(re) => Comp.seq(Seq(descend, Comp.gated(!present, re)))
-              case None     => descend
-            }
-          case _ => Comp.pass
+        val isRequired = required.contains(name)
+        val value: Option[Val] = v.dt match {
+          case st: StructType => structField(st, name).map(f =>
+            Val(v.col.getField(name), f.dataType, knownNonNull = true))
+          case MapType(StringType, vt, _) => Some(Val(try_element_at(v.col, lit(name)), vt))
+          case _ => None
+        }
+        value match {
+          case Some(x) =>
+            val isPresent = present(v, name)
+            val descend = gated(isPresent, generate(sub, x, stack))
+            if (isRequired) descend && check(isPresent) else descend
+          // column absent from the row schema: always undefined
+          case None => if (isRequired && v.dt.isInstanceOf[StructType]) lit(false) else lit(true)
         }
       }
-      Some(Comp.seq(parts))
+      Some(all(parts))
     }
 
     /** patternProperties + additionalProperties, fused like the reference's
       * single generator (jsen.js:303-378). For closed StructType data the
       * key set is static, so pattern matching happens at compile time; for
       * MapType it is a single pass over map_entries. */
-    private def kPatternAndAdditional(schema: JObj, v: Val, stack: Stack): Option[Comp] = {
+    private def kPatternAndAdditional(schema: JObj, v: Val, stack: Stack): Option[Column] = {
       val patterns: Vector[(String, JValue)] =
         schema.obj("patternProperties").map(_.fields).getOrElse(Vector.empty)
       val addProps: Option[Either[Boolean, JObj]] = schema.get("additionalProperties") match {
@@ -828,34 +701,31 @@ object ConstraintCompiler {
           val parts = st.fields.toVector.flatMap { f =>
             val key = f.name
             val fieldCol = v.col.getField(key)
-            val present = fieldCol.isNotNull
+            val isPresent = fieldCol.isNotNull
             val matched = patterns.filter { case (p, _) =>
               java.util.regex.Pattern.compile(JsRegex.toJava(p)).matcher(key).find()
             }
             val patParts = matched.map { case (_, sub) =>
-              Comp.gated(present, generate(sub, Val(fieldCol, f.dataType, v.path / key), stack))
+              gated(isPresent, generate(sub, Val(fieldCol, f.dataType), stack))
             }
-            val addPart: Vector[Comp] =
+            val addPart: Vector[Column] =
               if (!addPropsCheck || declared.contains(key) || matched.nonEmpty) Vector.empty
               else addProps match {
-                case Some(Left(false)) => Vector(Comp.gated(present,
-                  Comp.check(lit(false), mkError(v.path.render, "additionalProperties",
-                    messageFor(schema, "additionalProperties", None), Some(lit(key))))))
-                case Some(Right(sub)) => Vector(Comp.gated(present,
-                  generate(sub, Val(fieldCol, f.dataType, v.path / key), stack)))
+                case Some(Left(false)) => Vector(gated(isPresent, lit(false)))
+                case Some(Right(sub)) =>
+                  Vector(gated(isPresent, generate(sub, Val(fieldCol, f.dataType), stack)))
                 case _ => Vector.empty
               }
             patParts ++ addPart
           }
-          if (parts.isEmpty) None else Some(Comp.seq(parts))
+          if (parts.isEmpty) None else Some(all(parts))
 
         case MapType(StringType, vt, _) =>
-          def entryComp(key: Column, value: Column): Comp = {
+          def entryValid(key: Column, value: Column): Column = {
             val patParts = patterns.map { case (p, sub) =>
-              Comp.gated(key.rlike(JsRegex.toJava(p)),
-                generate(sub, Val(value, vt, v.path / key), stack))
+              gated(key.rlike(JsRegex.toJava(p)), generate(sub, Val(value, vt), stack))
             }
-            val addPart: Vector[Comp] = if (!addPropsCheck) Vector.empty else {
+            val addPart: Vector[Column] = if (!addPropsCheck) Vector.empty else {
               val anyMatch =
                 if (patterns.isEmpty) lit(false)
                 else patterns.map { case (p, _) => key.rlike(JsRegex.toJava(p)) }.reduce(_ || _)
@@ -863,92 +733,31 @@ object ConstraintCompiler {
                 if (declared.isEmpty) lit(false) else key.isin(declared.toSeq: _*)
               val gate = !anyMatch && !isDeclared
               addProps match {
-                case Some(Left(false)) => Vector(Comp.gated(gate,
-                  Comp.check(lit(false), mkError(v.path.render, "additionalProperties",
-                    messageFor(schema, "additionalProperties", None), Some(key)))))
-                case Some(Right(sub)) => Vector(Comp.gated(gate,
-                  generate(sub, Val(value, vt, v.path / key), stack)))
+                case Some(Left(false)) => Vector(gated(gate, lit(false)))
+                case Some(Right(sub)) => Vector(gated(gate, generate(sub, Val(value, vt), stack)))
                 case _ => Vector.empty
               }
             }
-            Comp.seq((patParts ++ addPart).toSeq)
+            all(patParts ++ addPart)
           }
-          val entries = map_entries(v.col)
-          def eKey(e: Column) = e.getField("key")
-          def eVal(e: Column) = e.getField("value")
-          val valid = size(filter(
-            transform(entries, e => entryComp(eKey(e), eVal(e)).valid), b => !b)) === 0
-          val greedy = flatten(transform(entries, e => entryComp(eKey(e), eVal(e)).greedyErrs))
-          val first = flatten(slice(filter(
-            transform(entries, e => entryComp(eKey(e), eVal(e)).firstErrs),
-            a => size(a) > 0), 1, 1))
-          Some(Comp(valid, greedy, first))
+          Some(size(filter(
+            transform(map_entries(v.col), e => entryValid(e.getField("key"), e.getField("value"))),
+            b => !b)) === 0)
 
         case _ => None
       }
     }
 
     /** dependencies (jsen.js:380-410): property form and schema form. */
-    private def kDependencies(schema: JObj, v: Val, stack: Stack): Option[Comp] = {
+    private def kDependencies(schema: JObj, v: Val, stack: Stack): Option[Column] = {
       val deps = schema.obj("dependencies").getOrElse(return None)
-      def present(name: String): Column = v.dt match {
-        case st: StructType =>
-          if (structField(st, name).isDefined) v.col.getField(name).isNotNull else lit(false)
-        case _: MapType => map_contains_key(v.col, lit(name))
-        case _ => lit(false)
-      }
       val parts = deps.fields.map {
-        case (key, depSchema: JObj) =>
-          Comp.gated(present(key), generate(depSchema, v, stack))
+        case (key, depSchema: JObj) => gated(present(v, key), generate(depSchema, v, stack))
         case (key, JArr(names)) =>
-          val checks = names.collect { case JStr(d) =>
-            Comp.check(present(d), mkError((v.path / d).render, "dependencies",
-              messageFor(schema, "dependencies", Some(d)), None))
-          }
-          Comp.gated(present(key), Comp.seq(checks))
-        case _ => Comp.pass
+          gated(present(v, key), all(names.collect { case JStr(d) => check(present(v, d)) }))
+        case _ => lit(true)
       }
-      Some(Comp.seq(parts))
-    }
-
-    // ------------------------------------------------------------------
-    // combinators (jsen.js:412-519) — speculative validation with error
-    // rollback, expressed as pure conditional expressions
-    // ------------------------------------------------------------------
-
-    private def kAnyOf(schema: JObj, subs: Vector[JValue], v: Val, stack: Stack): Comp = {
-      val branches = subs.map(generate(_, v, stack))
-      val anyValid = branches.map(_.valid).reduce(_ || _)
-      // on failure ALL branch errors survive plus {keyword:'anyOf'}
-      // (jsen.js:422-457, README.md:259-276); on success errors roll back
-      val failErrs = concat(
-        (branches.map(_.greedyErrs) :+
-          array(mkError(v.path.render, "anyOf", messageFor(schema, "anyOf", None), None))): _*)
-      val errs = when(anyValid, emptyErrors).otherwise(failErrs)
-      Comp(anyValid, errs, errs)
-    }
-
-    private def kOneOf(schema: JObj, subs: Vector[JValue], v: Val, stack: Stack): Comp = {
-      val branches = subs.map(generate(_, v, stack))
-      val matching = branches.map(_.valid.cast(IntegerType)).reduce(_ + _)
-      val ok = matching === 1
-      // failing branches' errors survive on failure (passing branches
-      // contributed none); all errors roll back on success (jsen.js:459-494)
-      val failErrs = concat(
-        (branches.map(b => when(b.valid, emptyErrors).otherwise(b.greedyErrs)) :+
-          array(mkError(v.path.render, "oneOf", messageFor(schema, "oneOf", None), None))): _*)
-      val errs = when(ok, emptyErrors).otherwise(failErrs)
-      Comp(ok, errs, errs)
-    }
-
-    private def kNot(schema: JObj, sub: JObj, v: Val, stack: Stack): Comp = {
-      val branch = generate(sub, v, stack)
-      // sub-errors always roll back; only {keyword:'not'} ever surfaces
-      // (jsen.js:496-519)
-      val ok = !branch.valid
-      val errs = when(ok, emptyErrors).otherwise(
-        array(mkError(v.path.render, "not", messageFor(schema, "not", None), None)))
-      Comp(ok, errs, errs)
+      Some(all(parts))
     }
   }
 }

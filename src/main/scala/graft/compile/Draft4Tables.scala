@@ -3,10 +3,11 @@ package graft.compile
 import graft.json.{JObj, JValue}
 import graft.schema.SchemaResolver
 
-/** Draft-4 keyword semantics shared by the v1 Column compiler
-  * ([[ConstraintCompiler]]) and the v2 fused kernel ([[KernelCompiler]]):
-  * both traverse schemas identically, so these tables live in ONE place —
-  * a keyword added or regrouped here changes both compilers together.
+/** Draft-4 keyword tables shared by the `valid` predicate compiler
+  * ([[ConstraintCompiler]]) and the error kernel ([[KernelCompiler]]):
+  * both group keywords identically, so the grouping lives in ONE place —
+  * a keyword added or regrouped here changes both together. Error
+  * messages only exist on the kernel side.
   */
 private[compile] object Draft4Tables {
 

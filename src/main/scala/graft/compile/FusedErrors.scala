@@ -6,19 +6,20 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.DataType
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The fused error-path expression: evaluates the whole constraint spec
-  * against a value in ONE kernel pass (see [[KernelCompiler]]) and returns
-  * the jsen-style error array. Carries the spec as JSON; the kernel comes
-  * from the JVM-wide [[KernelCompiler.compileCached]] cache, so even
-  * though CodegenFallback expressions are deserialized once per task, the
-  * compile (including java.util.regex Pattern compilation) runs once per
-  * executor JVM — the same compile-once-run-many shape as the reference's
-  * `new Function` validator (/root/reference/lib/func.js:58-65).
+/** The error-path expression: evaluates the whole constraint spec against
+  * a value in ONE kernel pass (see [[KernelCompiler]]) and returns the
+  * jsen-style error array — the engine's only producer of error records.
+  * Carries the spec as JSON; the kernel comes from the JVM-wide
+  * [[KernelCompiler.compileCached]] cache, so even though the expression
+  * is deserialized once per task, the compile (including java.util.regex
+  * Pattern compilation) runs once per executor JVM — the same
+  * compile-once-run-many shape as the reference's `new Function`
+  * validator (lib/func.js:58-65).
   *
-  * Always used gated behind the v1 `valid` column
+  * Always used gated behind the `valid` predicate
   * (`when(valid, empty).otherwise(this)`), so it only runs for violating
-  * rows. The driver verifies kernel support before constructing this
-  * expression; an unsupported spec never reaches an executor.
+  * rows. The driver compiles the kernel eagerly before constructing this
+  * expression, so a spec the kernel rejects never reaches an executor.
   */
 final case class FusedErrors(
     child: Expression,
@@ -32,9 +33,7 @@ final case class FusedErrors(
   override def prettyName: String = "graft_validate_errors"
 
   @transient private lazy val kernel: KernelCompiler.Ev =
-    KernelCompiler.compileCached(specJson, child.dataType, cfg).getOrElse(
-      throw new IllegalStateException(
-        "graft: FusedErrors constructed for a kernel-unsupported spec"))
+    KernelCompiler.compileCached(specJson, child.dataType, cfg)
 
   // the kernel itself validates NULL values (jsen validates null data)
   override def evalBoxed(v: Any): Any = {

@@ -3,50 +3,54 @@ package graft.compile
 import graft.json._
 import graft.schema.SchemaResolver
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The v2 fused error-path compiler (SURVEY.md §7.1 step 7): compiles a
-  * constraint spec + static Spark type into ONE JVM evaluator that walks a
-  * row and appends jsen-style error records — the honest analog of the
-  * reference's single generated validator function
-  * (/root/reference/lib/jsen.js:932-1036), where v1
-  * ([[ConstraintCompiler]]) composes interpreted Catalyst HOF trees.
+/** The error-path compiler (SURVEY.md §7.1 step 7): compiles a constraint
+  * spec + static Spark type into ONE JVM evaluator that walks a value and
+  * appends jsen-style error records — the analog of the reference's
+  * single generated validator function
+  * (lib/jsen.js:932-1036), and the engine's only source
+  * of `validate.errors`.
   *
-  * Division of labor: the VALID column stays v1's whole-stage-codegen
-  * boolean (the fast path); the error array is `when(valid, empty)
-  * .otherwise(kernel)`, so this evaluator runs only for violating rows —
-  * but unlike the v1 error tree (interpreted `transform`/`filter`/`concat`
-  * per keyword) it is one JIT-compiled pass with no per-keyword
-  * allocations.
+  * Division of labor: [[ConstraintCompiler]] compiles the `valid`
+  * predicate to a whole-stage-codegen boolean (the fast path); the error
+  * array is `when(valid, empty).otherwise(kernel)` ([[FusedErrors]]), so
+  * this evaluator runs only for violating rows, in one JIT-compiled pass
+  * with no per-keyword allocations.
   *
-  * Semantics are v1's exactly — same traversal order, same error groups,
-  * same greedy/non-greedy contract — enforced by KernelParitySpec and by
-  * every expectation-based suite running through this path. Unsupported
-  * constructs return None and the caller falls back to the v1 tree; as
-  * of r4 that set is down to Column-function custom formats (arbitrary
-  * Catalyst trees — inherently uncompilable here) and non-string map
-  * keys.
-  * Composite enum literals (deep structural equality incl. nested
-  * arrays/structs/maps), open-schema MapType objects, DecimalType
-  * values (BigDecimal comparisons mirroring v1's Catalyst coercions —
-  * whole literals compare decimal-exact, fractional in double), and
-  * custom regex formats on every value type (nested values render
-  * through an embedded catalyst Cast) are all kernel-native.
+  * Every keyword is kernel-native over every value type the engine
+  * carries, including composite enum literals, open-schema MapType
+  * objects, DecimalType values (whole literals compare decimal-exact,
+  * fractional ones in double, like Catalyst's coercions), custom regex
+  * formats on any value type (nested values render through an embedded
+  * catalyst Cast) and Column-function custom formats (a driver-bound
+  * catalyst predicate carried in [[KernelCfg]]). What the engine cannot
+  * validate — key-naming keywords over a map with non-string keys,
+  * uniqueItems over maps, a custom format with no string rendering —
+  * fails [[compile]] with an IllegalArgumentException. The records are
+  * pinned against the test-side SpecOracle (KernelParitySpec,
+  * Draft4OfficialSpec, CompilerFuzzSpec, PropertySpec).
   */
 object KernelCompiler {
 
   /** Serializable subset of [[ValidatorOptions]] a kernel can honor.
     * `timeZone` is the SESSION timezone captured at compile time — the
-    * one v1's `cast(ts AS STRING)` would use — so custom regex formats
-    * on timestamps render identically on every executor. */
+    * one a `cast(ts AS STRING)` would use — so custom regex formats on
+    * timestamps render identically on every executor.
+    * `formatPredicates` holds each Column-function custom format as a
+    * bound, analyzed catalyst predicate over ordinal 0, per value type it
+    * is applied at (see [[withFormatPredicates]]). */
   final case class KernelCfg(
       leftFormats: Map[String, String],
       customNames: Set[String],
       schemasJson: Option[String],
       missingRef: Boolean,
-      timeZone: String = "UTC") extends Serializable
+      timeZone: String = "UTC",
+      formatPredicates: Map[(String, DataType), Expression] = Map.empty)
+    extends Serializable
 
   def cfgOf(opts: ValidatorOptions): KernelCfg = KernelCfg(
     opts.formats.collect { case (k, Left(re)) => k -> re },
@@ -96,13 +100,34 @@ object KernelCompiler {
     case ps     => new SeqEv(ps.toArray)
   }
 
-  private case class Unsupported(what: String)
-    extends RuntimeException(what, null, false, false)
+  /** Compile a spec for values of type `dt`. Throws
+    * IllegalArgumentException when the engine cannot validate the spec
+    * over `dt`. */
+  def compile(spec: JValue, dt: DataType, cfg: KernelCfg): Ev =
+    compileWith(spec, dt, cfg, (name, t) => cfg.formatPredicates.getOrElse((name, t),
+      throw new IllegalStateException(
+        s"graft: custom format '$name' has no predicate for ${t.simpleString}")))
 
-  /** Compile, or None when the spec/type needs a v1 fallback. */
-  def compile(spec: JValue, dt: DataType, cfg: KernelCfg): Option[Ev] =
-    try Some(compileOrThrow(spec, dt, cfg))
-    catch { case Unsupported(_) => None }
+  /** `cfg` plus the predicate of every Column-function custom format the
+    * spec applies, resolved by `resolve` once per value type it is
+    * applied at. Driver side: `resolve` analyzes the user's function. */
+  def withFormatPredicates(spec: JValue, dt: DataType, cfg: KernelCfg,
+                           resolve: (String, DataType) => Expression): KernelCfg = {
+    val preds = scala.collection.mutable.LinkedHashMap.empty[(String, DataType), Expression]
+    compileWith(spec, dt, cfg, (name, t) => preds.getOrElseUpdate((name, t), resolve(name, t)))
+    cfg.copy(formatPredicates = preds.toMap)
+  }
+
+  private def compileWith(spec: JValue, dt: DataType, cfg: KernelCfg,
+                          formatPredicate: (String, DataType) => Expression): Ev = {
+    spec match {
+      case _: JObj => ()
+      case _ => throw new IllegalArgumentException("graft: invalid schema object")
+    }
+    val schemas = cfg.schemasJson.map(Json.parse).collect { case o: JObj => o }
+    val resolver = new SchemaResolver(spec, schemas, cfg.missingRef)
+    new KCtx(resolver, cfg, formatPredicate).generate(spec, dt, knownNonNull = false, Nil)
+  }
 
   /** JVM-wide compiled-kernel cache: a kernel is compiled once per
     * (spec, type, cfg) per JVM and shared by every task thread — compiled
@@ -111,20 +136,19 @@ object KernelCompiler {
     * the per-call [[ErrBuf]]. Without this, CodegenFallback expressions
     * deserialized per task would recompile the kernel (including Pattern
     * compilation) once per task, and the driver would compile the same
-    * spec again for its support probe. Bounded: a true LRU (access-ordered
+    * spec again for its eager compile. Bounded: a true LRU (access-ordered
     * LinkedHashMap evicting the eldest entry past the cap) — a clear-all
     * policy under pathological spec churn would make every task thread
     * recompile (including Pattern compilation) simultaneously. */
   private val cacheCap = 512
   private type CacheKey = (String, DataType, KernelCfg)
   private val kernelCache =
-    new java.util.LinkedHashMap[CacheKey, Option[Ev]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[CacheKey, Option[Ev]]): Boolean =
+    new java.util.LinkedHashMap[CacheKey, Ev](64, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[CacheKey, Ev]): Boolean =
         size() > cacheCap
     }
 
-  def compileCached(specJson: String, dt: DataType, cfg: KernelCfg): Option[Ev] = {
+  def compileCached(specJson: String, dt: DataType, cfg: KernelCfg): Ev = {
     val key = (specJson, dt, cfg)
     val hit = kernelCache.synchronized(kernelCache.get(key))
     if (hit != null) hit
@@ -140,26 +164,17 @@ object KernelCompiler {
     }
   }
 
-  def compileOrThrow(spec: JValue, dt: DataType, cfg: KernelCfg): Ev = {
-    spec match {
-      case _: JObj => ()
-      case _ => throw new IllegalArgumentException("graft: invalid schema object")
-    }
-    val schemas = cfg.schemasJson.map(Json.parse).collect { case o: JObj => o }
-    val resolver = new SchemaResolver(spec, schemas, cfg.missingRef)
-    new KCtx(resolver, cfg).generate(spec, dt, knownNonNull = false, Nil)
-  }
-
   // ----------------------------------------------------------------------
 
-  // keyword grouping shared with v1 (one source of truth — Draft4Tables)
+  // keyword grouping shared with the valid tree (Draft4Tables)
   private val keywordType = Draft4Tables.keywordType
   private val combinators = Draft4Tables.combinators
 
   private def childPath(parent: String, seg: String): String =
     if (parent.isEmpty) seg else parent + "." + seg
 
-  private final class KCtx(resolver: SchemaResolver, cfg: KernelCfg) {
+  private final class KCtx(resolver: SchemaResolver, cfg: KernelCfg,
+                           formatPredicate: (String, DataType) => Expression) {
 
     type Stack = List[(JValue, DataType)]
 
@@ -257,63 +272,58 @@ object KernelCompiler {
       // custom formats run last, for all value types (jsen.js:1015-1035)
       schema.str("format").foreach { name =>
         if (cfg.customNames.contains(name)) {
-          val re = cfg.leftFormats.getOrElse(name,
-            throw Unsupported(s"custom Column-function format $name"))
-          // v1 applies the regex to cast(value AS STRING). For scalars
-          // the kernel value's Java toString is byte-identical to Spark's
-          // cast (UTF8String/boxed primitive/Decimal all delegate to the
-          // same formatting); dates and timestamps render through the
-          // SAME catalyst formatter classes Cast itself uses; nested
-          // values (array/struct/map) and binary render through an
-          // actual catalyst Cast-to-string evaluated on the extracted
-          // value — parity with v1 holds by construction in every case.
-          val render: Any => String = dt match {
-            case StringType | BooleanType | ByteType | ShortType |
-                 IntegerType | LongType | FloatType | DoubleType |
-                 _: DecimalType => v => v.toString
-            case DateType =>
-              val fmt = org.apache.spark.sql.catalyst.util.DateFormatter()
-              v => fmt.format(v.asInstanceOf[Int])
-            case TimestampType =>
-              val fmt = org.apache.spark.sql.catalyst.util.TimestampFormatter
-                .getFractionFormatter(
-                  org.apache.spark.sql.catalyst.util.DateTimeUtils
-                    .getZoneId(cfg.timeZone))
-              v => fmt.format(v.asInstanceOf[Long])
-            case TimestampNTZType =>
-              val fmt = org.apache.spark.sql.catalyst.util.TimestampFormatter
-                .getFractionFormatter(java.time.ZoneOffset.UTC)
-              v => fmt.format(v.asInstanceOf[Long])
-            case _: ArrayType | _: StructType | _: MapType | BinaryType |
-                 NullType =>
-              // delegate to Spark's own Cast so array/struct/map/binary
-              // rendering ([1, 2], {a, b}, {k -> v}, UTF-8 decode) tracks
-              // the engine exactly, including null-element style and any
-              // legacy-cast conf the executor session carries
-              val cast = org.apache.spark.sql.catalyst.expressions.Cast(
-                org.apache.spark.sql.catalyst.expressions.BoundReference(
-                  0, dt, nullable = true),
-                StringType, Option(cfg.timeZone))
-              v => {
-                val row = new org.apache.spark.sql.catalyst.expressions
-                  .GenericInternalRow(Array[Any](v))
-                String.valueOf(cast.eval(row))
-              }
-            case other =>
-              throw Unsupported(s"custom format on ${other.simpleString}")
+          val ok: Any => Boolean = cfg.leftFormats.get(name) match {
+            case Some(re) =>
+              // the regex applies to cast(value AS STRING); SQL NULL never
+              // matches
+              val render = renderer(dt)
+              val p = java.util.regex.Pattern.compile(JsRegex.toJava(re))
+              v => v != null && p.matcher(render(v)).find()
+            case None =>
+              // a Column-function format, bound on the driver to a
+              // predicate over ordinal 0 of this value type; NULL or
+              // false fails
+              val pred = formatPredicate(name, dt)
+              v => pred.eval(new GenericInternalRow(Array[Any](v))) == true
           }
-          val p = java.util.regex.Pattern.compile(JsRegex.toJava(re))
-          val msg = messageFor(schema, "format", None).orNull
-          parts += new Ev {
-            def eval(v: Any, path: String, out: ErrBuf): Unit = {
-              val ok = v != null && p.matcher(render(v)).find()
-              if (!ok) out.push(path, "format", msg)
-            }
-          }
+          parts += check(ok, "format", messageFor(schema, "format", None).orNull)
         }
       }
 
       seq(parts.result())
+    }
+
+    /** cast(value AS STRING) for custom regex formats. For scalars the
+      * kernel value's Java toString is byte-identical to Spark's cast
+      * (UTF8String/boxed primitive/Decimal all delegate to the same
+      * formatting); dates and timestamps render through the SAME
+      * catalyst formatter classes Cast itself uses; every other value
+      * (array/struct/map/binary/interval...) renders through an actual
+      * catalyst Cast-to-string evaluated on the extracted value, so it
+      * tracks the engine exactly, including null-element style and any
+      * legacy-cast conf the executor session carries. */
+    private def renderer(dt: DataType): Any => String = dt match {
+      case StringType | BooleanType | ByteType | ShortType |
+           IntegerType | LongType | FloatType | DoubleType |
+           _: DecimalType => v => v.toString
+      case DateType =>
+        val fmt = org.apache.spark.sql.catalyst.util.DateFormatter()
+        v => fmt.format(v.asInstanceOf[Int])
+      case TimestampType =>
+        val fmt = org.apache.spark.sql.catalyst.util.TimestampFormatter
+          .getFractionFormatter(
+            org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(cfg.timeZone))
+        v => fmt.format(v.asInstanceOf[Long])
+      case TimestampNTZType =>
+        val fmt = org.apache.spark.sql.catalyst.util.TimestampFormatter
+          .getFractionFormatter(java.time.ZoneOffset.UTC)
+        v => fmt.format(v.asInstanceOf[Long])
+      case other if Cast.canCast(other, StringType) =>
+        val cast = Cast(BoundReference(0, other, nullable = true),
+          StringType, Option(cfg.timeZone))
+        v => String.valueOf(cast.eval(new GenericInternalRow(Array[Any](v))))
+      case other => throw new IllegalArgumentException(
+        s"graft: a custom format cannot apply to ${other.simpleString} values")
     }
 
     // ---- type predicates (jsen.js:51-81) --------------------------------
@@ -324,12 +334,12 @@ object KernelCompiler {
     }
     private def isIntegral(dt: DataType): Boolean = dt match {
       case ByteType | ShortType | IntegerType | LongType => true
-      case d: DecimalType => d.scale == 0 // matches v1 (ConstraintCompiler)
+      case d: DecimalType => d.scale == 0 // as in ConstraintCompiler
       case _ => false
     }
 
     /** Decimal values reach the kernel as [[Decimal]]; comparisons mirror
-      * v1's Catalyst coercions: a whole spec literal compares
+      * the valid tree's Catalyst coercions: a whole spec literal compares
       * decimal-exact (Spark coerces bigint→decimal), a fractional literal
       * compares in double (DecimalPrecision casts both sides to double). */
     private def asBigDec(v: Any): java.math.BigDecimal =
@@ -364,14 +374,16 @@ object KernelCompiler {
       case LongType    => v => v.asInstanceOf[Long].toDouble
       case FloatType   => v => v.asInstanceOf[Float].toDouble
       case DoubleType  => v => v.asInstanceOf[Double]
-      case other       => throw Unsupported(s"numeric ${other.simpleString}")
+      case other       =>
+        throw new IllegalArgumentException(s"graft: not numeric: ${other.simpleString}")
     }
     private def asLong(dt: DataType): Any => Long = dt match {
       case ByteType    => v => v.asInstanceOf[Byte].toLong
       case ShortType   => v => v.asInstanceOf[Short].toLong
       case IntegerType => v => v.asInstanceOf[Int].toLong
       case LongType    => v => v.asInstanceOf[Long]
-      case other       => throw Unsupported(s"integral ${other.simpleString}")
+      case other       =>
+        throw new IllegalArgumentException(s"graft: not integral: ${other.simpleString}")
     }
     def typePred(t: String, dt: DataType, knownNonNull: Boolean): Any => Boolean = {
       def nn: Any => Boolean = if (knownNonNull) _ => true else v => v != null
@@ -391,8 +403,8 @@ object KernelCompiler {
               val p = Pow10(d.scale)
               v => v != null && unscaled(v) % p == 0L
             case _: DecimalType =>
-              // exact value test, like v1's `col === floor(col)` on
-              // decimals (no double rounding)
+              // exact value test, like the valid tree's `col === floor(col)`
+              // on decimals (no double rounding)
               v => v != null && asBigDec(v).stripTrailingZeros.scale <= 0
             case _ =>
               // value test on a float (jsen.js:67-69): 7.0 is an integer;
@@ -402,10 +414,8 @@ object KernelCompiler {
           }
         case "array"  => dt match { case _: ArrayType => nn; case _ => _ => false }
         case "object" => dt match {
-          case _: StructType               => nn
-          case MapType(StringType, _, _)   => nn
-          case _: MapType                  => throw Unsupported("non-string map keys")
-          case _                           => _ => false
+          case _: StructType | _: MapType => nn
+          case _                          => _ => false
         }
         case "date" => dt match {
           case DateType | TimestampType | TimestampNTZType => nn
@@ -438,10 +448,22 @@ object KernelCompiler {
           if (!ok(v)) out.push(path, keyword, msg)
       }
 
+    /** Object keywords that address properties by name: over a map whose
+      * keys are not strings no property name can match a key. Counting
+      * keywords (min/maxProperties) and `type` apply to any map. */
+    private val keyNaming = Set("required", "properties", "patternProperties",
+      "additionalProperties", "dependencies")
+
     def keywordEv(keyword: String, schema: JObj, dt: DataType,
                   knownNonNull: Boolean, stack: Stack): Option[Ev] = {
       def msg(kw: String, key: Option[String] = None): String =
         messageFor(schema, kw, key).orNull
+      dt match {
+        case MapType(kt, _, _) if kt != StringType && keyNaming(keyword) =>
+          throw new IllegalArgumentException(
+            s"graft: '$keyword' names object keys; it cannot apply to ${dt.simpleString}")
+        case _ => ()
+      }
       keyword match {
         case "minimum" => schema.num("minimum").map { m =>
           numCompare(dt, m, "minimum", msg("minimum"), lt = true)
@@ -520,9 +542,10 @@ object KernelCompiler {
     }
 
     /** minimum/maximum: fail iff x < min (resp. x > max). Plain JVM float
-      * comparison already gives jsen's NaN-passes semantics that v1
-      * reproduces with an isnan escape. Mirrors v1's literal typing: a
-      * whole literal compares as long against integral columns. */
+      * comparison already gives jsen's NaN-passes semantics that the valid
+      * tree reproduces with an isnan escape. Mirrors the valid tree's
+      * literal typing: a whole literal compares as long against integral
+      * columns. */
     private def numCompare(dt: DataType, m: BigDecimal, kw: String, msg: String,
                            lt: Boolean): Ev = {
       if (dt.isInstanceOf[DecimalType]) {
@@ -580,7 +603,7 @@ object KernelCompiler {
     }
 
     /** multipleOf with the decimal-scaling fix (jsen.js:123-139), matching
-      * v1's DecimalType arithmetic digit for digit. */
+      * the valid tree's DecimalType arithmetic digit for digit. */
     private def kMultipleOf(mul: BigDecimal, dt: DataType, msg: String): Ev = {
       // multipleOf 0 ≡ always-fail for numeric values (jsen: x % 0 is NaN);
       // a JVM `% 0L` would throw per row
@@ -599,8 +622,8 @@ object KernelCompiler {
             val sl = fast.get
             return check(v => unscaled(v) % sl == 0L, "multipleOf", msg)
           }
-          // v1: decimal % bigint literal — exact decimal remainder (covers
-          // both scale-0 and fractional-scale decimal columns)
+          // valid tree: decimal % bigint literal — exact decimal remainder
+          // (covers both scale-0 and fractional-scale decimal columns)
           val litBd = java.math.BigDecimal.valueOf(lit)
           check(v => asBigDec(v).remainder(litBd).signum == 0, "multipleOf", msg)
         } else if (isIntegral(dt)) {
@@ -612,8 +635,9 @@ object KernelCompiler {
         }
       } else {
         val scale = math.min(2 * decimals, 18)
-        // HALF_UP like v1's literal-to-decimal cast (a divisor with more
-        // than 18 decimals would otherwise throw ArithmeticException here)
+        // HALF_UP like the valid tree's literal-to-decimal cast (a divisor
+        // with more than 18 decimals would otherwise throw
+        // ArithmeticException here)
         val mScaled = m.underlying.setScale(scale, java.math.RoundingMode.HALF_UP)
         val maxPrecision = 38
         val get: Any => java.math.BigDecimal = dt match {
@@ -642,14 +666,16 @@ object KernelCompiler {
                 return check(v => (unscaled(v) * pow) % mU == 0L,
                   "multipleOf", msg)
             }
-            // v1's try_cast(col, decimal(38, scale)): round HALF_UP; the
-            // precision guard below reproduces the overflow→null→error path
+            // the valid tree's try_cast(col, decimal(38, scale)): round
+            // HALF_UP; the precision guard below reproduces the
+            // overflow→null→error path
             v => asBigDec(v).setScale(scale, java.math.RoundingMode.HALF_UP)
-          case other => throw Unsupported(s"multipleOf on ${other.simpleString}")
+          case other => throw new IllegalArgumentException(
+            s"graft: multipleOf on ${other.simpleString}")
         }
         check(v => {
           val bd = get(v)
-          // null ≡ v1's try_cast overflow/NaN → error branch
+          // null ≡ the valid tree's try_cast overflow/NaN → error branch
           bd != null && bd.precision - bd.scale <= maxPrecision - scale &&
             bd.remainder(mScaled).compareTo(java.math.BigDecimal.ZERO) == 0
         }, "multipleOf", msg)
@@ -695,7 +721,7 @@ object KernelCompiler {
         v => v != null && v.asInstanceOf[UTF8String].equals(lit)
 
       // ---- composite literals: deep structural equality, the kernel twin
-      // ---- of v1's litEquals (lib/equal.js:28-69 semantics) -------------
+      // ---- of the valid tree's litEquals (lib/equal.js:28-69 semantics) ----
       case (JArr(items), ArrayType(et, _)) =>
         if (items.isEmpty) {
           v => v != null && v.asInstanceOf[ArrayData].numElements() == 0
@@ -780,21 +806,22 @@ object KernelCompiler {
     }
 
     /** Element → a value with Spark-equality semantics under Java
-      * equals/hashCode, so HashSet dedup matches v1's `array_distinct`:
+      * equals/hashCode, so HashSet dedup matches Spark's `array_distinct`:
       * UTF8String and the boxed primitives already compare by value,
       * including the float edges: array_distinct uses java compare
       * semantics, under which NaN = NaN dedups and -0.0 ≠ 0.0 stays
       * distinct — exactly what boxed equals/hashCode do, so identity is
-      * correct (parity-pinned in KernelParitySpec); nested arrays and
-      * structs normalize recursively into Vectors (deep structural
-      * dedup — jsen's lib/equal.js over unique, SURVEY §2.5). Map
-      * elements stay unsupported exactly like v1 (Spark has no map
-      * equality — array_distinct over array<map> is an analysis
-      * error). */
+      * correct (pinned in KernelParitySpec); binary compares by content;
+      * nested arrays and structs normalize recursively into Vectors
+      * (deep structural dedup — jsen's lib/equal.js over unique, SURVEY
+      * §2.5). Spark has no map equality, so uniqueItems over maps is
+      * rejected at compile time. */
     private def uniqueNormalizer(dt: DataType): Any => Any = dt match {
       case ByteType | ShortType | IntegerType | LongType | BooleanType |
            StringType | DateType | TimestampType | TimestampNTZType |
-           FloatType | DoubleType | _: DecimalType => identity
+           FloatType | DoubleType | _: DecimalType | NullType |
+           _: YearMonthIntervalType | _: DayTimeIntervalType => identity
+      case BinaryType => v => java.nio.ByteBuffer.wrap(v.asInstanceOf[Array[Byte]])
       case ArrayType(et, _) =>
         val n = uniqueNormalizer(et)
         v => {
@@ -820,7 +847,8 @@ object KernelCompiler {
           }
           out.result()
         }
-      case other => throw Unsupported(s"uniqueItems over ${other.simpleString}")
+      case other => throw new IllegalArgumentException(
+        s"graft: uniqueItems cannot compare ${other.simpleString} elements")
     }
 
     private def kItems(schema: JObj, dt: DataType, stack: Stack): Option[Ev] = {
@@ -876,9 +904,11 @@ object KernelCompiler {
       case st: StructType => st
       case _              => null
     }
+    /** Value type of a map keyed by property names; null otherwise
+      * (non-string-keyed maps never reach the key-naming keywords, see
+      * [[keyNaming]]). */
     private def mapValueType(dt: DataType): DataType = dt match {
       case MapType(StringType, vt, _) => vt
-      case _: MapType                 => throw Unsupported("non-string map keys")
       case _                          => null
     }
 
@@ -908,7 +938,7 @@ object KernelCompiler {
           while (i < n) { if (!row.isNullAt(i)) c += 1; i += 1 }
           c
         }
-      } else if (mapValueType(dt) != null) {
+      } else if (dt.isInstanceOf[MapType]) {
         v => v.asInstanceOf[MapData].numElements()
       } else _ => 0
     }
@@ -1072,7 +1102,7 @@ object KernelCompiler {
     }
 
     /** Open-map twin of the struct branch above: one pass over the map
-      * entries, patterns matched at runtime (v1: jsen.js:303-378 fused
+      * entries, patterns matched at runtime (jsen.js:303-378 fused
       * generator over Object.keys). */
     private def mapPatternAndAdditional(schema: JObj, vt: DataType,
                                         patterns: Vector[(String, JValue)],

@@ -103,8 +103,9 @@ object TokenTable {
 
   /** The flagship row-constraint spec for the token table (SURVEY.md §7.2):
     * doc_id required + pattern, tokens bounded by vocab + non-empty,
-    * n_tok >= 1. The n_tok == size(tokens) consistency check is a custom
-    * format (a Column predicate — the jsen `options.formats` analog). */
+    * n_tok >= 1, source required and non-empty. It does not check
+    * n_tok == size(tokens): that relation spans two columns, and a
+    * custom format sees only its own value. */
   def constraintSpec(vocabSize: Int): String =
     s"""{
        |  "type": "object",

@@ -405,8 +405,8 @@ object ValidationQueries {
     // + the built-in date-time format regex (lib/formats.js:6) on a string
     // timestamp + a timestamp-window bound via a custom Column format —
     // draft-4 has no numeric keywords for dates, and custom formats run
-    // for ALL types, last (jsen.js:1015-1035). Column-function formats are
-    // kernel-unsupported, so this row also gates the v1 fallback wiring.
+    // for ALL types, last (jsen.js:1015-1035). The Column-function format
+    // runs inside the error kernel as a driver-bound catalyst predicate.
     Q("q_date_bounds",
       (s, d) => {
         val ev = T(s, d, "events").select(
@@ -441,9 +441,7 @@ object ValidationQueries {
 
     // composite enum literals (array + object) — deep structural equality
     // with order-insensitive keys and missing-field ≡ NULL
-    // (lib/equal.js:9-15, 28-69). Composite literals are kernel-
-    // unsupported by design (KernelCompiler litEquals), so this row gates
-    // the KC→v1 fallback path end-to-end.
+    // (lib/equal.js:9-15, 28-69), kernel-native (KernelCompiler litEquals).
     Q("q_enum_composite",
       (s, d) => {
         val df = T(s, d, "lineitem").select(

@@ -135,11 +135,13 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // The two output tables are INDEPENDENT jobs writing disjoint paths —
     // submit them from two driver threads so the verdict job's tasks
-    // back-fill executors freed by the violation job's straggler tail
-    // (guide §2.6 overlap-independent-jobs; actions were only sequential
-    // because this code called them sequentially). Output bytes, paths
-    // and commit semantics are unchanged; a failure in either write
-    // fails the run before any partition commits, exactly as before.
+    // back-fill executors freed by the violation job's straggler tail.
+    // A failure in either write
+    // fails the run before any partition commits. The other write may
+    // still have finished, so after a failed run the two output
+    // directories can hold results of different runs until the re-run
+    // overwrites them. When both writes fail, the violations error rides
+    // on the verdicts error as a suppressed exception.
     val vioErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val vioThread = new Thread(() =>
       try violations.write.mode("overwrite").partitionBy("part")
@@ -148,8 +150,13 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
     vioThread.start()
     try verdicts.write.mode("overwrite").partitionBy("part")
       .parquet(s"${cfg.outputDir}/verdicts")
-    finally vioThread.join()
-    if (vioErr.get() != null) throw vioErr.get()
+    catch { case t: Throwable =>
+      vioThread.join()
+      Option(vioErr.get()).foreach(t.addSuppressed)
+      throw t
+    }
+    vioThread.join()
+    Option(vioErr.get()).foreach(e => throw e)
 
     val elapsed = (System.nanoTime() - t0) / 1e9
     // commit metadata comes from the cache the verdict write populated —

@@ -3,20 +3,25 @@ package graft
 import graft.compile.ValidatorOptions
 import graft.json._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
-/** Differential fuzzing of the two independent validator implementations:
-  * the v1 Catalyst Column tree and the v2 fused JVM kernel
-  * ([[graft.compile.KernelCompiler]]). The draft-4 suite pins published
-  * cases; this spec generates RANDOM (schema, instance) pairs from a
-  * grammar covering every keyword — including type-mismatched operands,
-  * nested combinators, and tuple/object shapes the suite's fixed cases
-  * can't exhaust — and asserts the engine's cross-implementation
-  * invariants on each, in both greedy and first-error modes:
+/** Differential fuzzing of the engine (the `valid` predicate plus the
+  * fused error kernel, [[graft.compile.KernelCompiler]]) against the
+  * independently written [[SpecOracle]]. The draft-4 suite pins
+  * published cases; this spec generates RANDOM (schema, instance) pairs
+  * from a grammar covering every keyword — including type-mismatched
+  * operands, nested combinators, and tuple/object shapes the suite's
+  * fixed cases can't exhaust — and asserts on each, in four
+  * configurations (greedy and first-error mode, each evaluated once with
+  * generated code and once interpreted, so both the codegen and the
+  * `eval` paths of the `valid` predicate and of the kernel expression
+  * are exercised):
   *
-  *  1. v1 and v2 produce byte-identical error arrays per mode;
+  *  1. the error records equal the oracle's exactly (order, path,
+  *     keyword, message, additionalProperties), and so does `valid`;
   *  2. `valid` ≡ `errors.isEmpty` in greedy mode (the Compiled contract);
-  *  3. greedy and first-error agree on the verdict;
-  *  4. an invalid verdict carries at least one error in every mode.
+  *  3. all configurations agree on the verdict;
+  *  4. an invalid verdict carries at least one error in every configuration.
   *
   * Seeded (reproducible); a failure prints the offending schema/data as
   * JSON so it can be folded into the suite as a pinned regression case.
@@ -141,6 +146,20 @@ class CompilerFuzzSpec extends SparkSpec with Draft4Harness {
     }
   }
 
+  /** Runs `cols` over `df` with generated code (`codegen`) or with
+    * interpreted evaluation only. */
+  private def headRow(df: org.apache.spark.sql.DataFrame,
+                      cols: Seq[org.apache.spark.sql.Column], codegen: Boolean): Row = {
+    spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+    spark.conf.set("spark.sql.codegen.factoryMode",
+      if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+    try df.select(cols: _*).head()
+    finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
   test("differential fuzz: 400 random (schema, instance) pairs, 4 configs each") {
     val gen = new Gen(0x5eed5eedL)
     var ran = 0
@@ -154,31 +173,43 @@ class CompilerFuzzSpec extends SparkSpec with Draft4Harness {
       if (dt != null) {
         val df = valueDf(toValue(data, dt), dt)
         val specJson = Json.render(schema)
-        val cols = for {
-          greedy <- Seq(true, false)
-          fused <- Seq(false, true)
-        } yield Validator(specJson,
-          ValidatorOptions(greedy = greedy, useFusedErrors = fused))
-          .forValue(df.col("x"), dt)
-        val row = df.select(cols.zipWithIndex.flatMap { case ((v, e), i) =>
-          Seq(v.as(s"v$i"), e.as(s"e$i")) }: _*).head()
-        def errs(i: Int) = row.getSeq[Row](2 * i + 1)
-          .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+        val modes = Seq(true, false)
+        val cols = col("x") +: modes.zipWithIndex.flatMap { case (greedy, i) =>
+          val (v, e) = Validator(specJson, ValidatorOptions(greedy = greedy))
+            .forValue(df.col("x"), dt)
+          Seq(v.as(s"v$i"), e.as(s"e$i"))
+        }
+        val rows = Seq(true, false).map(codegen => headRow(df, cols, codegen))
+        // configuration c: greedy = modes(c % 2), codegen = c < 2
+        val configs = for (r <- rows.indices; m <- modes.indices) yield (r, m)
+        def name(c: Int) = {
+          val (r, m) = configs(c)
+          s"${if (modes(m)) "greedy" else "first"}/${if (r == 0) "codegen" else "interpreted"}"
+        }
+        def valid(c: Int) = { val (r, m) = configs(c); rows(r).getBoolean(2 * m + 1) }
+        def errs(c: Int) = { val (r, m) = configs(c)
+          rows(r).getSeq[Row](2 * m + 2)
+            .map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3))) }
+        val instance = SpecOracle.decode(rows(0).get(0), dt)
         val ctx = s"schema=$specJson\ndata=${Json.render(data)}"
-        // 1. v1/v2 parity per mode
-        assert(errs(0) == errs(1),
-          s"greedy v1/v2 diverge:\n  ${errs(0)}\n  ${errs(1)}\n$ctx")
-        assert(errs(2) == errs(3),
-          s"first v1/v2 diverge:\n  ${errs(2)}\n  ${errs(3)}\n$ctx")
-        // 2. valid == errors.isEmpty (greedy); 3. modes agree on verdict
-        assert(row.getBoolean(0) == errs(0).isEmpty,
-          s"greedy valid/errors contradict: ${row.getBoolean(0)} ${errs(0)}\n$ctx")
-        assert(Seq(2, 4, 6).forall(i => row.getBoolean(i) == row.getBoolean(0)),
+        val expected = modes.map(greedy => SpecOracle.validate(schema, instance, greedy))
+        // 1. exact records and verdict against the oracle, per configuration
+        configs.indices.foreach { c =>
+          val (expValid, expErrs) = expected(configs(c)._2)
+          assert(valid(c) == expValid && errs(c) == expErrs.map(_.tuple),
+            s"${name(c)} diverges from the oracle:\n" +
+              s"  got    ${valid(c)} ${errs(c)}\n  oracle $expValid ${expErrs.map(_.tuple)}\n$ctx")
+        }
+        // 2. valid == errors.isEmpty (greedy); 3. configs agree on verdict
+        configs.indices.filter(c => modes(configs(c)._2)).foreach(c =>
+          assert(valid(c) == errs(c).isEmpty,
+            s"${name(c)} valid/errors contradict: ${valid(c)} ${errs(c)}\n$ctx"))
+        assert(configs.indices.forall(c => valid(c) == valid(0)),
           s"configs disagree on verdict\n$ctx")
-        // 4. invalid => at least one error in every mode
-        if (!row.getBoolean(0))
-          (0 until 4).foreach(i => assert(errs(i).nonEmpty,
-            s"invalid with empty errors in config $i\n$ctx"))
+        // 4. invalid => at least one error in every configuration
+        if (!valid(0))
+          configs.indices.foreach(c => assert(errs(c).nonEmpty,
+            s"invalid with empty errors in ${name(c)}\n$ctx"))
         ran += 1
       }
     }

@@ -46,12 +46,12 @@ import org.apache.spark.sql.functions.col
   * locationIndependentIdentifier*.json), and post-draft-4 keyword
   * groups the suite backported for other drafts.
   *
-  * EVERY representable case runs FOUR ways — v1 Column tree and v2 fused
-  * kernel, greedy and non-greedy — asserting the expected verdict in
-  * each and v1/v2 error-array parity per mode (the official suite only
-  * asserts `valid`; the parity assertion is this engine's stricter
-  * internal contract, KernelParitySpec's discipline applied to the whole
-  * suite).
+  * EVERY representable case runs TWO ways — greedy and first-error —
+  * asserting the expected verdict in each, and the exact error records
+  * (order, path, keyword, message, additionalProperties) against the
+  * independently written [[SpecOracle]] fed the instance decoded back
+  * from the Spark row (the official suite only asserts `valid`; the
+  * record check is this engine's stricter contract).
   */
 class Draft4OfficialSpec extends SparkSpec with Draft4Harness {
 
@@ -91,29 +91,25 @@ class Draft4OfficialSpec extends SparkSpec with Draft4Harness {
           if (dt != null) {
             val df = valueDf(toValue(data, dt), dt)
             val specJson = Json.render(schema)
-            // 4 configurations in ONE projection/job per case
-            val cols = for {
-              greedy <- Seq(true, false)
-              fused <- Seq(false, true)
-            } yield {
-              val v = Validator(specJson, ValidatorOptions(
-                greedy = greedy, useFusedErrors = fused, schemas = registry))
-              v.forValue(df.col("x"), dt)
+            // both modes in ONE projection/job per case
+            val modes = Seq(true, false)
+            val cols = modes.map { greedy =>
+              Validator(specJson, ValidatorOptions(greedy = greedy, schemas = registry))
+                .forValue(df.col("x"), dt)
             }
-            val row = df.select(cols.zipWithIndex.flatMap { case ((v, e), i) =>
+            val row = df.select(col("x") +: cols.zipWithIndex.flatMap { case ((v, e), i) =>
               Seq(v.as(s"v$i"), e.as(s"e$i")) }: _*).head()
-            for (i <- 0 until 4) {
-              val mode = Seq("greedy/v1", "greedy/v2", "first/v1", "first/v2")(i)
-              assert(row.getBoolean(2 * i) == expect,
-                s"[$f] $desc / $tdesc [$mode]: got ${row.getBoolean(2 * i)} want $expect")
+            val instance = SpecOracle.decode(row.get(0), dt)
+            modes.zipWithIndex.foreach { case (greedy, i) =>
+              val mode = if (greedy) "greedy" else "first"
+              val got = row.getSeq[Row](2 * i + 2)
+                .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
+              val (expValid, expErrs) = SpecOracle.validate(schema, instance, greedy, schemas = registry)
+              assert(row.getBoolean(2 * i + 1) == expect && expValid == expect,
+                s"[$f] $desc / $tdesc [$mode]: got ${row.getBoolean(2 * i + 1)}, oracle $expValid, want $expect")
+              assert(got == expErrs.map(_.tuple),
+                s"[$f] $desc / $tdesc [$mode]: records diverge from the oracle:\n  got    $got\n  oracle ${expErrs.map(_.tuple)}")
             }
-            // v1/v2 error-array parity per mode (byte-identical records)
-            def errs(i: Int) = row.getSeq[Row](2 * i + 1)
-              .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-            assert(errs(0) == errs(1),
-              s"[$f] $desc / $tdesc: greedy v1/v2 diverge:\n  ${errs(0)}\n  ${errs(1)}")
-            assert(errs(2) == errs(3),
-              s"[$f] $desc / $tdesc: non-greedy v1/v2 diverge:\n  ${errs(2)}\n  ${errs(3)}")
             ran += 1
           }
         }
@@ -122,7 +118,7 @@ class Draft4OfficialSpec extends SparkSpec with Draft4Harness {
   }
 
   test("official draft-4 suite: coverage floor and bounded exclusions") {
-    info(s"ran $ran cases x 4 configurations; skipped ${skips.size}")
+    info(s"ran $ran cases x 2 modes; skipped ${skips.size}")
     skips.foreach(s => info(s"  skipped: $s"))
     assert(ran >= 588, s"suite coverage floor: ran only $ran cases")
     assert(skips.isEmpty,

@@ -2,52 +2,82 @@ package graft
 
 import graft.compile.ValidatorOptions
 import graft.data.TokenTable
-import org.apache.spark.sql.Row
+import graft.json.Json
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** v1 (Column-tree) vs v2 (fused kernel) parity: identical `valid` flags
-  * and byte-identical error arrays — order, paths, keywords, messages,
-  * additionalProperties — across the token table and targeted specs, in
-  * both greedy and non-greedy modes. v1 is the oracle (VERDICT r1 #3). */
+/** The error kernel's exact records — order, paths, keywords, messages,
+  * additionalProperties — and the `valid` column, in both greedy and
+  * first-error modes: against the independently written [[SpecOracle]]
+  * for JSON-representable data (token table, combinators, nested arrays,
+  * enums, decimals, open maps), and against explicit expected records for
+  * values with no JSON form (dates, timestamps, binary, NaN, Spark's
+  * string rendering of nested values). The explicit records are the ones
+  * the engine produced while its v1 Column-tree error path still existed
+  * and matched the kernel record for record. */
 class KernelParitySpec extends SparkSpec {
 
-  private def bothModes(specJson: String, df: org.apache.spark.sql.DataFrame,
-                        formats: Map[String, Either[String, org.apache.spark.sql.Column => org.apache.spark.sql.Column]] = Map.empty): Unit = {
+  private type Rec = (String, String, String, String)
+
+  /** (input row, valid, errors) per row of `df`, with the kernel engaged. */
+  private def validate(specJson: String, df: DataFrame, greedy: Boolean,
+                       formats: Map[String, Either[String, Column => Column]] = Map.empty)
+      : Seq[(Row, Boolean, Seq[Rec])] = {
+    val v = Validator(specJson, ValidatorOptions(greedy = greedy, formats = formats))
+    val engaged = ColumnBridge.expression(v.errors(df.schema)).toString
+    assert(engaged.contains("graft_validate_errors"),
+      s"kernel did not engage for spec=$specJson (greedy=$greedy)")
+    v.withValidation(df)
+      .select(struct(df.columns.toSeq.map(c => df.col(s"`$c`")): _*), col("valid"), col("errors"))
+      .collect().toSeq.map(r => (r.getStruct(0), r.getBoolean(1), r.getSeq[Row](2)
+        .map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3)))))
+  }
+
+  /** Both modes against [[SpecOracle]] on the instance each row decodes to. */
+  private def vsOracle(specJson: String, df: DataFrame,
+                       formats: Map[String, String] = Map.empty): Unit = {
+    val spec = Json.parse(specJson)
     for (greedy <- Seq(true, false)) {
-      val v1 = Validator(specJson,
-        ValidatorOptions(greedy = greedy, formats = formats, useFusedErrors = false))
-      val v2 = Validator(specJson,
-        ValidatorOptions(greedy = greedy, formats = formats, useFusedErrors = true))
-      // the kernel must actually be engaged, or this spec tests nothing
-      val engaged = org.apache.spark.sql.graftbridge.ColumnBridge
-        .expression(v2.errors(df.schema)).toString
-      assert(engaged.contains("graft_validate_errors"),
-        s"kernel did not engage for spec=$specJson (greedy=$greedy)")
-      val out1 = v1.withValidation(df).select(col("valid"), col("errors")).collect()
-      val out2 = v2.withValidation(df).select(col("valid"), col("errors")).collect()
-      out1.zip(out2).zipWithIndex.foreach { case ((a, b), i) =>
-        assert(a.getBoolean(0) == b.getBoolean(0), s"valid diverged at row $i (greedy=$greedy)")
-        val e1 = a.getSeq[Row](1).map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        val e2 = b.getSeq[Row](1).map(r => (r.getString(0), r.getString(1), r.getString(2), r.getString(3)))
-        assert(e1 == e2,
-          s"errors diverged at row $i (greedy=$greedy):\n  v1=$e1\n  v2=$e2")
-      }
+      validate(specJson, df, greedy, formats.map { case (k, re) => k -> Left(re) })
+        .zipWithIndex.foreach { case ((row, valid, errs), i) =>
+          val instance = SpecOracle.decode(row, df.schema)
+          val (expValid, expErrs) = SpecOracle.validate(spec, instance, greedy, formats)
+          assert(valid == expValid && errs == expErrs.map(_.tuple),
+            s"row $i (greedy=$greedy) ${Json.render(instance)}:\n" +
+              s"  kernel $valid $errs\n  oracle $expValid ${expErrs.map(_.tuple)}")
+        }
     }
   }
+
+  /** Both modes against explicit records: `expected(i)` lists row i's
+    * greedy records; first-error mode keeps the first. */
+  private def vsExpected(specJson: String, df: DataFrame,
+                         formats: Map[String, Either[String, Column => Column]])(
+                         expected: Int => Seq[Rec]): Unit =
+    for (greedy <- Seq(true, false)) {
+      validate(specJson, df, greedy, formats).zipWithIndex.foreach { case ((row, valid, errs), i) =>
+        val want = if (greedy) expected(i) else expected(i).take(1)
+        assert(valid == want.isEmpty && errs == want,
+          s"row $i (greedy=$greedy) $row:\n  got  $valid $errs\n  want $want")
+      }
+    }
+
+  private def formatErr(path: String): Rec = (path, "format", null, null)
 
   test("token table: flagship spec, byte-identical errors in both modes") {
     val cfg = TokenTable.Config(rows = 6000L, parts = 4, maxLen = 24)
     val table = TokenTable.generate(spark, cfg)
-    bothModes(TokenTable.constraintSpec(cfg.vocabSize), table)
+    vsOracle(TokenTable.constraintSpec(cfg.vocabSize), table)
   }
 
-  test("combinator rollback arithmetic matches v1 exactly") {
+  test("combinator rollback arithmetic") {
     val df = spark.range(200).select(
       col("id"),
       (col("id") % 97).cast("double").as("price"),
       (col("id") % 13).cast("int").as("bucket"))
-    bothModes(
+    vsOracle(
       """{"properties":{
            "price":{"anyOf":[{"maximum":20},{"minimum":70}]},
            "bucket":{"oneOf":[{"maximum":4},{"minimum":2}]},
@@ -67,7 +97,7 @@ class KernelParitySpec extends SparkSpec {
       Row(null, null, null, "boo"),
       Row(Seq[Int](), Seq(0), "toolongname!", "y"))
     val df = spark.createDataFrame(rows, schema)
-    bothModes(
+    vsOracle(
       """{"required":["name"],
           "properties":{
             "xs":{"type":"array","minItems":1,
@@ -79,6 +109,15 @@ class KernelParitySpec extends SparkSpec {
           "patternProperties":{"^ro":{"maxLength":3}},
           "additionalProperties":false}""",
       df)
+    // message resolution at every keyed site: a required name with and
+    // without a sub-schema, a column the row schema lacks, and a
+    // dependency naming a property that carries a requiredMessage
+    vsOracle(
+      """{"required":["rogue","pair","absent"],
+          "messages":{"required":"needed","dependencies":"depends"},
+          "properties":{"rogue":{"type":"string","requiredMessage":"rogue is required"}},
+          "dependencies":{"name":["rogue","xs"]}}""",
+      df)
   }
 
   test("enum, multipleOf decimal trick, formats, dependencies") {
@@ -88,7 +127,7 @@ class KernelParitySpec extends SparkSpec {
       when(col("id") % 3 === 0, concat(lit("a"), col("id"), lit("@x.io")))
         .otherwise(lit("nope")).as("mail"),
       when(col("id") % 5 === 0, lit(null).cast("string")).otherwise(lit("en")).as("lang"))
-    bothModes(
+    vsOracle(
       """{"required":["lang"],
           "properties":{
             "amount":{"multipleOf":0.01,"minimum":0,"exclusiveMinimum":true},
@@ -98,7 +137,7 @@ class KernelParitySpec extends SparkSpec {
           "dependencies":{"mail":["lang"],
                           "lang":{"properties":{"code":{"minLength":2}}}}}""",
       df,
-      formats = Map("digitsuffix" -> Left("\\d$")))
+      formats = Map("digitsuffix" -> "\\d$"))
   }
 
   test("vector kernels: bit-identical to the Column fold formulations") {
@@ -137,7 +176,7 @@ class KernelParitySpec extends SparkSpec {
       "NULL vector must bucket to zeros")
   }
 
-  test("open-map object semantics: kernel matches v1 on a MapType column") {
+  test("open-map object semantics on a MapType column") {
     val df = spark.range(40).select(
       col("id"),
       map_filter(
@@ -148,7 +187,7 @@ class KernelParitySpec extends SparkSpec {
         (k, _) => when(k === "extra", col("id") % 7 === 0)
           .when(k === "src", col("id") % 11 =!= 0)
           .otherwise(lit(true))).as("m"))
-    bothModes(
+    vsOracle(
       """{"properties":{"m":{"type":"object",
            "minProperties":2,"maxProperties":2,
            "required":["lang","src"],
@@ -159,14 +198,14 @@ class KernelParitySpec extends SparkSpec {
       df)
   }
 
-  test("DecimalType values run through the kernel with v1 parity") {
+  test("DecimalType values run through the kernel") {
     val df = spark.range(300).select(
       // quarter-step decimals: .00/.25/.50/.75 — exercises the exact
       // integer value test and fractional multipleOf on decimals
       (col("id") * 111 % 997 / 4).cast("decimal(12,2)").as("amount"),
       ((col("id") * 7 + 1) / 4).cast("decimal(12,2)").as("price"),
       (col("id") % 50).cast("decimal(10,0)").as("qty"))
-    bothModes(
+    vsOracle(
       """{"properties":{
            "amount":{"type":"integer","multipleOf":3},
            "price":{"minimum":5,"maximum":70,"exclusiveMaximum":true,
@@ -175,7 +214,7 @@ class KernelParitySpec extends SparkSpec {
       df)
     // enum over decimals: whole literals compare decimal-exact,
     // fractional in double (mirroring Catalyst's coercions)
-    bothModes(
+    vsOracle(
       """{"properties":{"price":{"enum":[0.5, 2, 3.75]}}}""",
       df)
 
@@ -200,14 +239,14 @@ class KernelParitySpec extends SparkSpec {
     assert(!row.getBoolean(0))
     assert(row.getSeq[Row](1).map(r => (r.getString(0), r.getString(1))) ==
       Seq(("c", "multipleOf"))) // a and b are exact multiples
-    bothModes(
+    vsOracle(
       """{"properties":{"a":{"multipleOf":0.01},
                         "b":{"multipleOf":150.5},
                         "c":{"multipleOf":150.5}}}""",
       edge)
   }
 
-  test("composite enum literals: kernel deep equality matches v1 in both modes") {
+  test("composite enum literals: kernel deep equality in both modes") {
     // the q_enum_composite shape plus nulls, nesting, and a map literal
     val df = spark.range(200).select(
       col("id"),
@@ -221,7 +260,7 @@ class KernelParitySpec extends SparkSpec {
       array(array(col("id").cast("int"))).as("nested"),
       map_filter(map(lit("k"), concat(lit("v"), col("id") % 2)),
         (_, _) => col("id") % 7 =!= 0).as("m"))
-    bothModes(
+    vsOracle(
       """{"properties":{
            "tag":{"enum":[[0,1],[1,2],[2,1],[0,null]]},
            "meta":{"enum":[{"f":"a","n":1},{"f":"b"}]},
@@ -236,7 +275,7 @@ class KernelParitySpec extends SparkSpec {
       (col("id") % 30 * 1.5).as("d"),
       col("id").cast("decimal(10,2)").as("dec"),
       (col("id") % 2 === 0).as("flag"))
-    bothModes(
+    vsOracle(
       """{"properties":{
            "id":{"format":"evenish"},
            "d":{"format":"has5"},
@@ -244,10 +283,10 @@ class KernelParitySpec extends SparkSpec {
            "flag":{"format":"isTrue"}}}""",
       df,
       formats = Map(
-        "evenish" -> Left("[02468]$"),
-        "has5" -> Left("5"),
-        "centsZero" -> Left("\\.00$"),
-        "isTrue" -> Left("^true$")))
+        "evenish" -> "[02468]$",
+        "has5" -> "5",
+        "centsZero" -> "\\.00$",
+        "isTrue" -> "^true$"))
   }
 
   test("deep uniqueItems: nested arrays, structs, and float edge values") {
@@ -265,19 +304,15 @@ class KernelParitySpec extends SparkSpec {
       Row(null, null, Seq(1.5, 1.5, 2.5)),
       Row(Seq[Seq[Int]](), Seq[Row](), Seq[Double]()))
     val df = spark.createDataFrame(rows, schema)
-    bothModes(
+    // Spark's array_distinct semantics: NaN equals NaN, -0.0 differs
+    // from 0.0, NULL elements compare equal
+    val dups = Seq(Seq(), Seq("nested", "recs"), Seq("nested", "recs", "ds"), Seq("ds"), Seq())
+    vsExpected(
       """{"properties":{
            "nested":{"uniqueItems":true},
            "recs":{"uniqueItems":true},
            "ds":{"uniqueItems":true}}}""",
-      df)
-    // sanity on the semantics themselves (not just parity): row 1 has
-    // dups in every column, row 0 none
-    val v = Validator("""{"properties":{
-        "nested":{"uniqueItems":true},"recs":{"uniqueItems":true},
-        "ds":{"uniqueItems":true}}}""")
-    val valids = v.withValidation(df).select("valid").collect().map(_.getBoolean(0))
-    assert(valids.toSeq == Seq(true, false, false, false, true), valids.toSeq.toString)
+      df, Map.empty)(i => dups(i).map(p => (p, "uniqueItems", null, null)))
   }
 
   test("custom regex formats on date/timestamp values run through the kernel") {
@@ -288,16 +323,20 @@ class KernelParitySpec extends SparkSpec {
       timestamp_micros(col("id") * 86400000000L + col("id") % 3 * 123450L).as("ts"),
       timestamp_micros(col("id") * 3600000000L + col("id") % 2 * 7L)
         .cast("timestamp_ntz").as("tsn"))
-    bothModes(
+    vsExpected(
       """{"properties":{
            "d":{"format":"jan26"},
            "ts":{"format":"hasFrac"},
            "tsn":{"format":"odd7"}}}""",
       df,
-      formats = Map(
+      Map(
         "jan26" -> Left("^2026-01-"),
         "hasFrac" -> Left("\\.\\d+$"),
-        "odd7" -> Left("7$")))
+        "odd7" -> Left("7$"))) { id =>
+      // day 31 on is February; whole seconds render with no fraction
+      Seq("d" -> (id >= 31), "ts" -> (id % 3 == 0), "tsn" -> (id % 2 == 0))
+        .collect { case (p, true) => formatErr(p) }
+    }
   }
 
   test("custom regex formats on nested and binary values run through the kernel") {
@@ -312,31 +351,71 @@ class KernelParitySpec extends SparkSpec {
         concat(lit("s"), col("id") % 7).as("b")).as("st"),
       map(lit("k"), (col("id") % 5).cast("int")).as("mp"),
       encode(concat(lit("b"), col("id") % 4), "UTF-8").as("bin"))
-    bothModes(
+    vsExpected(
       """{"properties":{
            "arr":{"format":"endsEven"},
            "st":{"format":"sThree"},
            "mp":{"format":"kLow"},
            "bin":{"format":"bOdd"}}}""",
       df,
-      formats = Map(
+      Map(
         "endsEven" -> Left("[048]\\]$"),
         "sThree" -> Left("s3\\}$"),
         "kLow" -> Left("-> [012]\\}$"),
-        "bOdd" -> Left("^b[13]$")))
+        "bOdd" -> Left("^b[13]$"))) { id =>
+      // "[id, null]" or "[id, 2·id]"; "{id, s<id%7>}"; "{k -> id%5}"; "b<id%4>"
+      Seq(
+        "arr" -> (id % 3 == 0 || id % 5 == 1 || id % 5 == 3),
+        "st" -> (id % 7 != 3),
+        "mp" -> (id % 5 > 2),
+        "bin" -> (id % 4 % 2 == 0)).collect { case (p, true) => formatErr(p) }
+    }
   }
 
-  test("kernel falls back to v1 for unsupported constructs") {
-    // Column-function custom formats are inherently v1-only (arbitrary
-    // Catalyst trees); the plan must NOT contain the kernel expression
-    // and must still validate correctly
-    val df = spark.range(5).select(col("id").cast("int").as("x"))
-    val fn: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      c => c % 2 === 0
-    val v = Validator("""{"properties":{"x":{"format":"even"}}}""",
-      ValidatorOptions(formats = Map("even" -> Right(fn))))
-    assert(!org.apache.spark.sql.graftbridge.ColumnBridge
-      .expression(v.errors(df.schema)).toString.contains("graft_validate_errors"))
-    assert(v.withValidation(df).where(!col("valid")).count() == 2)
+  test("Column-function custom formats run inside the error kernel") {
+    val df = spark.range(6).select(col("id").cast("int").as("x"), (col("id") * 10).as("y"))
+    val spec = """{"properties":{"x":{"format":"even"},"y":{"format":"even"}}}"""
+    val even: Column => Column = c => c % 2 === 0
+    vsExpected(spec, df, Map("even" -> Right(even))) { x =>
+      if (x % 2 == 0) Seq() else Seq(formatErr("x"))
+    }
+    // jsen's custom formats see only the value: a function of another
+    // column fails compile, naming the format
+    val other: Column => Column = c => c < col("y")
+    val e = intercept[IllegalArgumentException](Validator(spec,
+      ValidatorOptions(formats = Map("even" -> Right(other)))).errors(df.schema))
+    assert(e.getMessage.contains("'even'"), e.getMessage)
+  }
+
+  test("maps with non-string keys: counting keywords in the kernel, key-naming keywords rejected") {
+    val mapIS = MapType(IntegerType, StringType)
+    val df = spark.createDataFrame(java.util.Arrays.asList(
+      Row(0, Map()), Row(1, Map(1 -> "a")), Row(2, Map(1 -> "a", 2 -> "b")),
+      Row(3, Map(1 -> "a", 2 -> "b", 3 -> "c")), Row(4, null)),
+      StructType(Seq(StructField("id", IntegerType), StructField("m", mapIS))))
+    val spec = """{"type":"object","minProperties":1,"maxProperties":2}"""
+    val expected = Map(0 -> Seq(("", "minProperties", null, null)), 1 -> Seq(), 2 -> Seq(),
+      3 -> Seq(("", "maxProperties", null, null)), 4 -> Seq(("", "type", null, null)))
+    for (greedy <- Seq(true, false)) {
+      val (valid, errors) = Validator(spec, ValidatorOptions(greedy = greedy))
+        .forValue(col("m"), mapIS)
+      assert(ColumnBridge.expression(errors).toString.contains("graft_validate_errors"))
+      df.select(col("id"), valid, errors).collect().foreach { r =>
+        val errs = r.getSeq[Row](2).map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3)))
+        val want = expected(r.getInt(0))
+        assert(r.getBoolean(1) == want.isEmpty && errs == want, s"row $r (greedy=$greedy)")
+      }
+      // no property name can address an integer key
+      Seq("""{"required":["1"]}""", """{"properties":{"1":{"type":"integer"}}}""",
+          """{"patternProperties":{"^1":{}}}""", """{"additionalProperties":false}""",
+          """{"dependencies":{"1":["2"]}}""").foreach { named =>
+        val e = intercept[IllegalArgumentException](
+          Validator(named, ValidatorOptions(greedy = greedy)).forValue(col("m"), mapIS))
+        assert(e.getMessage.contains("names object keys"), s"$named: ${e.getMessage}")
+      }
+    }
+    // Spark has no map equality: uniqueItems over maps fails compile too
+    intercept[IllegalArgumentException](Validator("""{"uniqueItems":true}""")
+      .forValue(col("ms"), ArrayType(MapType(StringType, IntegerType))))
   }
 }

@@ -16,10 +16,7 @@ class PipelineSpec extends SparkSpec {
   lazy val vocab = TokenTable.vocabDim(spark, cfg)
 
   def validator: Validator = Validator(
-    TokenTable.constraintSpec(cfg.vocabSize),
-    compile.ValidatorOptions(
-      greedy = true,
-      formats = Map("n_tok_consistent" -> Right(_ => col("n_tok") === size(col("tokens"))))))
+    TokenTable.constraintSpec(cfg.vocabSize), compile.ValidatorOptions(greedy = true))
 
   def allChecks: Seq[Check] = Seq(
     RowConstraintCheck(validator),
@@ -276,6 +273,24 @@ class PipelineSpec extends SparkSpec {
     val partViolations = spark.read.parquet(s"$dir2/out/violations")
     val fullCount = fullViolations.where(col("part").isin(1, 3)).count()
     assert(partViolations.count() == fullCount)
+  }
+
+  test("both output writes fail: the violations error is kept as suppressed") {
+    // an output "directory" that is a regular file: neither the
+    // violations nor the verdicts table can be created under it
+    val dir = Files.createTempDirectory("graft-pipe-2fail").toString
+    val out = Files.createFile(java.nio.file.Paths.get(dir, "out")).toString
+    val ex = intercept[Exception] {
+      new ValidationPipeline(Seq(RowConstraintCheck(validator)),
+        PipelineConfig(s"$dir/ckpt", out)).run(table)
+    }
+    def aboutOut(t: Throwable): Boolean =
+      t != null && (Option(t.getMessage).exists(_.contains(out)) || aboutOut(t.getCause))
+    // the verdicts error is thrown, the violations error rides on it
+    assert(aboutOut(ex), s"expected an output write error, got: $ex")
+    assert(ex.getSuppressed.exists(aboutOut),
+      s"violations write error lost: suppressed = ${ex.getSuppressed.toSeq}")
+    assert(new Checkpoint(s"$dir/ckpt").committedParts().isEmpty)
   }
 
   test("NULL / non-castable partition values fail fast with a clear error") {

@@ -6,10 +6,11 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, rng}
 
 /** Property-based cross-check (FIXTURES.md §6): randomly generated
-  * constraint specs × randomly generated typed rows, the Catalyst
-  * compiler's greedy output compared to the interpreted SpecOracle as a
-  * (path, keyword) multiset after canonical sort. Batched: one Spark job
-  * per spec evaluates all of its sample rows. */
+  * constraint specs × randomly generated typed rows, the engine's
+  * `valid` and exact error records (order, path, keyword, message,
+  * additionalProperties) compared to the interpreted SpecOracle in
+  * greedy and first-error mode. Batched: one Spark job per spec
+  * evaluates all of its sample rows in both modes. */
 class PropertySpec extends SparkSpec {
 
   // ---- test row schema ----
@@ -98,24 +99,9 @@ class PropertySpec extends SparkSpec {
       yield js(Seq(s""""oneOf":[$x,$y]"""))),
     (1, genRootSimple.map(x => js(Seq(s""""not":$x""")))))
 
-  // ---- Row → JValue (missing ≡ NULL for struct fields; array elements
-  // keep present nulls) ----
-  def toJ(value: Any, dt: DataType): JValue = value match {
-    case null => JNull
-    case i: Int => JNum(BigDecimal(i))
-    case d: Double => JNum(BigDecimal(d))
-    case s: String => JStr(s)
-    case seq: Seq[_] =>
-      val et = dt.asInstanceOf[ArrayType].elementType
-      JArr(seq.toVector.map(toJ(_, et)))
-    case r: Row =>
-      val st = dt.asInstanceOf[StructType]
-      JObj(st.fields.toVector.zipWithIndex.flatMap { case (f, i) =>
-        if (r.isNullAt(i)) None else Some(f.name -> toJ(r.get(i), f.dataType))
-      })
-  }
-
-  def rowToInstance(r: Row): JValue = toJ(r, rowSchema)
+  /** The instance a collected row carries (missing ≡ NULL for struct
+    * fields; array elements keep present nulls). */
+  def rowToInstance(r: Row): JValue = SpecOracle.decode(r, rowSchema)
 
   test("compiled validator agrees with interpreted oracle on random specs × rows") {
     val seed0 = rng.Seed(42L)
@@ -136,42 +122,33 @@ class PropertySpec extends SparkSpec {
       val df = spark.createDataFrame(
         new java.util.ArrayList[Row](rows.map(Row(_)).asJavaLike), StructType(Seq(
           StructField("x", rowSchema))))
-      val v = Validator(specJson, compile.ValidatorOptions(greedy = true))
-      val (validCol, errsCol) = v.forValue(df.col("x"), rowSchema)
-      val got = df.select(validCol, errsCol).collect()
-
-      // v1-vs-v2 parity on the same random spec: the default path above
-      // routes errors through the fused kernel where supported; pin it
-      // byte-identical (order included) to the v1 Column tree
-      val vOff = Validator(specJson,
-        compile.ValidatorOptions(greedy = true, useFusedErrors = false))
-      val (vc1, ec1) = vOff.forValue(df.col("x"), rowSchema)
-      val gotV1 = df.select(vc1, ec1).collect()
-      got.zip(gotV1).zipWithIndex.foreach { case ((k, o), i) =>
-        def tup(r: Row) = r.getSeq[Row](1)
-          .map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3)))
-        assert(k.getBoolean(0) == o.getBoolean(0) && tup(k) == tup(o),
-          s"v1/v2 divergence spec=$specJson row=${rows(i)}\n  v2=${tup(k)}\n  v1=${tup(o)}")
+      val modes = Seq(true, false)
+      val cols = modes.flatMap { greedy =>
+        val (v, e) = Validator(specJson, compile.ValidatorOptions(greedy = greedy))
+          .forValue(df.col("x"), rowSchema)
+        Seq(v, e)
       }
+      val got = df.select(df.col("x") +: cols: _*).collect()
 
-      rows.zip(got).foreach { case (row, res) =>
-        val instance = rowToInstance(row)
-        val (expValid, expErrs) = SpecOracle.validate(spec, instance)
-        val gotValid = res.getBoolean(0)
-        val gotErrs = res.getSeq[Row](1).map(e => (e.getString(0), e.getString(1)))
-        val expPairs = expErrs.map(e => (e.path, e.keyword))
-        assert(gotValid == expValid && gotErrs.sorted == expPairs.sorted,
-          s"""DISAGREEMENT
-             |spec:     $specJson
-             |instance: ${Json.render(instance)}
-             |row:      $row
-             |compiled: valid=$gotValid errs=${gotErrs.sorted}
-             |oracle:   valid=$expValid errs=${expPairs.sorted}""".stripMargin)
+      got.foreach { res =>
+        val instance = rowToInstance(res.getStruct(0))
+        modes.zipWithIndex.foreach { case (greedy, i) =>
+          val (expValid, expErrs) = SpecOracle.validate(spec, instance, greedy)
+          val gotValid = res.getBoolean(2 * i + 1)
+          val gotErrs = res.getSeq[Row](2 * i + 2)
+            .map(e => (e.getString(0), e.getString(1), e.getString(2), e.getString(3)))
+          assert(gotValid == expValid && gotErrs == expErrs.map(_.tuple),
+            s"""DISAGREEMENT (${if (greedy) "greedy" else "first-error"})
+               |spec:     $specJson
+               |instance: ${Json.render(instance)}
+               |compiled: valid=$gotValid errs=$gotErrs
+               |oracle:   valid=$expValid errs=${expErrs.map(_.tuple)}""".stripMargin)
+        }
         caseCount += 1
       }
       specCount += 1
     }
-    info(s"checked $specCount specs × ${caseCount / specCount} rows = $caseCount cases")
+    info(s"checked $specCount specs × ${caseCount / specCount} rows = $caseCount cases, 2 modes each")
   }
 
   implicit class SeqOps(s: Seq[Row]) {

@@ -1,40 +1,75 @@
 package graft
 
+import graft.compile.{Formats, JsRegex}
 import graft.json._
 import graft.schema.SchemaResolver
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
 
 /** Slow interpreted oracle of the reference's validation semantics
   * (/root/reference/lib/jsen.js:932-1036), evaluated directly over JValue
-  * instances — used by PropertySpec to cross-check the Catalyst compiler
-  * on randomly generated specs and rows. Written from the reference's
-  * generate()/keyword semantics, not from the compiler, so translation
-  * bugs (null handling, decimal scaling, regex dialect) surface as
-  * disagreements.
+  * instances — the reference the parity suites (Draft4OfficialSpec,
+  * CompilerFuzzSpec, PropertySpec, KernelParitySpec) compare the engine's
+  * `valid` column and error records against. Written from the
+  * reference's generate()/keyword semantics, not from either compiler, so
+  * translation bugs (null handling, decimal scaling, traversal order)
+  * surface as disagreements.
+  *
+  * Records are exact: jsen's traversal order (type, then keyword groups
+  * per decorated type in schema key order, then combinators in key
+  * order, then custom formats), the custom `message` (jsen.js:871-903)
+  * and the `additionalProperties` key. Every error site emits one GROUP:
+  * a single record, or a failed combinator's branch records plus its
+  * own. Greedy mode returns every group; first-error mode returns the
+  * first one (jsen's `return` after the first error site, with
+  * combinator branches always run greedily and rolled back).
   *
   * Instance encoding: a *missing* property is an absent key (undefined);
-  * JNull is a present null. Greedy mode only (the compiler's non-greedy
-  * is derived from the same groups).
+  * JNull is a present null. Feed it the value decoded back from the
+  * Spark row ([[decode]]), so the oracle and the engine see the same
+  * instance (a NULL struct field is missing, a NULL map value present).
   */
 object SpecOracle {
 
-  final case class Err(path: String, keyword: String)
-
-  def validate(spec: JValue, instance: JValue): (Boolean, Vector[Err]) = {
-    val resolver = new SchemaResolver(spec)
-    val errs = Vector.newBuilder[Err]
-    gen(spec, instance, "", resolver, errs)
-    val e = errs.result()
-    (e.isEmpty, e)
+  final case class Err(path: String, keyword: String, message: String = null,
+                       additionalProperties: String = null) {
+    def tuple: (String, String, String, String) = (path, keyword, message, additionalProperties)
   }
 
-  private def typeOf(v: JValue): String = v match {
-    case JNull => "null"
-    case _: JBool => "boolean"
-    case n: JNum => "number" // integer is a value test, not a type
-    case _: JStr => "string"
-    case _: JArr => "array"
-    case _: JObj => "object"
+  /** `formats`: custom regex formats by name, applied to the value's
+    * string form (SQL NULL never matches). */
+  def validate(spec: JValue, instance: JValue, greedy: Boolean = true,
+               formats: Map[String, String] = Map.empty,
+               schemas: Option[JObj] = None): (Boolean, Vector[Err]) = {
+    val groups = new Run(new SchemaResolver(spec, schemas), formats).gen(spec, instance, "")
+    (groups.isEmpty, if (greedy) groups.flatten else groups.headOption.getOrElse(Vector.empty))
   }
+
+  /** A Spark row value (as `Row.get` returns it) → the JSON instance it
+    * carries. Dates, timestamps and binary have no JSON form. */
+  def decode(value: Any, dt: DataType): JValue = (value, dt) match {
+    case (null, _) => JNull
+    case (b: Boolean, _) => JBool(b)
+    case (s: String, _) => JStr(s)
+    case (n: Byte, _) => JNum(BigDecimal(n.toInt))
+    case (n: Short, _) => JNum(BigDecimal(n.toInt))
+    case (n: Int, _) => JNum(BigDecimal(n))
+    case (n: Long, _) => JNum(BigDecimal(n))
+    case (f: Float, _) => JNum(BigDecimal.decimal(f))
+    case (d: Double, _) => JNum(BigDecimal(d))
+    case (d: java.math.BigDecimal, _) => JNum(BigDecimal(d))
+    case (xs: scala.collection.Seq[_], ArrayType(et, _)) => JArr(xs.map(decode(_, et)).toVector)
+    case (m: scala.collection.Map[_, _], MapType(_, vt, _)) =>
+      JObj(m.toVector.map { case (k, x) => k.toString -> decode(x, vt) })
+    case (r: Row, st: StructType) =>
+      JObj(st.fields.toVector.zipWithIndex.collect {
+        case (f, i) if !r.isNullAt(i) => f.name -> decode(r.get(i), f.dataType)
+      })
+    case _ => throw new IllegalArgumentException(
+      s"no JSON form for ${dt.simpleString} value $value")
+  }
+
+  private type Groups = Vector[Vector[Err]]
 
   private def typeMatches(t: String, v: JValue): Boolean = t match {
     case "null" => v == JNull
@@ -59,245 +94,240 @@ object SpecOracle {
     (numberKws.map(_ -> "number") ++ stringKws.map(_ -> "string") ++
      arrayKws.map(_ -> "array") ++ objectKws.map(_ -> "object")).toMap
 
-  private def gen(schemaV: JValue, v: JValue, path: String,
-                  resolver: SchemaResolver,
-                  errs: scala.collection.mutable.Builder[Err, Vector[Err]]): Unit = {
-    val schema0 = schemaV match { case o: JObj => o; case _ => return }
-    val schema = resolver.resolve(schema0) match { case o: JObj => o; case _ => return }
-
-    // enum short-circuit
-    schema.arr("enum") match {
-      case Some(lits) if lits.nonEmpty =>
-        if (!lits.exists(deepEqual(_, v))) errs += Err(path, "enum")
-        return
-      case _ => ()
-    }
-
-    val declared: Option[List[String]] = schema.get("type") match {
-      case Some(JStr(t)) => Some(List(t))
-      case Some(JArr(is)) if is.nonEmpty => Some(is.collect { case JStr(t) => t }.toList)
-      case _ => None
-    }
-
-    val perType = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
-    val hasPat = schema.obj("patternProperties").isDefined
-    schema.keys.foreach { k =>
-      if (k != "enum" && k != "type") kwType.get(k).foreach { t =>
-        if (!(k == "additionalProperties" && hasPat))
-          perType(t) = perType.getOrElse(t, Vector.empty) :+ k
-      }
-    }
-
-    val typeOk = declared.forall(_.exists(typeMatches(_, v)))
-    if (!typeOk) {
-      errs += Err(path, "type")
-    } else {
-      // per-type groups gated on the value being that type
-      perType.foreach { case (t, kws) =>
-        if (typeMatches(t, v)) kws.foreach(kw => keyword(kw, schema, v, path, resolver, errs))
-      }
-    }
-
-    // combinators always run (even after type error in greedy? no —
-    // jsen's ladder: type error then else-if skips GROUPS, but allType
-    // combinators are emitted after the ladder unconditionally)
-    schema.keys.foreach {
-      case "allOf" => schema.arr("allOf").foreach(_.foreach(gen(_, v, path, resolver, errs)))
-      case "anyOf" => schema.arr("anyOf").foreach { subs =>
-        val pre = errs.result().length
-        var found = false
-        subs.foreach { sub =>
-          if (!found) {
-            val cnt = errs.result().length
-            gen(sub, v, path, resolver, errs)
-            found = errs.result().length == cnt
-          }
-        }
-        if (!found) errs += Err(path, "anyOf")
-        else trimTo(errs, pre)
-      }
-      case "oneOf" => schema.arr("oneOf").foreach { subs =>
-        val pre = errs.result().length
-        var matching = 0
-        subs.foreach { sub =>
-          val cnt = errs.result().length
-          gen(sub, v, path, resolver, errs)
-          if (errs.result().length == cnt) matching += 1
-        }
-        if (matching != 1) errs += Err(path, "oneOf")
-        else trimTo(errs, pre)
-      }
-      case "not" => schema.obj("not").foreach { sub =>
-        val pre = errs.result().length
-        gen(sub, v, path, resolver, errs)
-        val failed = errs.result().length > pre
-        trimTo(errs, pre)
-        if (!failed) errs += Err(path, "not")
-      }
-      case _ => ()
-    }
-  }
-
-  private def trimTo(errs: scala.collection.mutable.Builder[Err, Vector[Err]],
-                     n: Int): Unit = {
-    val kept = errs.result().take(n)
-    errs.clear()
-    errs ++= kept
-  }
-
   private def join(path: String, seg: String): String =
     if (path.isEmpty) seg else s"$path.$seg"
 
-  private def keyword(kw: String, schema: JObj, v: JValue, path: String,
-                      resolver: SchemaResolver,
-                      errs: scala.collection.mutable.Builder[Err, Vector[Err]]): Unit = {
-    def num = v.asInstanceOf[JNum].value
-    kw match {
-      case "minimum" => schema.num("minimum").foreach { m =>
-        if (num < m) errs += Err(path, "minimum")
+  private def matches(regex: String, s: String): Boolean =
+    java.util.regex.Pattern.compile(JsRegex.toJava(regex)).matcher(s).find()
+
+  private final class Run(resolver: SchemaResolver, formats: Map[String, String]) {
+
+    /** jsen's error(): requiredMessage of the named property's schema, or
+      * the emitting schema's invalidMessage, then messages[keyword] of
+      * either. */
+    private def err(schema: JObj, path: String, keyword: String,
+                    key: Option[String] = None, additional: String = null): Vector[Err] = {
+      val prop = key.flatMap(k => schema.obj("properties").flatMap(_.get(k)))
+        .map(resolver.resolve).collect { case o: JObj => o }
+      val message =
+        (if (prop.isDefined) prop.flatMap(_.str("requiredMessage")) else schema.str("invalidMessage"))
+          .orElse(prop.flatMap(_.obj("messages")).flatMap(_.str(keyword)))
+          .orElse(schema.obj("messages").flatMap(_.str(keyword)))
+      val at = key.map(join(path, _)).getOrElse(path)
+      Vector(Err(at, keyword, message.orNull, additional))
+    }
+
+    def gen(schemaV: JValue, v: JValue, path: String): Groups = {
+      val schema = schemaV match {
+        case o: JObj => resolver.resolve(o) match { case r: JObj => r; case _ => return Vector.empty }
+        case _ => return Vector.empty
       }
-      case "exclusiveMinimum" =>
-        (schema.bool("exclusiveMinimum"), schema.num("minimum")) match {
-          case (Some(true), Some(m)) => if (num == m) errs += Err(path, "exclusiveMinimum")
-          case _ => ()
+
+      // enum short-circuit (jsen.js:966-970)
+      schema.arr("enum") match {
+        case Some(lits) if lits.nonEmpty =>
+          return if (lits.exists(deepEqual(_, v))) Vector.empty else Vector(err(schema, path, "enum"))
+        case _ => ()
+      }
+
+      val declared: Option[List[String]] = schema.get("type") match {
+        case Some(JStr(t)) => Some(List(t))
+        case Some(JArr(is)) if is.nonEmpty => Some(is.collect { case JStr(t) => t }.toList)
+        case _ => None
+      }
+
+      val perType = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+      val hasPat = schema.obj("patternProperties").isDefined
+      schema.keys.foreach { k =>
+        if (k != "enum" && k != "type") kwType.get(k).foreach { t =>
+          if (!(k == "additionalProperties" && hasPat))
+            perType(t) = perType.getOrElse(t, Vector.empty) :+ k
         }
-      case "maximum" => schema.num("maximum").foreach { m =>
-        if (num > m) errs += Err(path, "maximum")
       }
-      case "exclusiveMaximum" =>
-        (schema.bool("exclusiveMaximum"), schema.num("maximum")) match {
-          case (Some(true), Some(m)) => if (num == m) errs += Err(path, "exclusiveMaximum")
-          case _ => ()
+
+      val out = Vector.newBuilder[Vector[Err]]
+      // the type ladder: a type error replaces every keyword group
+      // (jsen.js:978-1009)
+      if (!declared.forall(_.exists(typeMatches(_, v)))) out += err(schema, path, "type")
+      else perType.foreach { case (t, kws) =>
+        if (typeMatches(t, v)) kws.foreach(kw => out ++= keyword(kw, schema, v, path))
+      }
+
+      // combinators run after the ladder, unconditionally, in key order;
+      // branches run greedily and roll back (jsen.js:412-519)
+      schema.keys.foreach {
+        case "allOf" => schema.arr("allOf").foreach(_.foreach(sub => out ++= gen(sub, v, path)))
+        case "anyOf" => schema.arr("anyOf").foreach { subs =>
+          val failed = Vector.newBuilder[Err]
+          // stops at the first passing branch
+          val found = subs.exists { sub =>
+            val e = gen(sub, v, path).flatten
+            failed ++= e
+            e.isEmpty
+          }
+          if (!found) out += failed.result() ++ err(schema, path, "anyOf")
         }
-      case "multipleOf" => schema.num("multipleOf").foreach { mul =>
-        // BigDecimal remainder is exact — the semantics jsen's
-        // round-trick approximates (jsen.js:123-139)
-        if (num.remainder(mul) != 0) errs += Err(path, "multipleOf")
+        case "oneOf" => schema.arr("oneOf").foreach { subs =>
+          val branches = subs.map(gen(_, v, path).flatten)
+          if (branches.count(_.isEmpty) != 1) out += branches.flatten ++ err(schema, path, "oneOf")
+        }
+        case "not" => schema.obj("not").foreach { sub =>
+          if (gen(sub, v, path).isEmpty) out += err(schema, path, "not")
+        }
+        case _ => ()
       }
-      case "minLength" => schema.int("minLength").foreach { n =>
-        if (codePoints(v) < n) errs += Err(path, "minLength")
-      }
-      case "maxLength" => schema.int("maxLength").foreach { n =>
-        if (codePoints(v) > n) errs += Err(path, "maxLength")
-      }
-      case "pattern" => schema.str("pattern").foreach { p =>
-        val s = v.asInstanceOf[JStr].value
-        if (!java.util.regex.Pattern.compile(p).matcher(s).find())
-          errs += Err(path, "pattern")
-      }
-      case "format" => schema.str("format").foreach { f =>
-        graft.compile.Formats.builtin.get(f).foreach { re =>
-          val s = v.asInstanceOf[JStr].value
-          if (!java.util.regex.Pattern.compile(re).matcher(s).find())
-            errs += Err(path, "format")
+
+      // custom formats run last, for every value type (jsen.js:1015-1035)
+      schema.str("format").foreach { name =>
+        formats.get(name).foreach { re =>
+          if (!stringForm(v).exists(matches(re, _))) out += err(schema, path, "format")
         }
       }
-      case "minItems" => schema.int("minItems").foreach { n =>
-        if (v.asInstanceOf[JArr].items.length < n) errs += Err(path, "minItems")
-      }
-      case "maxItems" => schema.int("maxItems").foreach { n =>
-        if (v.asInstanceOf[JArr].items.length > n) errs += Err(path, "maxItems")
-      }
-      case "additionalItems" =>
-        (schema.bool("additionalItems"), schema.arr("items")) match {
-          case (Some(false), Some(tuple)) =>
-            if (v.asInstanceOf[JArr].items.length > tuple.length)
-              errs += Err(path, "additionalItems")
-          case _ => ()
-        }
-      case "uniqueItems" => schema.bool("uniqueItems").foreach { u =>
-        if (u) {
+      out.result()
+    }
+
+    /** A scalar's string form, as `cast(value AS STRING)` renders it. */
+    private def stringForm(v: JValue): Option[String] = v match {
+      case JNull => None
+      case JStr(s) => Some(s)
+      case JBool(b) => Some(b.toString)
+      case JNum(n) => Some(n.bigDecimal.toString)
+      case other => throw new IllegalArgumentException(
+        s"custom formats over ${other.typeName} values are not modeled")
+    }
+
+    private def keyword(kw: String, schema: JObj, v: JValue, path: String): Groups = {
+      def num = v.asInstanceOf[JNum].value
+      def fail(keyword: String): Groups = Vector(err(schema, path, keyword))
+      def when(bad: Boolean, keyword: String): Groups = if (bad) fail(keyword) else Vector.empty
+      kw match {
+        case "minimum" => schema.num("minimum").map(m => when(num < m, "minimum")).getOrElse(Vector.empty)
+        case "exclusiveMinimum" =>
+          (schema.bool("exclusiveMinimum"), schema.num("minimum")) match {
+            case (Some(true), Some(m)) => when(num == m, "exclusiveMinimum")
+            case _ => Vector.empty
+          }
+        case "maximum" => schema.num("maximum").map(m => when(num > m, "maximum")).getOrElse(Vector.empty)
+        case "exclusiveMaximum" =>
+          (schema.bool("exclusiveMaximum"), schema.num("maximum")) match {
+            case (Some(true), Some(m)) => when(num == m, "exclusiveMaximum")
+            case _ => Vector.empty
+          }
+        case "multipleOf" => schema.num("multipleOf").map { mul =>
+          // jsen.js:123-139: a divisor with d decimals first rounds the
+          // value to 2d decimals (so 18.15 is a multiple of 0.01); x % 0
+          // is NaN, which never passes
+          val d = math.max(0, mul.bigDecimal.stripTrailingZeros.scale)
+          val x = if (d == 0) num else num.setScale(2 * d, BigDecimal.RoundingMode.HALF_UP)
+          when(mul == 0 || x.remainder(mul) != 0, "multipleOf")
+        }.getOrElse(Vector.empty)
+        case "minLength" => schema.int("minLength").map(n => when(codePoints(v) < n, "minLength"))
+          .getOrElse(Vector.empty)
+        case "maxLength" => schema.int("maxLength").map(n => when(codePoints(v) > n, "maxLength"))
+          .getOrElse(Vector.empty)
+        case "pattern" => schema.str("pattern")
+          .map(p => when(!matches(p, v.asInstanceOf[JStr].value), "pattern")).getOrElse(Vector.empty)
+        case "format" => schema.str("format").filterNot(formats.contains)
+          .flatMap(Formats.builtin.get)
+          .map(re => when(re.r.findFirstIn(v.asInstanceOf[JStr].value).isEmpty, "format"))
+          .getOrElse(Vector.empty)
+        case "minItems" => schema.int("minItems")
+          .map(n => when(v.asInstanceOf[JArr].items.length < n, "minItems")).getOrElse(Vector.empty)
+        case "maxItems" => schema.int("maxItems")
+          .map(n => when(v.asInstanceOf[JArr].items.length > n, "maxItems")).getOrElse(Vector.empty)
+        case "additionalItems" =>
+          (schema.bool("additionalItems"), schema.arr("items")) match {
+            case (Some(false), Some(tuple)) =>
+              when(v.asInstanceOf[JArr].items.length > tuple.length, "additionalItems")
+            case _ => Vector.empty
+          }
+        case "uniqueItems" =>
           val items = v.asInstanceOf[JArr].items
-          val distinct = items.foldLeft(Vector.empty[JValue]) { (acc, x) =>
-            if (acc.exists(deepEqual(_, x))) acc else acc :+ x
-          }
-          if (distinct.length != items.length) errs += Err(path, "uniqueItems")
-        }
-      }
-      case "items" =>
-        val items = v.asInstanceOf[JArr].items
-        schema.get("items") match {
-          case Some(sub: JObj) =>
-            items.zipWithIndex.foreach { case (x, i) =>
-              gen(sub, x, join(path, i.toString), resolver, errs)
-            }
-          case Some(JArr(tuple)) =>
-            tuple.zipWithIndex.foreach { case (sub, i) =>
-              if (items.length - 1 >= i) gen(sub, items(i), join(path, i.toString), resolver, errs)
-            }
-            schema.get("additionalItems") match {
-              case Some(restSub: JObj) =>
-                (tuple.length until items.length).foreach { i =>
-                  gen(restSub, items(i), join(path, i.toString), resolver, errs)
-                }
-              case _ => ()
-            }
-          case _ => ()
-        }
-      case "maxProperties" => schema.int("maxProperties").foreach { n =>
-        if (v.asInstanceOf[JObj].fields.length > n) errs += Err(path, "maxProperties")
-      }
-      case "minProperties" => schema.int("minProperties").foreach { n =>
-        if (v.asInstanceOf[JObj].fields.length < n) errs += Err(path, "minProperties")
-      }
-      case "required" => schema.arr("required").foreach { req =>
-        val obj = v.asInstanceOf[JObj]
-        val props = schema.obj("properties")
-        req.collect { case JStr(name) => name }.foreach { name =>
-          val hasSub = props.flatMap(_.get(name)).exists(_.isInstanceOf[JObj])
-          if (!hasSub && !obj.has(name)) errs += Err(join(path, name), "required")
-        }
-      }
-      case "properties" => schema.obj("properties").foreach { props =>
-        val obj = v.asInstanceOf[JObj]
-        val required = schema.arr("required").getOrElse(Vector.empty)
-          .collect { case JStr(s) => s }.toSet
-        props.fields.foreach { case (name, sub) =>
-          obj.get(name) match {
-            case Some(x) => gen(sub, x, join(path, name), resolver, errs)
-            case None => if (required.contains(name)) errs += Err(join(path, name), "required")
-          }
-        }
-      }
-      case "patternProperties" | "additionalProperties" =>
-        val obj = v.asInstanceOf[JObj]
-        val patterns = schema.obj("patternProperties").map(_.fields).getOrElse(Vector.empty)
-        val addProps = schema.get("additionalProperties")
-        val addCheck = addProps.exists {
-          case JBool(false) => true
-          case _: JObj => true
-          case _ => false
-        }
-        if (patterns.nonEmpty || addCheck) {
-          val declared = schema.obj("properties").map(_.keys.toSet).getOrElse(Set.empty)
-          obj.fields.foreach { case (key, value) =>
-            var found = false
-            patterns.foreach { case (p, sub) =>
-              if (java.util.regex.Pattern.compile(p).matcher(key).find()) {
-                gen(sub, value, join(path, key), resolver, errs)
-                found = true
+          val dup = items.indices.exists(i => items.indices.exists(j => j > i && deepEqual(items(i), items(j))))
+          when(schema.bool("uniqueItems").contains(true) && dup, "uniqueItems")
+        case "items" =>
+          val items = v.asInstanceOf[JArr].items
+          schema.get("items") match {
+            case Some(sub: JObj) =>
+              items.zipWithIndex.flatMap { case (x, i) => gen(sub, x, join(path, i.toString)) }
+            case Some(JArr(tuple)) =>
+              val positional = tuple.zipWithIndex.flatMap { case (sub, i) =>
+                if (items.length - 1 >= i) gen(sub, items(i), join(path, i.toString)) else Vector.empty
               }
-            }
-            if (addCheck && !declared.contains(key) && !found) addProps match {
-              case Some(JBool(false)) => errs += Err(path, "additionalProperties")
-              case Some(sub: JObj) => gen(sub, value, join(path, key), resolver, errs)
-              case _ => ()
+              val rest = schema.get("additionalItems") match {
+                case Some(restSub: JObj) =>
+                  (tuple.length until items.length).toVector
+                    .flatMap(i => gen(restSub, items(i), join(path, i.toString)))
+                case _ => Vector.empty
+              }
+              positional ++ rest
+            case _ => Vector.empty
+          }
+        case "maxProperties" => schema.int("maxProperties")
+          .map(n => when(v.asInstanceOf[JObj].fields.length > n, "maxProperties")).getOrElse(Vector.empty)
+        case "minProperties" => schema.int("minProperties")
+          .map(n => when(v.asInstanceOf[JObj].fields.length < n, "minProperties")).getOrElse(Vector.empty)
+        case "required" => schema.arr("required").map { req =>
+          // names with an object sub-schema are reported by `properties`
+          val obj = v.asInstanceOf[JObj]
+          val props = schema.obj("properties")
+          req.collect { case JStr(name) => name }.flatMap { name =>
+            val hasSub = props.flatMap(_.get(name)).exists(_.isInstanceOf[JObj])
+            if (!hasSub && !obj.has(name)) Vector(err(schema, path, "required", Some(name)))
+            else Vector.empty
+          }
+        }.getOrElse(Vector.empty)
+        case "properties" => schema.obj("properties").map { props =>
+          val obj = v.asInstanceOf[JObj]
+          val required = schema.arr("required").getOrElse(Vector.empty)
+            .collect { case JStr(s) => s }.toSet
+          props.fields.flatMap { case (name, sub) =>
+            obj.get(name) match {
+              case Some(x) => gen(sub, x, join(path, name))
+              case None =>
+                if (required.contains(name)) Vector(err(schema, path, "required", Some(name)))
+                else Vector.empty
             }
           }
-        }
-      case "dependencies" => schema.obj("dependencies").foreach { deps =>
-        val obj = v.asInstanceOf[JObj]
-        deps.fields.foreach {
-          case (key, dep: JObj) =>
-            if (obj.has(key)) gen(dep, v, path, resolver, errs)
-          case (key, JArr(names)) =>
-            if (obj.has(key)) names.collect { case JStr(d) => d }.foreach { d =>
-              if (!obj.has(d)) errs += Err(join(path, d), "dependencies")
+        }.getOrElse(Vector.empty)
+        case "patternProperties" | "additionalProperties" =>
+          val obj = v.asInstanceOf[JObj]
+          val patterns = schema.obj("patternProperties").map(_.fields).getOrElse(Vector.empty)
+          val addProps = schema.get("additionalProperties")
+          val addCheck = addProps.exists {
+            case JBool(false) => true
+            case _: JObj => true
+            case _ => false
+          }
+          if (patterns.isEmpty && !addCheck) Vector.empty
+          else {
+            val declared = schema.obj("properties").map(_.keys.toSet).getOrElse(Set.empty)
+            obj.fields.flatMap { case (key, value) =>
+              val matched = patterns.filter { case (p, _) => matches(p, key) }
+              val patErrs = matched.flatMap { case (_, sub) => gen(sub, value, join(path, key)) }
+              val addErrs =
+                if (!addCheck || declared.contains(key) || matched.nonEmpty) Vector.empty
+                else addProps match {
+                  case Some(JBool(false)) =>
+                    Vector(err(schema, path, "additionalProperties", additional = key))
+                  case Some(sub: JObj) => gen(sub, value, join(path, key))
+                  case _ => Vector.empty
+                }
+              patErrs ++ addErrs
             }
-          case _ => ()
-        }
+          }
+        case "dependencies" => schema.obj("dependencies").map { deps =>
+          val obj = v.asInstanceOf[JObj]
+          deps.fields.flatMap {
+            case (key, dep: JObj) => if (obj.has(key)) gen(dep, v, path) else Vector.empty
+            case (key, JArr(names)) =>
+              if (!obj.has(key)) Vector.empty
+              else names.collect { case JStr(d) if !obj.has(d) => err(schema, path, "dependencies", Some(d)) }
+            case _ => Vector.empty
+          }
+        }.getOrElse(Vector.empty)
+        case _ => Vector.empty
       }
-      case _ => ()
     }
   }
 
