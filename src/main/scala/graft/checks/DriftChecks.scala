@@ -6,14 +6,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 /** Distribution-drift checks against a reference sample (SURVEY.md §2.8):
-  * two-sample Kolmogorov–Smirnov on a numeric column and chi-square on a
-  * categorical/token histogram.
+  * two-sample Kolmogorov–Smirnov on a numeric column, chi-square on a
+  * categorical/token histogram and PSI on binned proportions.
   *
-  * Scale design: both reduce the 10^12-row input to a bounded histogram
-  * FIRST (groupBy value/bin with partial aggregation — the shuffle carries
-  * at most bins × partitions rows), then do CDF/expected-count arithmetic
-  * on the tiny aggregated frame. The window functions below therefore sort
-  * hundreds of rows, not the input. No sample-sized sort-merge anywhere.
+  * Scale design: each reduces the 10^12-row input to a per-part histogram
+  * FIRST (groupBy part and value/bin with partial aggregation — the
+  * shuffle carries at most parts × keys rows per map task), and that
+  * histogram is the only input-sized shuffle.
+  *  - KS joins it with the per-part replicated reference histogram and
+  *    runs its CDF windows on the joined frame, which holds parts × bins
+  *    rows — meant for a bounded number of bins.
+  *  - Chi-square and PSI never build a parts × reference frame for the
+  *    histogram to meet: the reference fractions are broadcast and the
+  *    statistic is a split sum ([[HistogramDrift]]), equal to the
+  *    term-for-term sum over the union of keys up to float summation
+  *    order. Token vocabularies of 10^4–10^5 keys stay one shuffle.
   */
 final case class KsDriftCheck(
     column: String,
@@ -80,7 +87,10 @@ final case class KsDriftCheck(
   * pass `explode(col("tokens"))` for token histograms or `col("source")`
   * for categorical columns. Expected counts come from the reference's
   * relative frequencies scaled to each partition's total, floored at 0.5
-  * to keep the statistic finite for unseen categories. */
+  * to keep the statistic finite for unseen categories: per part, the sum
+  * over the union of observed and reference keys of
+  * `(o − p·n)² / max(p·n, 0.5)`, computed as a split sum against the
+  * broadcast reference (see [[HistogramDrift]]). */
 final case class Chi2DriftCheck(
     keyName: String,
     keyExpr: Column,
@@ -98,51 +108,18 @@ final case class Chi2DriftCheck(
     copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-
     // generators (explode) must be top-level in a select; the transform
     // (e.g. bucketing `% B`) is applied in a second projection
-    val obs = df.select(col(partCol).as("part"), keyExpr.as("key0"))
+    val keyed = df.select(col(partCol).as("part"), keyExpr.as("key0"))
       .select(col("part"), keyTransform(col("key0")).as("key"))
       .where(col("key").isNotNull)
-      .groupBy("part", "key").agg(count(lit(1)).as("o_cnt"))
-
-    val refHist = reference.select(refKeyExpr.as("key0"))
+    val refKeys = reference.select(refKeyExpr.as("key0"))
       .select(keyTransform(col("key0")).as("key"))
       .where(col("key").isNotNull)
-      .groupBy("key").agg(count(lit(1)).as("r_cnt"))
-    // the reference total stays a lazy 1-row cross-join (a `.head()` here
-    // would serialize an extra driver-side job per check mid-plan);
-    // greatest(…, 1) keeps an empty reference from ANSI-throwing on /0
-    val refTotal = refHist.agg(
-      greatest(sum("r_cnt").cast(DoubleType), lit(1.0)).as("_rt"))
-    val refFrac = refHist.crossJoin(broadcast(refTotal))
-      .select(col("key"), (col("r_cnt") / col("_rt")).as("p"))
-
     val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
-    val refPerPart = parts.crossJoin(broadcast(refFrac))
-
-    val joined = obs.join(refPerPart, Seq("part", "key"), "full_outer")
-      .select(col("part"),
-        coalesce(col("o_cnt"), lit(0L)).cast(DoubleType).as("o"),
-        coalesce(col("p"), lit(0.0)).as("p"))
-
-    val totals = joined.groupBy("part").agg(sum("o").as("n"))
-    val chi2 = joined.join(totals, Seq("part"))
-      .select(col("part"),
-        pow(col("o") - col("p") * col("n"), 2) /
-          greatest(col("p") * col("n"), lit(0.5)) as "term")
-      .groupBy("part")
-      .agg(sum("term").as("metric_value"))
-
-    val verdicts = chi2.select(
-      col("part"),
-      lit(name).as("check"),
-      (col("metric_value") <= lit(threshold)).as("passed"),
-      lit(0L).as("violation_count"),
-      col("metric_value"))
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+    val verdicts = HistogramDrift.verdicts(name, threshold, keyed, refKeys, parts,
+      (o, n, p) => pow(o - p * n, 2) / greatest(p * n, lit(0.5)))
+    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
 
@@ -154,11 +131,14 @@ final case class Chi2DriftCheck(
   * the sample sizes, so the same threshold works for a 10^6-row part and
   * a 10^10-row part. Zero-mass bins on either side are clamped to
   * `epsilon` — the standard finite-PSI convention; an unseen-in-reference
-  * bin thus contributes a large-but-finite term instead of ∞.
+  * bin thus contributes a large-but-finite term instead of ∞. A part with
+  * no non-NULL value reads its total as 1, so every observed proportion
+  * is clamped.
   *
-  * Same scale shape as the other drift checks: the input reduces to a
-  * bounded per-part histogram first (partial-combine groupBy); the PSI
-  * arithmetic runs on the tiny aggregated frame, reference broadcast. */
+  * Same plan as [[Chi2DriftCheck]] (see [[HistogramDrift]]): the per-part
+  * bin histogram is the only large shuffle, the reference is broadcast,
+  * and the statistic is a split sum equal to the term-for-term sum over
+  * the union of bins up to float summation order. */
 final case class PsiDriftCheck(
     column: String,
     reference: DataFrame,
@@ -176,45 +156,82 @@ final case class PsiDriftCheck(
     copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val b = bin(col(column)).as("bin")
+    val keyed = df.where(col(column).isNotNull)
+      .select(col(partCol).as("part"), bin(col(column)).as("key"))
+    val refKeys = reference.where(col(column).isNotNull)
+      .select(bin(col(column)).as("key"))
+    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
+    val eps = lit(epsilon)
+    val verdicts = HistogramDrift.verdicts(name, threshold, keyed, refKeys, parts,
+      (o, n, p) => {
+        val q = greatest(o / greatest(n, lit(1.0)), eps)
+        val r = greatest(p, eps)
+        (q - r) * log(q / r)
+      })
+    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
+  }
+}
 
-    val obs = df.where(col(column).isNotNull)
-      .groupBy(col(partCol).as("part"), b).agg(count(lit(1)).as("o_cnt"))
-    val refHist = reference.where(col(column).isNotNull)
-      .groupBy(b).agg(count(lit(1)).as("r_cnt"))
-    // lazy 1-row totals (see Chi2DriftCheck for why not .head())
+/** The plan shared by [[Chi2DriftCheck]] and [[PsiDriftCheck]]. Both sum,
+  * per part, a term `t(o, n, p)` over the union of observed and reference
+  * keys: `o` the part's count of the key, `n` the part's total, `p` the
+  * key's reference fraction (0 for a key the reference lacks). The sum is
+  * split as
+  *
+  *   Σ_{k∈ref} t(0, n, p_k) + Σ_{k∈obs} [t(o_k, n, p_k) − t(0, n, p_k)]
+  *
+  * so no frame of parts × reference keys is ever shuffled or joined
+  * against the histogram:
+  *  - the input's `(part, key)` histogram is the only large shuffle;
+  *    `n` is read off it (a second aggregate over the same exchange);
+  *  - the reference sum crosses the tiny `(part, n)` frame with the
+  *    broadcast reference fractions and reduces by partial aggregation;
+  *  - the observed sum is the histogram with broadcast lookups of `n` by
+  *    part and of `p` by key.
+  * The result equals the term-for-term sum up to float summation order.
+  *
+  * Verdict parts are the observed parts plus, when the reference is
+  * non-empty, every part of the universe (an all-NULL part reads n = 0).
+  * NULL parts get no verdict. */
+private object HistogramDrift {
+  def verdicts(name: String, threshold: Double,
+               keyed: DataFrame, refKeys: DataFrame, parts: DataFrame,
+               term: (Column, Column, Column) => Column): DataFrame = {
+    val obs = keyed.where(col("part").isNotNull)
+      .groupBy("part", "key").agg(count(lit(1)).as("o_cnt"))
+    val refHist = refKeys.groupBy("key").agg(count(lit(1)).as("r_cnt"))
+    // the reference total stays a lazy 1-row cross-join (a `.head()` here
+    // would serialize an extra driver-side job per check mid-plan);
+    // greatest(…, 1) keeps an empty reference from ANSI-throwing on /0
     val refTotal = refHist.agg(
       greatest(sum("r_cnt").cast(DoubleType), lit(1.0)).as("_rt"))
-    val refFrac = refHist.crossJoin(broadcast(refTotal))
-      .select(col("bin"), (col("r_cnt") / col("_rt")).as("r"))
+    val refFrac = broadcast(refHist.crossJoin(broadcast(refTotal))
+      .select(col("key"), (col("r_cnt") / col("_rt")).as("p")))
+    val totals = broadcast(
+      obs.groupBy("part").agg(sum("o_cnt").cast(DoubleType).as("n")))
+    val zero = lit(0.0)
 
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
-    val refPerPart = parts.crossJoin(broadcast(refFrac))
-
-    val joined = obs.join(refPerPart, Seq("part", "bin"), "full_outer")
+    val refTerms = parts.where(col("part").isNotNull)
+      .join(totals, Seq("part"), "left")
+      .select(col("part"), coalesce(col("n"), zero).as("n"))
+      .crossJoin(refFrac)
+      .select(col("part"), term(zero, col("n"), col("p")).as("term"))
+    // left joins, not inner: an inner join would infer a filter on the
+    // histogram, and its two uses would no longer share one exchange
+    val obsTerms = obs.join(totals, Seq("part"), "left")
+      .join(refFrac, Seq("key"), "left")
+      .select(col("part"), col("o_cnt").cast(DoubleType).as("o"), col("n"),
+        coalesce(col("p"), zero).as("p"))
       .select(col("part"),
-        coalesce(col("o_cnt"), lit(0L)).cast(DoubleType).as("o_cnt"),
-        coalesce(col("r"), lit(0.0)).as("r"))
-    val totals = joined.groupBy("part")
-      .agg(greatest(sum("o_cnt"), lit(1.0)).as("n"))
-    val psi = joined.join(totals, Seq("part"))
-      .select(col("part"),
-        (greatest(col("o_cnt") / col("n"), lit(epsilon)) -
-          greatest(col("r"), lit(epsilon))).as("_d"),
-        (greatest(col("o_cnt") / col("n"), lit(epsilon)) /
-          greatest(col("r"), lit(epsilon))).as("_q"))
-      .select(col("part"), (col("_d") * log(col("_q"))).as("term"))
-      .groupBy("part")
-      .agg(sum("term").as("metric_value"))
+        (term(col("o"), col("n"), col("p")) - term(zero, col("n"), col("p"))).as("term"))
 
-    val verdicts = psi.select(
-      col("part"),
-      lit(name).as("check"),
-      (col("metric_value") <= lit(threshold)).as("passed"),
-      lit(0L).as("violation_count"),
-      col("metric_value"))
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+    refTerms.unionByName(obsTerms)
+      .groupBy("part").agg(sum("term").as("metric_value"))
+      .select(
+        col("part"),
+        lit(name).as("check"),
+        (col("metric_value") <= lit(threshold)).as("passed"),
+        lit(0L).as("violation_count"),
+        col("metric_value"))
   }
 }

@@ -113,67 +113,72 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
       lit(0L).as("violation_count"),
       col("n_rows").cast(DoubleType).as("metric_value"))
 
-    val t0 = System.nanoTime()
-    // global checks see the full input (cross-partition semantics) but
-    // report only for uncommitted partitions; local checks scan pending
-    // only. The universe frame is injected so no check repeats discovery.
-    val results: Seq[CheckResult] = checks.map(_.withPartsUniverse(universe)).map { c =>
-      if (c.isGlobal && committed.nonEmpty) {
-        val r = c.run(input)
-        CheckResult(
-          r.violations.where(!col("part").isin(committed.toSeq: _*)),
-          r.verdicts.where(!col("part").isin(committed.toSeq: _*)))
-      } else c.run(pending)
-    }
-    val violationsAll = results.map(_.violations).reduce(_ unionAll _)
-    val violations = cfg.maxViolationsPerPart match {
-      case Some(k) => ValidationPipeline.capViolations(violationsAll, k)
-      case None    => violationsAll
-    }
-    val verdicts = (results.map(_.verdicts) :+ rowCountVerdicts).reduce(_ unionAll _)
+    // unpersisted on every path: a failed write must not leave the cached
+    // counts registered in the caller's session
+    try {
+      val t0 = System.nanoTime()
+      // global checks see the full input (cross-partition semantics) but
+      // report only for uncommitted partitions; local checks scan pending
+      // only. The universe frame is injected so no check repeats discovery.
+      val results: Seq[CheckResult] = checks.map(_.withPartsUniverse(universe)).map { c =>
+        if (c.isGlobal && committed.nonEmpty) {
+          val r = c.run(input)
+          CheckResult(
+            r.violations.where(!col("part").isin(committed.toSeq: _*)),
+            r.verdicts.where(!col("part").isin(committed.toSeq: _*)))
+        } else c.run(pending)
+      }
+      val violationsAll = results.map(_.violations).reduce(_ unionAll _)
+      val violations = cfg.maxViolationsPerPart match {
+        case Some(k) => ValidationPipeline.capViolations(violationsAll, k)
+        case None    => violationsAll
+      }
+      val verdicts = (results.map(_.verdicts) :+ rowCountVerdicts).reduce(_ unionAll _)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // The two output tables are INDEPENDENT jobs writing disjoint paths —
-    // submit them from two driver threads so the verdict job's tasks
-    // back-fill executors freed by the violation job's straggler tail.
-    // A failure in either write
-    // fails the run before any partition commits. The other write may
-    // still have finished, so after a failed run the two output
-    // directories can hold results of different runs until the re-run
-    // overwrites them. When both writes fail, the violations error rides
-    // on the verdicts error as a suppressed exception.
-    val vioErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val vioThread = new Thread(() =>
-      try violations.write.mode("overwrite").partitionBy("part")
-        .parquet(s"${cfg.outputDir}/violations")
-      catch { case t: Throwable => vioErr.set(t) })
-    vioThread.start()
-    try verdicts.write.mode("overwrite").partitionBy("part")
-      .parquet(s"${cfg.outputDir}/verdicts")
-    catch { case t: Throwable =>
+      // Dynamic partition overwrite is a per-write option, so the caller's
+      // session keeps its own `spark.sql.sources.partitionOverwriteMode`.
+      def write(df: DataFrame, table: String): Unit =
+        df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("part").parquet(s"${cfg.outputDir}/$table")
+      // The two output tables are INDEPENDENT jobs writing disjoint paths —
+      // submit them from two driver threads so the verdict job's tasks
+      // back-fill executors freed by the violation job's straggler tail.
+      // A failure in either write
+      // fails the run before any partition commits. The other write may
+      // still have finished, so after a failed run the two output
+      // directories can hold results of different runs until the re-run
+      // overwrites them. When both writes fail, the violations error rides
+      // on the verdicts error as a suppressed exception.
+      val vioErr = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val vioThread = new Thread(() =>
+        try write(violations, "violations")
+        catch { case t: Throwable => vioErr.set(t) })
+      vioThread.start()
+      try write(verdicts, "verdicts")
+      catch { case t: Throwable =>
+        vioThread.join()
+        Option(vioErr.get()).foreach(t.addSuppressed)
+        throw t
+      }
       vioThread.join()
-      Option(vioErr.get()).foreach(t.addSuppressed)
-      throw t
-    }
-    vioThread.join()
-    Option(vioErr.get()).foreach(e => throw e)
+      Option(vioErr.get()).foreach(e => throw e)
 
-    val elapsed = (System.nanoTime() - t0) / 1e9
-    // commit metadata comes from the cache the verdict write populated —
-    // a KB-sized read, not another input scan
-    val partCounts = rowCounts.collect()
-      .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    rowCounts.unpersist(false)
-    val pendingParts = partCounts.keys.toSeq.sorted
-    val totalRows = partCounts.values.sum
-    val rate = if (elapsed > 0) totalRows / elapsed else 0.0
+      val elapsed = (System.nanoTime() - t0) / 1e9
+      // commit metadata comes from the cache the verdict write populated —
+      // a KB-sized read, not another input scan
+      val partCounts = rowCounts.collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val pendingParts = partCounts.keys.toSeq.sorted
+      val totalRows = partCounts.values.sum
+      val rate = if (elapsed > 0) totalRows / elapsed else 0.0
 
-    pendingParts.foreach { p =>
-      checkpoint.commit(PartCommit(p, partCounts(p), rate, cfg.lineage))
-    }
+      pendingParts.foreach { p =>
+        checkpoint.commit(PartCommit(p, partCounts(p), rate, cfg.lineage))
+      }
 
-    PipelineResult(violations, verdicts,
-      pendingParts, committed.toSeq.sorted, totalRows)
+      PipelineResult(violations, verdicts,
+        pendingParts, committed.toSeq.sorted, totalRows)
+    } finally rowCounts.unpersist(false)
   }
 }
 

@@ -275,11 +275,17 @@ class PipelineSpec extends SparkSpec {
     assert(partViolations.count() == fullCount)
   }
 
+  /** (persisted RDDs, cache-manager entries): an entry can be registered
+    * before any job has materialized its blocks. */
+  def cacheState(): (Int, Int) = (spark.sparkContext.getPersistentRDDs.size,
+    org.apache.spark.sql.graftbridge.CacheProbe.entries(spark))
+
   test("both output writes fail: the violations error is kept as suppressed") {
     // an output "directory" that is a regular file: neither the
     // violations nor the verdicts table can be created under it
     val dir = Files.createTempDirectory("graft-pipe-2fail").toString
     val out = Files.createFile(java.nio.file.Paths.get(dir, "out")).toString
+    val cachedBefore = cacheState()
     val ex = intercept[Exception] {
       new ValidationPipeline(Seq(RowConstraintCheck(validator)),
         PipelineConfig(s"$dir/ckpt", out)).run(table)
@@ -291,6 +297,8 @@ class PipelineSpec extends SparkSpec {
     assert(ex.getSuppressed.exists(aboutOut),
       s"violations write error lost: suppressed = ${ex.getSuppressed.toSeq}")
     assert(new Checkpoint(s"$dir/ckpt").committedParts().isEmpty)
+    // the failed run leaves no cached blocks behind
+    assert(cacheState() == cachedBefore)
   }
 
   test("NULL / non-castable partition values fail fast with a clear error") {
@@ -298,6 +306,7 @@ class PipelineSpec extends SparkSpec {
     val pcfg = PipelineConfig(s"$dir/ckpt", s"$dir/out")
     val poisoned = table.withColumn("part",
       when(col("doc_id").isNull, lit(null)).otherwise(col("part")))
+    val cachedBefore = cacheState()
     val ex = intercept[Exception] {
       new ValidationPipeline(Seq(RowConstraintCheck(validator)), pcfg).run(poisoned)
     }
@@ -313,6 +322,34 @@ class PipelineSpec extends SparkSpec {
     val violParts = Option(new java.io.File(s"$dir/out/violations").listFiles)
       .toSeq.flatten.map(_.getName).filter(_.startsWith("part="))
     assert(violParts.isEmpty, s"poisoned output committed: $violParts")
+    assert(cacheState() == cachedBefore, "the failed run left cached data behind")
+  }
+
+  test("run leaves the session's partitionOverwriteMode as it was") {
+    // the pipeline's outputs overwrite dynamically by a per-write option;
+    // a caller's later `overwrite` + `partitionBy` write must keep the
+    // session's own (here static) mode
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "STATIC")
+    try {
+      val dir = Files.createTempDirectory("graft-pipe-overwrite").toString
+      val checks: Seq[Check] = Seq(RowConstraintCheck(validator))
+      new ValidationPipeline(checks, PipelineConfig(s"$dir/ckpt1", s"$dir/out"))
+        .run(table.where(col("part") < 2))
+      assert(spark.conf.get(key) == "STATIC")
+      // still dynamic for the pipeline itself: a second run writing parts
+      // 2 and 3 into the same output keeps parts 0 and 1
+      new ValidationPipeline(checks, PipelineConfig(s"$dir/ckpt2", s"$dir/out"))
+        .run(table.where(col("part") >= 2))
+      assert(spark.conf.get(key) == "STATIC")
+      val parts = spark.read.parquet(s"$dir/out/verdicts")
+        .select("part").distinct().collect().map(_.getInt(0)).sorted.toSeq
+      assert(parts == Seq(0, 1, 2, 3), s"output parts after two runs: $parts")
+    } finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
   }
 
   test("global checks: a new partition appearing after commit cannot leak " +
