@@ -1,27 +1,40 @@
 package graft.checks
 
+import graft.sketch.KeyCountsFunctions.{key_counts, key_counts_score}
+import graft.sketch.SortedKeyCounts
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
 
-/** Distribution-drift checks against a reference sample (SURVEY.md §2.8):
+/* Distribution-drift checks against a reference sample (SURVEY.md §2.8):
   * two-sample Kolmogorov–Smirnov on a numeric column, chi-square on a
   * categorical/token histogram and PSI on binned proportions.
   *
-  * Scale design: each reduces the 10^12-row input to a per-part histogram
-  * FIRST (groupBy part and value/bin with partial aggregation — the
-  * shuffle carries at most parts × keys rows per map task), and that
-  * histogram is the only input-sized shuffle.
-  *  - KS joins it with the per-part replicated reference histogram and
-  *    runs its CDF windows on the joined frame, which holds parts × bins
-  *    rows — meant for a bounded number of bins.
-  *  - Chi-square and PSI never build a parts × reference frame for the
-  *    histogram to meet: the reference fractions are broadcast and the
-  *    statistic is a split sum ([[HistogramDrift]]), equal to the
-  *    term-for-term sum over the union of keys up to float summation
-  *    order. Token vocabularies of 10^4–10^5 keys stay one shuffle.
+  * Scale design ([[KeyCountDrift]]): each check is one exact aggregate,
+  * `key_counts(key)` ([[graft.sketch.KeyCounts]]), grouped by part. Map
+  * tasks keep one count buffer per part, so the input's only shuffle
+  * carries one blob per part per task, hash-partitioned on `part`; no
+  * `(part, key)` rows are exchanged and nothing is joined against the
+  * input. The reference is one `key_counts` row, broadcast, and a
+  * per-part Catalyst expression scores the two buffers by walking the
+  * sorted union of their keys.
+  *  - KS accumulates long counts along that walk and divides
+  *    `cum / max(total, 1)` at each key: the exact two-sample D, bit for
+  *    bit, with no join or window.
+  *  - Chi-square and PSI sum a term `t(o, n, p)` over the union of keys,
+  *    equal to the term-for-term sum up to float summation order.
+  * Keys that evaluate to NULL are skipped, and NULL parts get no verdict.
+  *
+  * Memory: a part's buffer holds one entry per distinct key of the part,
+  * the same bound the broadcast reference already puts on the vocabulary
+  * (10^4–10^5 token keys are fine). [[FreqDriftCheck]] is the
+  * bounded-memory alternative for unbounded key spaces.
   */
+
+/** Two-sample Kolmogorov–Smirnov distance per part between the binned
+  * column (`bin`, identity by default) and the reference: the largest
+  * gap between the two empirical CDFs over the union of bins. A part
+  * whose column is entirely NULL reads its total as 1, so its CDF stays
+  * at 0 and it fails loudly with D = 1 when the reference is non-empty. */
 final case class KsDriftCheck(
     column: String,
     reference: DataFrame,
@@ -37,48 +50,12 @@ final case class KsDriftCheck(
     copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val b = bin(col(column)).as("bin")
-
-    val obs = df.where(col(column).isNotNull)
-      .groupBy(col(partCol).as("part"), b).agg(count(lit(1)).as("o_cnt"))
-    val ref = reference.where(col(column).isNotNull)
-      .groupBy(b).agg(count(lit(1)).as("r_cnt"))
-
-    // replicate the (small) reference histogram per observed partition so
-    // the CDF union is computed per part
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
-    val refPerPart = parts.crossJoin(broadcast(ref))
-
-    val joined = obs.join(refPerPart, Seq("part", "bin"), "full_outer")
-      .select(col("part"), col("bin"),
-        coalesce(col("o_cnt"), lit(0L)).as("o_cnt"),
-        coalesce(col("r_cnt"), lit(0L)).as("r_cnt"))
-
-    val byPart = Window.partitionBy("part")
-    val cumul = Window.partitionBy("part").orderBy("bin")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // greatest(total, 1): a part whose column is entirely NULL has zero
-    // observed mass — its CDF flatlines at 0 and the check fails loudly
-    // with D = 1 instead of ANSI-throwing on 0/0
-    val withCdf = joined
-      .withColumn("o_cdf", sum("o_cnt").over(cumul).cast(DoubleType) /
-        greatest(sum("o_cnt").over(byPart), lit(1L)))
-      .withColumn("r_cdf", sum("r_cnt").over(cumul).cast(DoubleType) /
-        greatest(sum("r_cnt").over(byPart), lit(1L)))
-
-    val verdicts = withCdf
-      .groupBy("part")
-      .agg(max(abs(col("o_cdf") - col("r_cdf"))).as("metric_value"))
-      .select(
-        col("part"),
-        lit(name).as("check"),
-        (col("metric_value") <= lit(threshold)).as("passed"),
-        lit(0L).as("violation_count"),
-        col("metric_value"))
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+    val keyed = df.where(col(column).isNotNull)
+      .select(col(partCol).as("part"), bin(col(column)).as("key"))
+    val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
+    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
+      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "ks_drift", KeyCountDrift.ks)
+    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
 
@@ -89,8 +66,8 @@ final case class KsDriftCheck(
   * relative frequencies scaled to each partition's total, floored at 0.5
   * to keep the statistic finite for unseen categories: per part, the sum
   * over the union of observed and reference keys of
-  * `(o − p·n)² / max(p·n, 0.5)`, computed as a split sum against the
-  * broadcast reference (see [[HistogramDrift]]). */
+  * `(o − p·n)² / max(p·n, 0.5)`, within float summation order of the
+  * term-for-term sum (see [[KeyCountDrift]]). */
 final case class Chi2DriftCheck(
     keyName: String,
     keyExpr: Column,
@@ -112,13 +89,11 @@ final case class Chi2DriftCheck(
     // (e.g. bucketing `% B`) is applied in a second projection
     val keyed = df.select(col(partCol).as("part"), keyExpr.as("key0"))
       .select(col("part"), keyTransform(col("key0")).as("key"))
-      .where(col("key").isNotNull)
     val refKeys = reference.select(refKeyExpr.as("key0"))
       .select(keyTransform(col("key0")).as("key"))
-      .where(col("key").isNotNull)
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
-    val verdicts = HistogramDrift.verdicts(name, threshold, keyed, refKeys, parts,
-      (o, n, p) => pow(o - p * n, 2) / greatest(p * n, lit(0.5)))
+    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
+      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "chi2_drift",
+      KeyCountDrift.termSum((o, n, p) => math.pow(o - p * n, 2) / math.max(p * n, 0.5)))
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
@@ -135,10 +110,8 @@ final case class Chi2DriftCheck(
   * no non-NULL value reads its total as 1, so every observed proportion
   * is clamped.
   *
-  * Same plan as [[Chi2DriftCheck]] (see [[HistogramDrift]]): the per-part
-  * bin histogram is the only large shuffle, the reference is broadcast,
-  * and the statistic is a split sum equal to the term-for-term sum over
-  * the union of bins up to float summation order. */
+  * Same plan as [[Chi2DriftCheck]] (see [[KeyCountDrift]]), with the PSI
+  * term; within float summation order of the term-for-term sum. */
 final case class PsiDriftCheck(
     column: String,
     reference: DataFrame,
@@ -158,75 +131,83 @@ final case class PsiDriftCheck(
   def run(df: DataFrame): CheckResult = {
     val keyed = df.where(col(column).isNotNull)
       .select(col(partCol).as("part"), bin(col(column)).as("key"))
-    val refKeys = reference.where(col(column).isNotNull)
-      .select(bin(col(column)).as("key"))
-    val parts = Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
-    val eps = lit(epsilon)
-    val verdicts = HistogramDrift.verdicts(name, threshold, keyed, refKeys, parts,
-      (o, n, p) => {
-        val q = greatest(o / greatest(n, lit(1.0)), eps)
-        val r = greatest(p, eps)
-        (q - r) * log(q / r)
+    val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
+    val eps = epsilon
+    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
+      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "psi_drift",
+      KeyCountDrift.termSum { (o, n, p) =>
+        val q = math.max(o / math.max(n, 1.0), eps)
+        val r = math.max(p, eps)
+        (q - r) * math.log(q / r)
       })
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
 
-/** The plan shared by [[Chi2DriftCheck]] and [[PsiDriftCheck]]. Both sum,
-  * per part, a term `t(o, n, p)` over the union of observed and reference
-  * keys: `o` the part's count of the key, `n` the part's total, `p` the
-  * key's reference fraction (0 for a key the reference lacks). The sum is
-  * split as
+/** The plan shared by the three drift checks. Per part it scores the
+  * part's `key_counts` buffer against the reference's:
   *
-  *   Σ_{k∈ref} t(0, n, p_k) + Σ_{k∈obs} [t(o_k, n, p_k) − t(0, n, p_k)]
+  *  - `keyed` (part, key) rows, NULL parts and NULL keys dropped, and the
+  *    universe's parts as NULL keys, feed one `groupBy(part)` aggregate
+  *    of `key_counts(key)` and `count(key)` = n. Universe parts with no
+  *    rows thus get an empty buffer without a join, and the input is
+  *    shuffled once, on `part`;
+  *  - the reference keys, cast to the observed key type, are one
+  *    `key_counts` row crossed in as a broadcast;
+  *  - a [[graft.sketch.KeyCountsScore]] expression computes the metric.
   *
-  * so no frame of parts × reference keys is ever shuffled or joined
-  * against the histogram:
-  *  - the input's `(part, key)` histogram is the only large shuffle;
-  *    `n` is read off it (a second aggregate over the same exchange);
-  *  - the reference sum crosses the tiny `(part, n)` frame with the
-  *    broadcast reference fractions and reduces by partial aggregation;
-  *  - the observed sum is the histogram with broadcast lookups of `n` by
-  *    part and of `p` by key.
-  * The result equals the term-for-term sum up to float summation order.
-  *
-  * Verdict parts are the observed parts plus, when the reference is
-  * non-empty, every part of the universe (an all-NULL part reads n = 0).
-  * NULL parts get no verdict. */
-private object HistogramDrift {
-  def verdicts(name: String, threshold: Double,
-               keyed: DataFrame, refKeys: DataFrame, parts: DataFrame,
-               term: (Column, Column, Column) => Column): DataFrame = {
-    val obs = keyed.where(col("part").isNotNull)
-      .groupBy("part", "key").agg(count(lit(1)).as("o_cnt"))
-    val refHist = refKeys.groupBy("key").agg(count(lit(1)).as("r_cnt"))
-    // the reference total stays a lazy 1-row cross-join (a `.head()` here
-    // would serialize an extra driver-side job per check mid-plan);
-    // greatest(…, 1) keeps an empty reference from ANSI-throwing on /0
-    val refTotal = refHist.agg(
-      greatest(sum("r_cnt").cast(DoubleType), lit(1.0)).as("_rt"))
-    val refFrac = broadcast(refHist.crossJoin(broadcast(refTotal))
-      .select(col("key"), (col("r_cnt") / col("_rt")).as("p")))
-    val totals = broadcast(
-      obs.groupBy("part").agg(sum("o_cnt").cast(DoubleType).as("n")))
-    val zero = lit(0.0)
+  * Verdict parts are the observed parts (n > 0) plus, when the reference
+  * is non-empty, every part of the universe. */
+private object KeyCountDrift {
+  type Score = (SortedKeyCounts, SortedKeyCounts) => Double
 
-    val refTerms = parts.where(col("part").isNotNull)
-      .join(totals, Seq("part"), "left")
-      .select(col("part"), coalesce(col("n"), zero).as("n"))
-      .crossJoin(refFrac)
-      .select(col("part"), term(zero, col("n"), col("p")).as("term"))
-    // left joins, not inner: an inner join would infer a filter on the
-    // histogram, and its two uses would no longer share one exchange
-    val obsTerms = obs.join(totals, Seq("part"), "left")
-      .join(refFrac, Seq("key"), "left")
-      .select(col("part"), col("o_cnt").cast(DoubleType).as("o"), col("n"),
-        coalesce(col("p"), zero).as("p"))
-      .select(col("part"),
-        (term(col("o"), col("n"), col("p")) - term(zero, col("n"), col("p"))).as("term"))
+  /** The universe to score: the injected one, else the input's own part
+    * column, whose duplicates the per-part aggregate merges (no distinct
+    * scan of its own). */
+  def universe(df: DataFrame, knownParts: Seq[Int], partCol: String,
+               partsUniverse: Option[DataFrame]): DataFrame =
+    if (knownParts.isEmpty && partsUniverse.isEmpty) df.select(col(partCol).as("part"))
+    else Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
 
-    refTerms.unionByName(obsTerms)
-      .groupBy("part").agg(sum("term").as("metric_value"))
+  /** Per part, Σ over the union of keys of `term(o, n, p)`: `o` the
+    * part's count of the key, `n` the part's total, `p` the key's
+    * reference fraction `r / max(R, 1)`. */
+  def termSum(term: (Double, Double, Double) => Double): Score = (obs, ref) => {
+    val n = obs.total.toDouble
+    val refTotal = math.max(ref.total, 1L).toDouble
+    var sum = 0.0
+    obs.foreachUnion(ref)((o, r) => sum += term(o.toDouble, n, r / refTotal))
+    sum
+  }
+
+  /** The largest gap between the two CDFs over the sorted union of keys,
+    * each CDF `cum / max(total, 1)` on long counts. */
+  val ks: Score = (obs, ref) => {
+    val oTotal = math.max(obs.total, 1L).toDouble
+    val rTotal = math.max(ref.total, 1L).toDouble
+    var cumO = 0L
+    var cumR = 0L
+    var d = 0.0
+    obs.foreachUnion(ref) { (o, r) =>
+      cumO += o
+      cumR += r
+      d = math.max(d, math.abs(cumO.toDouble / oTotal - cumR.toDouble / rTotal))
+    }
+    d
+  }
+
+  def verdicts(name: String, threshold: Double, keyed: DataFrame, refKeys: DataFrame,
+               universe: DataFrame, scoreName: String, score: Score): DataFrame = {
+    val keyType = keyed.schema("key").dataType
+    val obs = keyed.where(col("part").isNotNull && col("key").isNotNull)
+      .unionByName(universe.where(col("part").isNotNull)
+        .select(col("part"), lit(null).cast(keyType).as("key")))
+      .groupBy("part").agg(key_counts(col("key")).as("o"), count(col("key")).as("n"))
+    val ref = refKeys.select(col("key").cast(keyType).as("key"))
+      .agg(key_counts(col("key")).as("r"), count(col("key")).as("rn"))
+    obs.crossJoin(broadcast(ref))
+      .where(col("n") > 0 || col("rn") > 0)
+      .select(col("part"), key_counts_score(scoreName, col("o"), col("r"))(score).as("metric_value"))
       .select(
         col("part"),
         lit(name).as("check"),
