@@ -29,21 +29,16 @@ trait Check extends Serializable {
     * same Check interface; this flag is the contract either way.) */
   def isGlobal: Boolean = false
 
-  /** Inject the partition universe as a literal list (e.g. from a table
-    * catalog). Standalone `run(df)` discovers partitions itself (a
-    * distinct scan of the partition column); callers who know the
-    * universe hand it over so that scan never happens. Default: ignore
-    * (checks that aggregate `groupBy(part)` directly never discover). */
-  def withKnownParts(parts: Seq[Int]): Check = this
-
-  /** Inject the partition universe as a LAZY (typically cached) DataFrame
-    * instead of a literal list. THIS is the hook the pipeline uses: it
-    * folds discovery into the verdict write job — one shared cached
-    * subtree, zero dedicated upfront jobs — rather than running an eager
-    * discovery scan before any check starts. Custom checks that need a
-    * partition universe should override BOTH hooks (the in-repo checks
-    * do); a check overriding only withKnownParts falls back to its own
-    * distinct scan inside the pipeline. Default: ignore. */
+  /** Inject the partition universe as a LAZY (typically cached)
+    * DataFrame with one `part` column (e.g. from a table catalog, or a
+    * literal list as `parts.toDF("part")`). Standalone `run(df)`
+    * discovers partitions itself (a distinct scan of the partition
+    * column). The pipeline uses this hook to fold discovery into the
+    * verdict write job — one shared cached subtree, zero dedicated
+    * upfront jobs — rather than running an eager discovery scan before
+    * any check starts. Custom checks that need a partition universe
+    * should override it. Default: ignore (checks that aggregate
+    * `groupBy(part)` directly never discover). */
   def withPartsUniverse(parts: DataFrame): Check = this
 }
 
@@ -60,31 +55,19 @@ object Check {
     StructField("additional_properties", StringType),
     StructField("check", StringType)))
 
-  /** The partition universe: the pipeline-provided literal list when
-    * available (no input scan), else the pipeline's shared lazy universe
-    * frame, else a distinct scan of the partition column. */
-  def partsDf(df: DataFrame, knownParts: Seq[Int],
-              partCol: String = PartCol,
-              universe: Option[DataFrame] = None): DataFrame =
-    if (knownParts.nonEmpty) {
-      val spark = df.sparkSession
-      import spark.implicits._
-      knownParts.toDF(partCol)
-    } else universe.map(_.toDF(partCol))
-      .getOrElse(df.select(col(partCol)).distinct())
-
-  /** Verdict frame builder: every partition present in `df` gets a verdict
-    * row even when it has zero violations (absent partitions must read as
-    * passed, not as missing). `perPart` carries (part, violation_count
-    * [, metric_value]). */
+  /** Verdict frame builder: every partition of the universe (`universe`,
+    * else those present in `df`) gets a verdict row even when it has zero
+    * violations (absent partitions must read as passed, not as missing).
+    * `perPart` carries (part, violation_count [, metric_value]). */
   def verdictsFromCounts(df: DataFrame, perPart: DataFrame, checkName: String,
                          metricValue: Column = lit(null).cast(DoubleType),
-                         knownParts: Seq[Int] = Nil,
                          partCol: String = PartCol,
                          universe: Option[DataFrame] = None): DataFrame = {
-    // normalize the caller's partition column to the canonical name so a
-    // check configured with partCol="day" builds the right universe
-    val parts = partsDf(df, knownParts, partCol, universe)
+    // the injected universe, else a distinct scan of the partition
+    // column, normalized to the canonical name so a check configured
+    // with partCol="day" builds the right universe
+    val parts = universe.map(_.toDF(partCol))
+      .getOrElse(df.select(col(partCol)).distinct())
       .select(col(partCol).as(PartCol))
     val counts = perPart.withColumnRenamed("part", "vpart")
     parts.join(counts, parts(PartCol) === counts("vpart"), "left")

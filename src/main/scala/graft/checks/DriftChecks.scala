@@ -41,11 +41,9 @@ final case class KsDriftCheck(
     threshold: Double = 0.05,
     bin: Column => Column = identity,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = s"drift_ks:$column"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -54,7 +52,7 @@ final case class KsDriftCheck(
       .select(col(partCol).as("part"), bin(col(column)).as("key"))
     val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
     val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "ks_drift", KeyCountDrift.ks)
+      KeyCountDrift.universe(df, partCol, partsUniverse), "ks_drift", KeyCountDrift.ks)
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
@@ -76,11 +74,9 @@ final case class Chi2DriftCheck(
     threshold: Double,
     keyTransform: Column => Column = identity,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = s"drift_chi2:$keyName"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -92,7 +88,7 @@ final case class Chi2DriftCheck(
     val refKeys = reference.select(refKeyExpr.as("key0"))
       .select(keyTransform(col("key0")).as("key"))
     val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "chi2_drift",
+      KeyCountDrift.universe(df, partCol, partsUniverse), "chi2_drift",
       KeyCountDrift.termSum((o, n, p) => math.pow(o - p * n, 2) / math.max(p * n, 0.5)))
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
@@ -119,12 +115,10 @@ final case class PsiDriftCheck(
     bin: Column => Column = identity,
     epsilon: Double = 1e-6,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   require(epsilon > 0.0, "epsilon must be positive (keeps PSI finite)")
   val name = s"drift_psi:$column"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -134,7 +128,7 @@ final case class PsiDriftCheck(
     val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
     val eps = epsilon
     val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, knownParts, partCol, partsUniverse), "psi_drift",
+      KeyCountDrift.universe(df, partCol, partsUniverse), "psi_drift",
       KeyCountDrift.termSum { (o, n, p) =>
         val q = math.max(o / math.max(n, 1.0), eps)
         val r = math.max(p, eps)
@@ -164,10 +158,9 @@ private object KeyCountDrift {
   /** The universe to score: the injected one, else the input's own part
     * column, whose duplicates the per-part aggregate merges (no distinct
     * scan of its own). */
-  def universe(df: DataFrame, knownParts: Seq[Int], partCol: String,
+  def universe(df: DataFrame, partCol: String,
                partsUniverse: Option[DataFrame]): DataFrame =
-    if (knownParts.isEmpty && partsUniverse.isEmpty) df.select(col(partCol).as("part"))
-    else Check.partsDf(df, knownParts, partCol, partsUniverse).toDF("part")
+    partsUniverse.getOrElse(df.select(col(partCol))).toDF("part")
 
   /** Per part, Σ over the union of keys of `term(o, n, p)`: `o` the
     * part's count of the key, `n` the part's total, `p` the key's

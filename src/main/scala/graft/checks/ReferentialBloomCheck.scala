@@ -27,11 +27,9 @@ final case class ReferentialBloomCheck(
     activeCol: Option[String] = Some("active"),
     partCol: String = Check.PartCol,
     idCol: String = Check.IdCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = "referential_bloom"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -49,7 +47,7 @@ final case class ReferentialBloomCheck(
 
   def run(df: DataFrame): CheckResult =
     ReferentialBloomCheck.fromBlob(buildFilter(), fkCol, dimKeyCol,
-      partCol, idCol, knownParts, partsUniverse).run(df)
+      partCol, idCol, partsUniverse).run(df)
 }
 
 object ReferentialBloomCheck {
@@ -62,11 +60,9 @@ object ReferentialBloomCheck {
       dimKeyCol: String,
       partCol: String = Check.PartCol,
       idCol: String = Check.IdCol,
-      knownParts: Seq[Int] = Nil,
       partsUniverse: Option[DataFrame] = None) extends Check {
 
     val name = "referential_bloom"
-    override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
     override def withPartsUniverse(parts: DataFrame): Check =
       copy(partsUniverse = Some(parts))
 
@@ -86,13 +82,12 @@ object ReferentialBloomCheck {
       val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
       CheckResult(violations,
         Check.verdictsFromCounts(df, perPart, name,
-          knownParts = knownParts, partCol = partCol, universe = partsUniverse))
+          partCol = partCol, universe = partsUniverse))
     }
   }
 
   def fromBlob(blob: Array[Byte], fkCol: String, dimKeyCol: String,
                partCol: String = Check.PartCol, idCol: String = Check.IdCol,
-               knownParts: Seq[Int] = Nil,
                partsUniverse: Option[DataFrame] = None): FromBlob =
-    FromBlob(blob, fkCol, dimKeyCol, partCol, idCol, knownParts, partsUniverse)
+    FromBlob(blob, fkCol, dimKeyCol, partCol, idCol, partsUniverse)
 }

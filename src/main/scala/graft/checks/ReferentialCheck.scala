@@ -20,11 +20,9 @@ final case class ReferentialCheck(
     activeCol: Option[String] = Some("active"),
     partCol: String = Check.PartCol,
     idCol: String = Check.IdCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = "referential"
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -49,6 +47,6 @@ final case class ReferentialCheck(
     val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
     CheckResult(violations,
       Check.verdictsFromCounts(df, perPart, name,
-        knownParts = knownParts, partCol = partCol, universe = partsUniverse))
+        partCol = partCol, universe = partsUniverse))
   }
 }

@@ -21,12 +21,10 @@ final case class UniquenessCheck(
     keyCol: String = Check.IdCol,
     saltBuckets: Int = 64,
     partCol: String = Check.PartCol,
-    knownParts: Seq[Int] = Nil,
     partsUniverse: Option[DataFrame] = None) extends Check {
 
   val name = "uniqueness"
   override def isGlobal: Boolean = true
-  override def withKnownParts(parts: Seq[Int]): Check = copy(knownParts = parts)
   override def withPartsUniverse(parts: DataFrame): Check =
     copy(partsUniverse = Some(parts))
 
@@ -64,6 +62,6 @@ final case class UniquenessCheck(
     val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
     CheckResult(violations,
       Check.verdictsFromCounts(df, perPart, name,
-        knownParts = knownParts, partCol = partCol, universe = partsUniverse))
+        partCol = partCol, universe = partsUniverse))
   }
 }

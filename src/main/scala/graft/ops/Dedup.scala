@@ -1048,21 +1048,17 @@ object Dedup {
     * suites, not corpora) — the distinct gram set is BROADCAST, so the
     * 100-TB corpus side never shuffles: tokenize → explode → broadcast
     * hash semi-join → per-doc count with map-side partial aggregation.
-    * The only exchange carries (id, partial count). For a benchmark too
-    * large to broadcast, pass `broadcastBench = false` to fall back to a
-    * shuffled join. */
+    * The only exchange carries (id, partial count). */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String,
-                    shingleN: Int = 3, minMatches: Int = 1,
-                    broadcastBench: Boolean = true): DataFrame = {
+                    shingleN: Int = 3, minMatches: Int = 1): DataFrame = {
     // shingles() maps empty/NULL-text docs to [""] — a stray blank line
     // in the benchmark file would otherwise flag EVERY short corpus doc
     // (whose shingle set is also [""]) as contaminated
-    val benchGrams0 = benchmark
+    val benchGrams = broadcast(benchmark
       .select(explode(shingles(col(benchTextCol), shingleN)).as("g"))
       .where(col("g") =!= "")
-      .distinct()
-    val benchGrams = if (broadcastBench) broadcast(benchGrams0) else benchGrams0
+      .distinct())
     // shingles() is per-doc distinct, so the post-join count is the number
     // of DISTINCT grams of this doc that hit the benchmark set
     corpus

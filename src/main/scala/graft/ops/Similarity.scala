@@ -750,7 +750,8 @@ object Similarity {
     // the BNLJ join CONDITION, inlining the full m-lookup ADC expression
     // a second time into the fused codegen stage; on the persisted-code
     // plan that fused stage falls out of JIT and the candidate scan runs
-    // ~6x slower (PqDiag at 1M vectors: 80.7 s -> inline-parity)
+    // ~6x slower (BENCH.md, "Persisted-ANN production shape": 80.7 s at
+    // 1M vectors -> inline parity)
     val codes = spreadForScan(preCodes
       .map(_.select(col(corpusId).as("neighbor_id"), col("pcode")))
       .getOrElse(corpus.select(col(corpusId).as("neighbor_id"),

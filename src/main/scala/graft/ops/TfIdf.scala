@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   * Scale shape: tf aggregates on (doc, term) with map-side combine; the
   * document-frequency table aggregates the SAME exploded frame one level
   * further (term only) — both partial-aggregated, and the df table is
-  * vocabulary-sized, usually broadcastable (`broadcastDf`). IDF is the
-  * sklearn-style smoothed form ln((N+1)/(df+1)) + 1, which never divides
-  * by zero and keeps unseen-term weights finite.
+  * vocabulary-sized and broadcast. IDF is the sklearn-style smoothed form
+  * ln((N+1)/(df+1)) + 1, which never divides by zero and keeps unseen-term
+  * weights finite.
   */
 object TfIdf {
 
@@ -23,12 +23,11 @@ object TfIdf {
     df.select(explode(array_distinct(TextAnalysis.words(col(textCol)))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("doc_freq"))
 
-  /** (id, term, tf, tfidf): every (document, term) pair scored.
-    * `broadcastDf = true` broadcasts the document-frequency table —
-    * right whenever the vocabulary fits an executor (use the
-    * [[graft.sketch.FreqSketch]] heavy-hitters path when it does not). */
-  def tfidf(df: DataFrame, idCol: String, textCol: String,
-            broadcastDf: Boolean = true): DataFrame = {
+  /** (id, term, tf, tfidf): every (document, term) pair scored. The
+    * document-frequency table is broadcast, which is right whenever the
+    * vocabulary fits an executor (use the [[graft.sketch.FreqSketch]]
+    * heavy-hitters path when it does not). */
+  def tfidf(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val terms = df
       .select(col(idCol).as("id"), explode(TextAnalysis.words(col(textCol))).as("term"))
       .groupBy("id", "term").agg(count(lit(1)).as("tf"))
@@ -36,8 +35,7 @@ object TfIdf {
     // one row per distinct (doc, term), so counting rows per term IS the
     // document frequency, the corpus tokenizes once, and Spark reuses
     // the (id, term) partial-aggregate exchange for both branches
-    val dfTable0 = terms.groupBy("term").agg(count(lit(1)).as("doc_freq"))
-    val dfTable = if (broadcastDf) broadcast(dfTable0) else dfTable0
+    val dfTable = broadcast(terms.groupBy("term").agg(count(lit(1)).as("doc_freq")))
     val n = df.agg(count(lit(1)).as("_n"))
     terms
       .join(dfTable, Seq("term"))

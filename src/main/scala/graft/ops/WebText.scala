@@ -70,18 +70,15 @@ object WebText {
     * blocklist — small by construction — is BROADCAST for the membership
     * equi-join; the matched id set is then anti-joined back, where AQE
     * broadcasts it (violating ids are a sliver of the corpus). The corpus
-    * itself never shuffles. For a blocklist too large to broadcast, pass
-    * `broadcastBlocked = false`. */
+    * itself never shuffles. */
   def filterByDomainBlocklist(corpus: DataFrame, idCol: String,
                               textCol: String, blocked: DataFrame,
-                              blockedCol: String,
-                              broadcastBlocked: Boolean = true): DataFrame = {
+                              blockedCol: String): DataFrame = {
     val sfx = corpus
       .select(col(idCol).as("_id"),
         explode(domains(col(textCol))).as("_domain"))
       .select(col("_id"), explode(domainSuffixes(col("_domain"))).as("_sfx"))
-    val blk0 = blocked.select(lower(col(blockedCol)).as("_sfx")).distinct()
-    val blk = if (broadcastBlocked) broadcast(blk0) else blk0
+    val blk = broadcast(blocked.select(lower(col(blockedCol)).as("_sfx")).distinct())
     val bad = sfx.join(blk, Seq("_sfx")).select(col("_id")).distinct()
     corpus.join(bad.withColumnRenamed("_id", idCol), Seq(idCol), "left_anti")
   }

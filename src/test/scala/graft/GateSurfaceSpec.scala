@@ -42,4 +42,12 @@ class GateSurfaceSpec extends SparkSpec {
     assert((oNames -- qNames).isEmpty,
       s"oracles without queries: ${(oNames -- qNames).mkString(", ")}")
   }
+
+  test("SparkEntry.entry smoke: per-partition verdict rows on sf0.001") {
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
+    val df = SparkEntry.entry(spark)
+    assert(df.columns.toSeq ==
+      Seq("part", "check", "passed", "violation_count", "metric_value"))
+    assert(df.collect().length > 0, "entry must return rows")
+  }
 }

@@ -91,9 +91,10 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("withKnownParts: identical verdicts without the discovery scan") {
+  test("withPartsUniverse: identical verdicts without the discovery scan") {
     // the pipeline injects the partition universe so checks skip their
     // per-check distinct(part) scan of the input — outputs must not change
+    import spark.implicits._
     val parts = Seq(0, 1, 2, 3)
     for (check <- Seq[Check](
         UniquenessCheck("doc_id"),
@@ -102,9 +103,9 @@ class PipelineSpec extends SparkSpec {
           reference = TokenTable.generate(spark, cfg.copy(seed = 7L)),
           threshold = 0.05))) {
       val base = check.run(table).verdicts.orderBy("part", "check").collect()
-      val known = check.withKnownParts(parts).run(table)
+      val known = check.withPartsUniverse(parts.toDF("part")).run(table)
         .verdicts.orderBy("part", "check").collect()
-      assert(base.toSeq == known.toSeq, s"${check.name} diverged with knownParts")
+      assert(base.toSeq == known.toSeq, s"${check.name} diverged with an injected universe")
     }
   }
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables, compare to the Verify parquet dump (columns
-sorted by name, rows sorted, values compared)."""
+sorted by name, rows sorted, values compared). An oracle with no dump is
+a failure."""
 import sys, json, glob, math
 import duckdb
 
@@ -21,6 +22,12 @@ def norm(v):
         if math.isnan(v): return "NaN"
         return v
     return v
+
+# a query that threw in Verify leaves no dump: its oracle has nothing to
+# compare against, which is a failure, not a skip
+dumped = {qdir.split("/")[-1] for qdir in glob.glob(f"{out_dir}/q_*")}
+for name in sorted(set(oracles) - dumped):
+    fails.append((name, "no dump (query failed in Verify?)"))
 
 for qdir in sorted(glob.glob(f"{out_dir}/q_*")):
     name = qdir.split("/")[-1]
