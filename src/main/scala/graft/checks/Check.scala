@@ -55,6 +55,13 @@ object Check {
     StructField("additional_properties", StringType),
     StructField("check", StringType)))
 
+  val verdictsSchema: StructType = StructType(Seq(
+    StructField("part", IntegerType),
+    StructField("check", StringType),
+    StructField("passed", BooleanType),
+    StructField("violation_count", LongType),
+    StructField("metric_value", DoubleType)))
+
   /** Verdict frame builder: every partition of the universe (`universe`,
     * else those present in `df`) gets a verdict row even when it has zero
     * violations (absent partitions must read as passed, not as missing).
@@ -82,5 +89,11 @@ object Check {
   }
 
   def emptyViolations(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), violationsSchema)
+    empty(spark, violationsSchema)
+
+  def emptyVerdicts(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    empty(spark, verdictsSchema)
+
+  private def empty(spark: org.apache.spark.sql.SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
 }

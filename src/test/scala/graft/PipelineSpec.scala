@@ -276,6 +276,88 @@ class PipelineSpec extends SparkSpec {
     assert(partViolations.count() == fullCount)
   }
 
+  /** One uninterrupted `allChecks` run on a fresh checkpoint, shared by the
+    * layout, resume and crash tests: its output directory and result. */
+  lazy val fresh: (String, PipelineResult) = {
+    val dir = Files.createTempDirectory("graft-pipe-fresh").toString
+    dir -> new ValidationPipeline(allChecks, PipelineConfig(s"$dir/ckpt", s"$dir/out")).run(table)
+  }
+
+  /** `part=` directory name → number of parquet data files in it */
+  def partFiles(tableDir: String): Map[String, Int] =
+    Option(new java.io.File(tableDir).listFiles).toSeq.flatten
+      .filter(_.getName.startsWith("part=")).map { d =>
+        d.getName -> d.listFiles.count(_.getName.endsWith(".parquet"))
+      }.toMap
+
+  val partDirs: Set[String] = (0 until cfg.parts).map(p => s"part=$p").toSet
+
+  test("output layout: one parquet file per part in violations and verdicts") {
+    val (dir, r) = fresh
+    for (t <- Seq("violations", "verdicts")) {
+      val files = partFiles(s"$dir/out/$t")
+      assert(files.keySet == partDirs, s"$t parts: ${files.keySet}")
+      assert(files.values.forall(_ == 1), s"$t files per part: $files")
+    }
+    // the result reads the written tables back, in FIXTURES §5 order
+    assert(r.violations.columns.toSeq == Check.violationsSchema.fieldNames.toSeq)
+    assert(r.verdicts.columns.toSeq == Check.verdictsSchema.fieldNames.toSeq)
+    assert(r.verdicts.count() == spark.read.parquet(s"$dir/out/verdicts").count())
+  }
+
+  test("fully committed resume returns empty frames with the output columns") {
+    val (dir, _) = fresh
+    val r = new ValidationPipeline(allChecks,
+      PipelineConfig(s"$dir/ckpt", s"$dir/out")).run(table)
+    assert(r.processedParts.isEmpty && r.skippedParts == (0 until cfg.parts))
+    assert(r.verdicts.select("part").count() == 0)
+    assert(r.violations.select("part").count() == 0)
+    assert(r.verdicts.schema == Check.verdictsSchema)
+    assert(r.violations.schema == Check.violationsSchema)
+  }
+
+  test("crash between write and commit: nothing commits, the re-run equals an " +
+       "uninterrupted run") {
+    val dir = Files.createTempDirectory("graft-pipe-crash").toString
+    val pcfg = PipelineConfig(s"$dir/ckpt", s"$dir/out")
+    // a regular file where the commit manifests go: both writes land, then
+    // the first Checkpoint.commit throws
+    val commits = java.nio.file.Paths.get(dir, "ckpt", "commits")
+    Files.createDirectories(commits.getParent)
+    Files.createFile(commits)
+    intercept[java.nio.file.FileAlreadyExistsException] {
+      new ValidationPipeline(allChecks, pcfg).run(table)
+    }
+    assert(partFiles(s"$dir/out/violations").keySet == partDirs)
+    assert(partFiles(s"$dir/out/verdicts").keySet == partDirs)
+    Files.delete(commits)
+    assert(new Checkpoint(s"$dir/ckpt").committedParts().isEmpty)
+
+    val r = new ValidationPipeline(allChecks, pcfg).run(table)
+    assert(r.processedParts == (0 until cfg.parts) && r.skippedParts.isEmpty)
+    val (freshDir, _) = fresh
+    def read(d: String, t: String) = spark.read.parquet(s"$d/out/$t").collect().toSeq
+    assert(read(dir, "violations").map(_.toString).sorted ==
+      read(freshDir, "violations").map(_.toString).sorted)
+    def byKey(d: String) = read(d, "verdicts")
+      .map(v => (v.getAs[Int]("part"), v.getAs[String]("check")) -> v).toMap
+    val (got, want) = (byKey(dir), byKey(freshDir))
+    assert(got.keySet == want.keySet)
+    for ((k, w) <- want) {
+      val g = got(k)
+      assert(g.getAs[Boolean]("passed") == w.getAs[Boolean]("passed"), s"$k passed")
+      assert(g.getAs[Long]("violation_count") == w.getAs[Long]("violation_count"), s"$k count")
+      val (gm, wm) = (Option(g.getAs[java.lang.Double]("metric_value")),
+        Option(w.getAs[java.lang.Double]("metric_value")))
+      if (k._2.startsWith("drift_"))
+        assert(gm.isDefined == wm.isDefined && gm.zip(wm).forall { case (a, b) =>
+          math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b)) }, s"$k metric $gm vs $wm")
+      else assert(gm == wm, s"$k metric")
+    }
+    for (t <- Seq("violations", "verdicts"))
+      assert(partFiles(s"$dir/out/$t").values.forall(_ == 1), s"$t after the re-run")
+  }
+
   /** (persisted RDDs, cache-manager entries): an entry can be registered
     * before any job has materialized its blocks. */
   def cacheState(): (Int, Int) = (spark.sparkContext.getPersistentRDDs.size,
@@ -384,13 +466,18 @@ class PipelineSpec extends SparkSpec {
     val acc = spark.sparkContext.longAccumulator("graft-scan-rows")
     val countRows = udf { () => acc.add(1); true }.asNondeterministic()
     val instrumented = table.filter(countRows())
-    new ValidationPipeline(Seq(RowConstraintCheck(validator)), pcfg).run(instrumented)
+    val r = new ValidationPipeline(Seq(RowConstraintCheck(validator)), pcfg).run(instrumented)
     // RowConstraintCheck scans the input twice (violations write + verdict
     // aggregation) and the folded row_count aggregation adds one; commit
     // metadata is then served from the row_count cache. The old pipeline's
     // dedicated eager pre-count job made this 4x.
     assert(acc.value == 3 * cfg.rows,
       s"input scanned ${acc.value.toDouble / cfg.rows}x — expected exactly 3x")
+    // the result's frames read the written tables, not the check plans
+    r.violations.collect()
+    r.verdicts.collect()
+    assert(acc.value == 3 * cfg.rows,
+      s"reading the result scanned the input: ${acc.value.toDouble / cfg.rows}x")
   }
 
   test("tokens remain byte-identical through validation") {
