@@ -78,6 +78,19 @@ object PlanAudit {
     audit("ksDrift", KsDriftCheck("n_chars",
       docs.where(col("doc_id") % 2 === 0))
       .run(docs.withColumn("part", lit(0))).verdicts)
+    // the verdict plans of the checks whose violations the token-table
+    // section shows, and of the two profile-sketch drift checks
+    val parted = docs.withColumn("part", (col("doc_id") % 4).cast("int"))
+    audit("uniquenessVerdicts", UniquenessCheck("doc_id").run(parted).verdicts)
+    audit("referentialVerdicts", ReferentialCheck("lang",
+      docs.where(col("lang") === "en").select("lang"), "lang", activeCol = None)
+      .run(parted).verdicts)
+    audit("sketchDrift", SketchDriftCheck("n_chars",
+      SketchDriftCheck.buildProfile(docs.where(col("doc_id") % 2 === 0), "n_chars"))
+      .run(parted).verdicts)
+    audit("freqDrift", FreqDriftCheck("lang",
+      FreqDriftCheck.buildProfile(docs.where(col("doc_id") % 2 === 0), "lang"),
+      threshold = 100.0).run(parted).verdicts)
     audit("suggestProfile", SuggestConstraints.profile(docs,
       Seq("doc_id", "lang", "n_chars")))
     val pivots = emb.where(col("vec_id") < 8).orderBy("vec_id")

@@ -16,6 +16,13 @@ import org.apache.spark.sql.types._
   */
 final case class CheckResult(violations: DataFrame, verdicts: DataFrame)
 
+/** The contract is lazy: `run` builds plans and starts no Spark job, so
+  * its frames run only when the caller acts on them, and the caller's
+  * actions (a write, a collect) decide how often the input is read. The
+  * verdict parts are the parts of the rows `run` is given: one verdict
+  * row per part of the input and verdict name, including a part with no
+  * violation, as jsen's `validate(data)` judges exactly the instance it
+  * is given (jsen `lib/jsen.js:1069-1073`). */
 trait Check extends Serializable {
   def name: String
   def run(df: DataFrame): CheckResult
@@ -28,18 +35,6 @@ trait Check extends Serializable {
     * a persisted mergeable key-count sketch per partition — keeps the
     * same Check interface; this flag is the contract either way.) */
   def isGlobal: Boolean = false
-
-  /** Inject the partition universe as a LAZY (typically cached)
-    * DataFrame with one `part` column (e.g. from a table catalog, or a
-    * literal list as `parts.toDF("part")`). Standalone `run(df)`
-    * discovers partitions itself (a distinct scan of the partition
-    * column). The pipeline uses this hook to fold discovery into the
-    * verdict write job — one shared cached subtree, zero dedicated
-    * upfront jobs — rather than running an eager discovery scan before
-    * any check starts. Custom checks that need a partition universe
-    * should override it. Default: ignore (checks that aggregate
-    * `groupBy(part)` directly never discover). */
-  def withPartsUniverse(parts: DataFrame): Check = this
 }
 
 object Check {
@@ -62,31 +57,19 @@ object Check {
     StructField("violation_count", LongType),
     StructField("metric_value", DoubleType)))
 
-  /** Verdict frame builder: every partition of the universe (`universe`,
-    * else those present in `df`) gets a verdict row even when it has zero
-    * violations (absent partitions must read as passed, not as missing).
-    * `perPart` carries (part, violation_count [, metric_value]). */
-  def verdictsFromCounts(df: DataFrame, perPart: DataFrame, checkName: String,
-                         metricValue: Column = lit(null).cast(DoubleType),
-                         partCol: String = PartCol,
-                         universe: Option[DataFrame] = None): DataFrame = {
-    // the injected universe, else a distinct scan of the partition
-    // column, normalized to the canonical name so a check configured
-    // with partCol="day" builds the right universe
-    val parts = universe.map(_.toDF(partCol))
-      .getOrElse(df.select(col(partCol)).distinct())
-      .select(col(partCol).as(PartCol))
-    val counts = perPart.withColumnRenamed("part", "vpart")
-    parts.join(counts, parts(PartCol) === counts("vpart"), "left")
+  /** Count verdicts from one marked frame: per part of `marked`, the
+    * number of rows where `violating` holds (a NULL mark is no violation),
+    * so a part without violations reads passed with a count of 0. */
+  def countVerdicts(marked: DataFrame, violating: Column, checkName: String,
+                    partCol: String = PartCol): DataFrame =
+    marked.groupBy(col(partCol).as(PartCol))
+      .agg(count(when(violating, lit(1))).as("violation_count"))
       .select(
         col(PartCol),
         lit(checkName).as("check"),
-        (coalesce(col("violation_count"), lit(0L)) === 0L).as("passed"),
-        coalesce(col("violation_count"), lit(0L)).as("violation_count"),
-        (if (perPart.columns.contains("metric_value"))
-           coalesce(col("metric_value"), lit(null).cast(DoubleType))
-         else metricValue).as("metric_value"))
-  }
+        (col("violation_count") === 0L).as("passed"),
+        col("violation_count"),
+        lit(null).cast(DoubleType).as("metric_value"))
 
   def emptyViolations(spark: org.apache.spark.sql.SparkSession): DataFrame =
     empty(spark, violationsSchema)

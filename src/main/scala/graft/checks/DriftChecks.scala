@@ -40,19 +40,15 @@ final case class KsDriftCheck(
     reference: DataFrame,
     threshold: Double = 0.05,
     bin: Column => Column = identity,
-    partCol: String = Check.PartCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    partCol: String = Check.PartCol) extends Check {
 
   val name = s"drift_ks:$column"
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
-    val keyed = df.where(col(column).isNotNull)
-      .select(col(partCol).as("part"), bin(col(column)).as("key"))
-    val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
+    val keyed = df.select(col(partCol).as("part"), KeyCountDrift.binned(column, bin).as("key"))
+    val refKeys = reference.select(KeyCountDrift.binned(column, bin).as("key"))
     val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, partCol, partsUniverse), "ks_drift", KeyCountDrift.ks)
+      "ks_drift", KeyCountDrift.ks)
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
@@ -73,22 +69,23 @@ final case class Chi2DriftCheck(
     refKeyExpr: Column,
     threshold: Double,
     keyTransform: Column => Column = identity,
-    partCol: String = Check.PartCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    partCol: String = Check.PartCol) extends Check {
 
   val name = s"drift_chi2:$keyName"
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
     // generators (explode) must be top-level in a select; the transform
     // (e.g. bucketing `% B`) is applied in a second projection
-    val keyed = df.select(col(partCol).as("part"), keyExpr.as("key0"))
+    val keys = df.select(col(partCol).as("part"), keyExpr.as("key0"))
       .select(col("part"), keyTransform(col("key0")).as("key"))
+    // a generator key drops rows (explode of an empty array), so every
+    // input row's part is added once more with a NULL key, which the
+    // aggregate merges into the part's buffer without counting it
+    val keyed = keys.unionByName(df.select(col(partCol).as("part"),
+      lit(null).cast(keys.schema("key").dataType).as("key")))
     val refKeys = reference.select(refKeyExpr.as("key0"))
       .select(keyTransform(col("key0")).as("key"))
-    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, partCol, partsUniverse), "chi2_drift",
+    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys, "chi2_drift",
       KeyCountDrift.termSum((o, n, p) => math.pow(o - p * n, 2) / math.max(p * n, 0.5)))
     CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
@@ -114,21 +111,16 @@ final case class PsiDriftCheck(
     threshold: Double = 0.25,
     bin: Column => Column = identity,
     epsilon: Double = 1e-6,
-    partCol: String = Check.PartCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    partCol: String = Check.PartCol) extends Check {
 
   require(epsilon > 0.0, "epsilon must be positive (keeps PSI finite)")
   val name = s"drift_psi:$column"
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
-    val keyed = df.where(col(column).isNotNull)
-      .select(col(partCol).as("part"), bin(col(column)).as("key"))
-    val refKeys = reference.where(col(column).isNotNull).select(bin(col(column)).as("key"))
+    val keyed = df.select(col(partCol).as("part"), KeyCountDrift.binned(column, bin).as("key"))
+    val refKeys = reference.select(KeyCountDrift.binned(column, bin).as("key"))
     val eps = epsilon
-    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      KeyCountDrift.universe(df, partCol, partsUniverse), "psi_drift",
+    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys, "psi_drift",
       KeyCountDrift.termSum { (o, n, p) =>
         val q = math.max(o / math.max(n, 1.0), eps)
         val r = math.max(p, eps)
@@ -141,26 +133,24 @@ final case class PsiDriftCheck(
 /** The plan shared by the three drift checks. Per part it scores the
   * part's `key_counts` buffer against the reference's:
   *
-  *  - `keyed` (part, key) rows, NULL parts and NULL keys dropped, and the
-  *    universe's parts as NULL keys, feed one `groupBy(part)` aggregate
-  *    of `key_counts(key)` and `count(key)` = n. Universe parts with no
-  *    rows thus get an empty buffer without a join, and the input is
-  *    shuffled once, on `part`;
+  *  - `keyed` (part, key) rows carry every input row's part, a NULL key
+  *    where the row has no key. NULL parts are dropped, and one
+  *    `groupBy(part)` aggregate of `key_counts(key)` and `count(key)` = n,
+  *    both of which skip NULL keys, gives each part its buffer, empty for
+  *    a part without keys. The input is shuffled once, on `part`;
   *  - the reference keys, cast to the observed key type, are one
   *    `key_counts` row crossed in as a broadcast;
   *  - a [[graft.sketch.KeyCountsScore]] expression computes the metric.
   *
   * Verdict parts are the observed parts (n > 0) plus, when the reference
-  * is non-empty, every part of the universe. */
+  * is non-empty, every part of the input. */
 private object KeyCountDrift {
   type Score = (SortedKeyCounts, SortedKeyCounts) => Double
 
-  /** The universe to score: the injected one, else the input's own part
-    * column, whose duplicates the per-part aggregate merges (no distinct
-    * scan of its own). */
-  def universe(df: DataFrame, partCol: String,
-               partsUniverse: Option[DataFrame]): DataFrame =
-    partsUniverse.getOrElse(df.select(col(partCol))).toDF("part")
+  /** The binned column as a key, NULL where the column is NULL (a bin
+    * such as `coalesce` must not turn a NULL value into a key). */
+  def binned(column: String, bin: Column => Column): Column =
+    when(col(column).isNotNull, bin(col(column)))
 
   /** Per part, Σ over the union of keys of `term(o, n, p)`: `o` the
     * part's count of the key, `n` the part's total, `p` the key's
@@ -190,11 +180,9 @@ private object KeyCountDrift {
   }
 
   def verdicts(name: String, threshold: Double, keyed: DataFrame, refKeys: DataFrame,
-               universe: DataFrame, scoreName: String, score: Score): DataFrame = {
+               scoreName: String, score: Score): DataFrame = {
     val keyType = keyed.schema("key").dataType
-    val obs = keyed.where(col("part").isNotNull && col("key").isNotNull)
-      .unionByName(universe.where(col("part").isNotNull)
-        .select(col("part"), lit(null).cast(keyType).as("key")))
+    val obs = keyed.where(col("part").isNotNull)
       .groupBy("part").agg(key_counts(col("key")).as("o"), count(col("key")).as("n"))
     val ref = refKeys.select(col("key").cast(keyType).as("key"))
       .agg(key_counts(col("key")).as("r"), count(col("key")).as("rn"))

@@ -1,7 +1,7 @@
 package graft.checks
 
 import graft.sketch.{FreqFunctions, FreqSketch}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -10,9 +10,11 @@ import org.apache.spark.sql.types._
   * serialized [[FreqSketch]] (built once from a clean sample, stored in
   * the profile/checkpoint table), the observed side aggregates one
   * bounded sketch per partition (partial+final hash agg; the shuffle
-  * carries blobs, never the category key space), and a chi²-style
-  * statistic over the PROFILE's categories is computed driver-side on
-  * the collected blobs.
+  * carries blobs, never the category key space), and `freq_chi2` scores
+  * each part's sketch with a chi²-style statistic over the PROFILE's
+  * categories in the same plan, as
+  * [[graft.streaming.StreamingValidation.windowedFreqDrift]] does per
+  * window.
   *
   * Cells are the profile's surviving categories PLUS an "other" cell
   * holding the mass outside them (totalSeen − Σ entries, both sides), so
@@ -40,31 +42,11 @@ final case class FreqDriftCheck(
   val name = s"drift_freq_chi2:$column"
 
   def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val ref = FreqSketch.deserialize(referenceSketch)
-
-    val perPart = df
-      .where(col(partCol).isNotNull)
-      .groupBy(col(partCol).cast(IntegerType).as("part"))
-      .agg(FreqFunctions.freq_sketch(col(column).cast(StringType), capacity)
-        .as("sketch"))
-      .collect()
-
-    val rows = perPart.toSeq.filterNot(_.isNullAt(0)).map { r =>
-      val obs = FreqSketch.deserialize(r.getAs[Array[Byte]]("sketch"))
-      val chi2 = FreqDriftCheck.chiSquare(obs, ref)
-      Row(r.getInt(0), name, chi2 <= threshold, 0L, chi2)
-    }
-
-    val schema = StructType(Seq(
-      StructField("part", IntegerType),
-      StructField("check", StringType),
-      StructField("passed", BooleanType),
-      StructField("violation_count", LongType),
-      StructField("metric_value", DoubleType)))
-    import scala.jdk.CollectionConverters._
-    CheckResult(Check.emptyViolations(spark),
-      spark.createDataFrame(rows.asJava, schema))
+    FreqSketch.deserialize(referenceSketch) // validate the profile before shipping
+    CheckResult(Check.emptyViolations(df.sparkSession),
+      SketchDriftCheck.profileVerdicts(df, partCol, name, threshold,
+        FreqFunctions.freq_sketch(col(column).cast(StringType), capacity),
+        FreqFunctions.freq_chi2(_, lit(referenceSketch))))
   }
 }
 

@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   * is a DEFINITE violation; a false positive (≈ `fpp`) lets a violation
   * escape the screen. Production shape: run this screen over the full
   * fact table, then confirm/complete with [[ReferentialCheck]]'s exact
-  * anti-join only where exactness is required — the blob also persists
+  * broadcast join only where exactness is required — the blob also persists
   * via [[graft.pipeline.IndexStore]] (kind "bloom") so later runs skip
-  * the dimension aggregation entirely ([[fromBlob]]). */
+  * the dimension aggregation entirely ([[ReferentialBloomCheck.FromBlob]]). */
 final case class ReferentialBloomCheck(
     fkCol: String,
     dim: DataFrame,
@@ -26,12 +26,9 @@ final case class ReferentialBloomCheck(
     fpp: Double = 0.001,
     activeCol: Option[String] = Some("active"),
     partCol: String = Check.PartCol,
-    idCol: String = Check.IdCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    idCol: String = Check.IdCol) extends Check {
 
   val name = "referential_bloom"
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   /** One aggregation over the dimension → the serialized filter.
     * Driver-held and bounded by the sized bit count, not the key count's
@@ -45,9 +42,11 @@ final case class ReferentialBloomCheck(
       col(dimKeyCol).cast("string"), expectedKeys, fpp)).head().getAs[Array[Byte]](0)
   }
 
+  /** Builds the filter eagerly (a job over the dimension only), then
+    * returns [[ReferentialBloomCheck.FromBlob]]'s lazy plans. */
   def run(df: DataFrame): CheckResult =
-    ReferentialBloomCheck.fromBlob(buildFilter(), fkCol, dimKeyCol,
-      partCol, idCol, partsUniverse).run(df)
+    ReferentialBloomCheck.FromBlob(buildFilter(), fkCol, dimKeyCol,
+      partCol, idCol).run(df)
 }
 
 object ReferentialBloomCheck {
@@ -59,18 +58,17 @@ object ReferentialBloomCheck {
       fkCol: String,
       dimKeyCol: String,
       partCol: String = Check.PartCol,
-      idCol: String = Check.IdCol,
-      partsUniverse: Option[DataFrame] = None) extends Check {
+      idCol: String = Check.IdCol) extends Check {
 
     val name = "referential_bloom"
-    override def withPartsUniverse(parts: DataFrame): Check =
-      copy(partsUniverse = Some(parts))
 
     def run(df: DataFrame): CheckResult = {
       BloomSketch.deserialize(blob) // validate geometry before shipping
+      // a row whose key the filter cannot contain is a definite violation;
+      // a NULL key probes to NULL and is none
+      val missing = !BloomFunctions.bloom_contains(lit(blob), col(fkCol).cast("string"))
       val violations = df
-        .where(!BloomFunctions.bloom_contains(lit(blob),
-          col(fkCol).cast("string")))
+        .where(missing)
         .select(
           col(partCol).as("part"),
           col(idCol).cast("string").as("doc_id"),
@@ -79,15 +77,7 @@ object ReferentialBloomCheck {
           lit(s"value not in dimension '$dimKeyCol' (bloom-definite)").as("message"),
           col(fkCol).cast("string").as("additional_properties"),
           lit(name).as("check"))
-      val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
-      CheckResult(violations,
-        Check.verdictsFromCounts(df, perPart, name,
-          partCol = partCol, universe = partsUniverse))
+      CheckResult(violations, Check.countVerdicts(df, missing, name, partCol))
     }
   }
-
-  def fromBlob(blob: Array[Byte], fkCol: String, dimKeyCol: String,
-               partCol: String = Check.PartCol, idCol: String = Check.IdCol,
-               partsUniverse: Option[DataFrame] = None): FromBlob =
-    FromBlob(blob, fkCol, dimKeyCol, partCol, idCol, partsUniverse)
 }

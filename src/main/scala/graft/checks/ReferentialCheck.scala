@@ -4,11 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Referential-integrity check: fact FK ⊆ allowed dimension keys, via an
-  * explicit broadcast anti-join (SURVEY.md §2.8) — the table-level analog
+  * explicit broadcast join (SURVEY.md §2.8) — the table-level analog
   * of jsen's `enum` against a dynamic, externally-supplied value set
   * (the `options.schemas` registry re-expressed as a dimension table).
   *
-  * The dimension is broadcast: at 10^12 fact rows the anti-join stays a
+  * The dimension is broadcast: at 10^12 fact rows the join stays a
   * map-side hash probe with zero shuffle of the fact table. Rows with
   * `active = false` in the dimension count as violations too
   * (FIXTURES.md §2).
@@ -19,12 +19,9 @@ final case class ReferentialCheck(
     dimKeyCol: String,
     activeCol: Option[String] = Some("active"),
     partCol: String = Check.PartCol,
-    idCol: String = Check.IdCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    idCol: String = Check.IdCol) extends Check {
 
   val name = "referential"
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
     val allowed0 = activeCol match {
@@ -32,9 +29,14 @@ final case class ReferentialCheck(
       case _ => dim
     }
     val allowed = allowed0.select(col(dimKeyCol).as(fkCol)).distinct()
+      .withColumn("_allowed", lit(true))
 
-    val violations = df
-      .join(broadcast(allowed), Seq(fkCol), "left_anti")
+    // every row marked by a left join to the allowed keys: an unmarked row
+    // (a NULL or unknown key) is a violation, and the verdict aggregate
+    // sees every part of the input
+    val marked = df.join(broadcast(allowed), Seq(fkCol), "left")
+    val violations = marked
+      .where(col("_allowed").isNull)
       .select(
         col(partCol).as("part"),
         col(idCol).cast("string").as("doc_id"),
@@ -44,9 +46,7 @@ final case class ReferentialCheck(
         col(fkCol).cast("string").as("additional_properties"),
         lit(name).as("check"))
 
-    val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
     CheckResult(violations,
-      Check.verdictsFromCounts(df, perPart, name,
-        partCol = partCol, universe = partsUniverse))
+      Check.countVerdicts(marked, col("_allowed").isNull, name, partCol))
   }
 }

@@ -1,7 +1,7 @@
 package graft.checks
 
 import graft.sketch.{functions => gf, KllSketch}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -12,9 +12,11 @@ import org.apache.spark.sql.types._
   * time is the difference between a KB read and a full second pipeline.
   *
   * The observed side aggregates one sketch per partition (partial+final
-  * hash agg, shuffle carries one blob per partition per task); the KS
-  * statistic between two sketches is computed on the collected blobs —
-  * at most `parts × O(k)` driver work on a few KB each.
+  * hash agg, shuffle carries one blob per partition per task), and `kll_ks`
+  * scores each part's sketch against the profile literal in the same plan,
+  * as [[graft.streaming.StreamingValidation.windowedSketchDrift]] does per
+  * window. A part whose column is all NULL has an empty sketch and reads
+  * D = 1 against a non-empty profile.
   */
 final case class SketchDriftCheck(
     column: String,
@@ -26,41 +28,37 @@ final case class SketchDriftCheck(
   val name = s"drift_kll_ks:$column"
 
   def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-    val ref = KllSketch.deserialize(referenceSketch)
-
-    // null partitions are filtered (a NULL group would null-unbox to a
-    // fabricated part-0 verdict) and the partition column is cast to int
-    // explicitly; a non-castable part value fails the job under ANSI mode
-    // (clear error) rather than a driver ClassCastException. The driver
-    // map still skips any cast-produced NULL group defensively (non-ANSI
-    // sessions turn bad strings into NULL instead of throwing).
-    val perPart = df
-      .where(col(partCol).isNotNull)
-      .groupBy(col(partCol).cast(IntegerType).as("part"))
-      .agg(gf.kll_sketch(col(column).cast(DoubleType), k).as("sketch"))
-      .collect()
-
-    val rows = perPart.toSeq.filterNot(_.isNullAt(0)).map { r =>
-      val obs = KllSketch.deserialize(r.getAs[Array[Byte]]("sketch"))
-      val d = KllSketch.ksDistance(obs, ref)
-      Row(r.getInt(0), name, d <= threshold, 0L, d)
-    }
-
-    val schema = StructType(Seq(
-      StructField("part", IntegerType),
-      StructField("check", StringType),
-      StructField("passed", BooleanType),
-      StructField("violation_count", LongType),
-      StructField("metric_value", DoubleType)))
-    import scala.jdk.CollectionConverters._
-    val verdicts = spark.createDataFrame(rows.asJava, schema)
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+    KllSketch.deserialize(referenceSketch) // validate the profile before shipping
+    CheckResult(Check.emptyViolations(df.sparkSession),
+      SketchDriftCheck.profileVerdicts(df, partCol, name, threshold,
+        gf.kll_sketch(col(column).cast(DoubleType), k),
+        gf.kll_ks(_, lit(referenceSketch))))
   }
 }
 
 object SketchDriftCheck {
+  /** The plan of the two profile-sketch drift checks: per part, the
+    * `sketch` aggregate (partial + final, one blob per part per task in
+    * the shuffle), then `score` of it against the profile literal, once
+    * per part and shared by `passed` and `metric_value`. NULL parts are
+    * filtered before and after the int cast: a non-castable part value
+    * fails the job under ANSI mode and turns NULL otherwise, and neither
+    * must become a verdict. */
+  private[checks] def profileVerdicts(df: DataFrame, partCol: String, name: String,
+                                      threshold: Double, sketch: Column,
+                                      score: Column => Column): DataFrame =
+    df.where(col(partCol).isNotNull)
+      .groupBy(col(partCol).cast(IntegerType).as("part"))
+      .agg(sketch.as("sketch"))
+      .where(col("part").isNotNull)
+      .withColumn("_score", score(col("sketch")))
+      .select(
+        col("part"),
+        lit(name).as("check"),
+        (col("_score") <= threshold).as("passed"),
+        lit(0L).as("violation_count"),
+        col("_score").as("metric_value"))
+
   /** Build a reference profile sketch from a clean sample (run once,
     * persist the bytes in the profile/checkpoint table). */
   def buildProfile(df: DataFrame, column: String,

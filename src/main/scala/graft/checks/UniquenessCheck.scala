@@ -20,13 +20,10 @@ import org.apache.spark.sql.functions._
 final case class UniquenessCheck(
     keyCol: String = Check.IdCol,
     saltBuckets: Int = 64,
-    partCol: String = Check.PartCol,
-    partsUniverse: Option[DataFrame] = None) extends Check {
+    partCol: String = Check.PartCol) extends Check {
 
   val name = "uniqueness"
   override def isGlobal: Boolean = true
-  override def withPartsUniverse(parts: DataFrame): Check =
-    copy(partsUniverse = Some(parts))
 
   def run(df: DataFrame): CheckResult = {
     val keyed = df.where(col(keyCol).isNotNull)
@@ -45,11 +42,14 @@ final case class UniquenessCheck(
       .where(col("total") > 1)
       .select(col(keyCol), col("total"))
 
-    // every occurrence of a duplicated key is a violation row; the dup set
-    // is expected to be small relative to the input — let AQE pick a
-    // broadcast join when it is
-    val violations = keyed
-      .join(dups, Seq(keyCol))
+    // every row marked with its key's total when the key is duplicated:
+    // the dup set is expected to be small relative to the input — let AQE
+    // pick a broadcast join when it is (when it is not, AQE's skew-join
+    // split covers a part full of NULL keys). The left join keeps every
+    // row, so the verdict aggregate sees every part of the input.
+    val marked = df.join(dups, Seq(keyCol), "left")
+    val violations = marked
+      .where(col("total").isNotNull)
       .select(
         col(partCol).as("part"),
         col(keyCol).cast("string").as("doc_id"),
@@ -59,9 +59,7 @@ final case class UniquenessCheck(
         lit(null).cast("string").as("additional_properties"),
         lit(name).as("check"))
 
-    val perPart = violations.groupBy("part").agg(count(lit(1)).as("violation_count"))
     CheckResult(violations,
-      Check.verdictsFromCounts(df, perPart, name,
-        partCol = partCol, universe = partsUniverse))
+      Check.countVerdicts(marked, col("total").isNotNull, name, partCol))
   }
 }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.json._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, LinkOption, NotDirectoryException, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Per-partition commit log for resumable validation runs (SURVEY.md §2.8,
@@ -22,8 +22,18 @@ final case class PartCommit(
 final class Checkpoint(dir: String) {
   private val commitsDir: Path = Paths.get(dir, "commits")
 
+  /** Whether the commits directory exists; throws, naming the path, when
+    * something else is there, so a damaged checkpoint fails before a run
+    * starts its first job. */
+  private def hasCommits: Boolean = {
+    val isDir = Files.isDirectory(commitsDir)
+    if (!isDir && Files.exists(commitsDir, LinkOption.NOFOLLOW_LINKS))
+      throw new NotDirectoryException(s"$commitsDir: checkpoint commits path is not a directory")
+    isDir
+  }
+
   def committedParts(): Set[Int] = {
-    if (!Files.isDirectory(commitsDir)) return Set.empty
+    if (!hasCommits) return Set.empty
     Files.list(commitsDir).iterator().asScala
       .map(_.getFileName.toString)
       .collect { case s if s.startsWith("part=") && s.endsWith(".json") =>
@@ -32,7 +42,7 @@ final class Checkpoint(dir: String) {
   }
 
   def readCommits(): Seq[PartCommit] = {
-    if (!Files.isDirectory(commitsDir)) return Seq.empty
+    if (!hasCommits) return Seq.empty
     Files.list(commitsDir).iterator().asScala.toSeq
       .filter(p => p.getFileName.toString.endsWith(".json"))
       .sortBy(_.getFileName.toString)

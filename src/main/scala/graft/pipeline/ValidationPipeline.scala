@@ -111,18 +111,17 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
     }
 
     // Per-partition row counts, LAZY and cached: the aggregation runs
-    // inside the verdict write job (one shared subtree, cached for the
-    // other consumers below) instead of a dedicated eager full-input
-    // pre-count job — at 10^12 rows that job was a whole extra pass made
-    // solely for commit metadata. The same frame doubles as (a) the
-    // `row_count` verdict rows, (b) the partition universe injected into
-    // every check, and (c) the commit metadata collected from cache after
-    // the writes.
+    // inside the verdict write job instead of a dedicated eager
+    // full-input pre-count job — at 10^12 rows that job was a whole extra
+    // pass made solely for commit metadata. The frame is (a) the
+    // `row_count` verdict rows and (b) the commit metadata, collected
+    // from the cache after the writes. The parts to commit come from this
+    // run's input, not from the written verdicts, which can still hold
+    // parts that a crashed run wrote before the input lost them.
     val rowCounts = pending
       .groupBy(col(cfg.partCol).cast("int").as("part"))
       .agg(count(lit(1)).as("n_rows"))
       .persist()
-    val universe = rowCounts.select(col("part"))
     val rowCountVerdicts = rowCounts.select(
       col("part"),
       lit("row_count").as("check"),
@@ -136,8 +135,8 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
       val t0 = System.nanoTime()
       // global checks see the full input (cross-partition semantics) but
       // report only for uncommitted partitions; local checks scan pending
-      // only. The universe frame is injected so no check repeats discovery.
-      val results: Seq[CheckResult] = checks.map(_.withPartsUniverse(universe)).map { c =>
+      // only. Each check's verdict parts are the parts of what it reads.
+      val results: Seq[CheckResult] = checks.map { c =>
         if (c.isGlobal && committed.nonEmpty) {
           val r = c.run(input)
           CheckResult(

@@ -121,8 +121,10 @@ final case class KllCdf(child: Expression, points: Seq[Double])
 /** `kll_ks(sketch_a, sketch_b)` — scalar: two-sample Kolmogorov–Smirnov
   * distance between two serialized sketches. Lets drift-vs-profile run
   * INSIDE a plan (e.g. per streaming window against a broadcast profile
-  * literal) instead of collecting blobs to the driver. Runs on aggregated
-  * rows only — never per input row. */
+  * literal) instead of collecting blobs to the driver. An empty sketch
+  * reads 1.0 against a non-empty one and 0.0 against an empty one, as
+  * [[KllSketch.ksDistance]] does. Runs on aggregated rows only — never
+  * per input row. */
 final case class KllKsDistance(
     left: org.apache.spark.sql.catalyst.expressions.Expression,
     right: org.apache.spark.sql.catalyst.expressions.Expression)
@@ -140,12 +142,10 @@ final case class KllKsDistance(
         s"kll_ks requires two binary sketches, got ${l.simpleString}, ${r.simpleString}")
     }
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = KllSketch.deserialize(l.asInstanceOf[Array[Byte]])
-    val b = KllSketch.deserialize(r.asInstanceOf[Array[Byte]])
-    if (a.isEmpty || b.isEmpty) null
-    else KllSketch.ksDistance(a, b)
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    KllSketch.ksDistance(
+      KllSketch.deserialize(l.asInstanceOf[Array[Byte]]),
+      KllSketch.deserialize(r.asInstanceOf[Array[Byte]]))
 
   override protected def withNewChildrenInternal(
       newLeft: org.apache.spark.sql.catalyst.expressions.Expression,

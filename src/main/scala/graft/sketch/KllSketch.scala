@@ -223,7 +223,9 @@ object KllSketch {
   }
 
   /** Two-sample Kolmogorov–Smirnov distance between two sketches:
-    * max |cdf1 - cdf2| over the union of tracked support points. */
+    * max |cdf1 - cdf2| over the union of tracked support points. An empty
+    * sketch reads 1.0 against a non-empty one (no mass where the other
+    * has all of it) and 0.0 against an empty one. */
   def ksDistance(a: KllSketch, b: KllSketch): Double = {
     if (a.isEmpty || b.isEmpty) return if (a.isEmpty && b.isEmpty) 0.0 else 1.0
     val support = (a.supportPoints ++ b.supportPoints).distinct.sorted

@@ -88,7 +88,7 @@ class BloomSpec extends SparkSpec {
     val (loaded, kind, colName) = graft.pipeline.IndexStore.loadProfile(dir)
     assert(kind == "bloom" && colName == "key")
     val fact = (0 until 2000).map(i => s"d$i").toDF("fk")
-    val flagged = ReferentialBloomCheck.fromBlob(loaded, "fk", "key",
+    val flagged = ReferentialBloomCheck.FromBlob(loaded, "fk", "key",
       idCol = "fk").run(fact.withColumn("part", lit(0)))
     val got = flagged.violations.select("additional_properties")
       .collect().map(_.getString(0)).toSet

@@ -20,8 +20,8 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   /** Per part, Σ over the union of keys of term(o, n, p). Verdict parts:
-    * the parts with an observed key, plus the universe when the
-    * reference is non-empty. */
+    * the parts with an observed key, plus every input part (`universe`)
+    * when the reference is non-empty. */
   def expected(obs: Seq[(Int, Any)], ref: Seq[Any], universe: Seq[Int],
                term: (Double, Double, Double) => Double): Map[Int, Double] = {
     val refCounts = ref.groupBy(identity).view.mapValues(_.size.toDouble).toMap
@@ -84,14 +84,6 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // an empty reference: only the observed parts get verdicts
     assertParity(metrics(chi2(refDf.where(lit(false))).run(obsDf).verdicts),
       expected(observedKeys, Nil, Seq(0, 1, 2), chi2Term), "chi2 empty reference")
-    // an injected universe with a part (9) that has no rows
-    val universe = Seq(0, 1, 2, 9)
-    assertParity(
-      metrics(chi2(refDf).withPartsUniverse(universe.toDF("part")).run(obsDf).verdicts),
-      expected(observedKeys, refKeys, universe, chi2Term), "chi2 universe")
-    // a universe frame whose one column is not named `part`
-    assertParity(metrics(chi2(refDf).withPartsUniverse(universe.toDF("p")).run(obsDf).verdicts),
-      expected(observedKeys, refKeys, universe, chi2Term), "chi2 universe column name")
   }
 
   test("chi2 equals the term-for-term sum on bucketed token histograms") {
@@ -132,10 +124,6 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       expected(obsBins, refBins, Seq(0, 1, 2), psiTerm(eps)), "psi")
     assertParity(metrics(psi(ref.where(lit(false))).run(obs).verdicts),
       expected(obsBins, Nil, Seq(0, 1, 2), psiTerm(eps)), "psi empty reference")
-    val universe = Seq(0, 1, 2, 9)
-    assertParity(
-      metrics(psi(ref).withPartsUniverse(universe.toDF("part")).run(obs).verdicts),
-      expected(obsBins, refBins, universe, psiTerm(eps)), "psi universe")
   }
 
   /** Doubles as grouping keys the way Spark groups them: −0.0 is 0.0 and
@@ -147,14 +135,13 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("chi2 and PSI term-for-term parity: string keys, doubles with -0.0 and NaN") {
     val eps = 1e-6
-    val universe = Seq(0, 1, 2, 9)
     def check(label: String, obs: DataFrame, ref: DataFrame,
               obsKeys: Seq[(Int, Any)], refKeys: Seq[Any]): Unit = {
+      val universe = Seq(0, 1, 2) // both inputs' parts
       val chi = Chi2DriftCheck("k", col("k"), ref, col("k"), threshold = 10.0)
-        .withPartsUniverse(universe.toDF("part"))
       assertParity(metrics(chi.run(obs).verdicts),
         expected(obsKeys, refKeys, universe, chi2Term), s"chi2 $label")
-      val psi = PsiDriftCheck("k", ref, epsilon = eps).withPartsUniverse(universe.toDF("part"))
+      val psi = PsiDriftCheck("k", ref, epsilon = eps)
       assertParity(metrics(psi.run(obs).verdicts),
         expected(obsKeys, refKeys, universe, psiTerm(eps)), s"psi $label")
     }
@@ -199,15 +186,11 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val obs = obsRows.toDF("part", "v")
     val ref = refVals.toDF("v")
     val obsKeys = obsRows.collect { case (p, Some(v)) => p -> v }
-    val universe = Seq(0, 1, 2, 9)
-    val got = metrics(KsDriftCheck("v", ref).withPartsUniverse(universe.toDF("part"))
-      .run(obs).verdicts)
-    assert(got == expectedKs(obsKeys, refVals, universe))
-    assert(got(9) == 1.0 && got(2) == 1.0, s"parts without values must read D = 1: $got")
-    assert(metrics(KsDriftCheck("v", ref).run(obs).verdicts) ==
-      expectedKs(obsKeys, refVals, Seq(0, 1, 2)))
+    val got = metrics(KsDriftCheck("v", ref).run(obs).verdicts)
+    assert(got == expectedKs(obsKeys, refVals, Seq(0, 1, 2)))
+    assert(got(2) == 1.0, s"a part without values must read D = 1: $got")
     assert(metrics(KsDriftCheck("v", ref.where(lit(false))).run(obs).verdicts) ==
-      expectedKs(obsKeys, Nil, universe))
+      expectedKs(obsKeys, Nil, Seq(0, 1, 2)))
   }
 
   test("KS equals an exact two-sample D on double bins with -0.0, 0.0 and NaN") {
@@ -263,10 +246,9 @@ class DriftParitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       Chi2DriftCheck("cat", col("cat"), ref, col("cat"), threshold = 10.0),
       PsiDriftCheck("v", ref),
       KsDriftCheck("v", ref))
-    for (check <- checks; universe <- Seq(false, true)) {
-      val label = s"${check.name}${if (universe) " with universe" else ""}"
-      val verdicts = (if (universe) check.withPartsUniverse(Seq(0, 1, 2, 3, 9).toDF("part"))
-        else check).run(input).verdicts
+    for (check <- checks) {
+      val label = check.name
+      val verdicts = check.run(input).verdicts
       verdicts.collect()
       val plan = verdicts.queryExecution.executedPlan
       val inputShuffles = collect(plan) {

@@ -144,4 +144,29 @@ class KllSpec extends SparkSpec {
       .head().getDouble(0)
     assert(sqlD == 0.0, s"self KS distance should be 0, got $sqlD")
   }
+
+  test("kll_ks on an empty sketch: 1.0 against a non-empty one, 0.0 against an empty one") {
+    import graft.sketch.{functions => gf}
+    import org.apache.spark.sql.functions._
+    val df = spark.range(100).select(
+      (col("id") % 2).cast("int").as("part"),
+      when(col("id") % 2 === 0, col("id").cast("double")).as("v")) // part 1 all NULL
+    val empty = KllSketch.empty().serialize()
+    val full = graft.checks.SketchDriftCheck.buildProfile(df, "v")
+    val viaColumn = df.groupBy("part").agg(gf.kll_sketch(col("v")).as("s"))
+      .select(col("part"), gf.kll_ks(col("s"), lit(full)).as("vs_full"),
+        gf.kll_ks(col("s"), lit(empty)).as("vs_empty"))
+      .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    assert(viaColumn(1) == (1.0, 0.0), s"all-NULL part: ${viaColumn(1)}")
+    assert(viaColumn(0)._2 == 1.0, s"non-empty part against an empty sketch: ${viaColumn(0)}")
+    assert(KllSketch.ksDistance(KllSketch.empty(), KllSketch.empty()) == 0.0)
+
+    graft.ext.GraftFunctions.register(spark)
+    df.createOrReplaceTempView("kll_ks_empty_t")
+    val viaSql = spark.sql(
+      """SELECT kll_ks(kll_sketch(IF(part = 1, v, NULL)), kll_sketch(v)),
+                kll_ks(kll_sketch(IF(part = 1, v, NULL)), kll_sketch(IF(part = 1, v, NULL)))
+         FROM kll_ks_empty_t""").head()
+    assert(viaSql.getDouble(0) == 1.0 && viaSql.getDouble(1) == 0.0, s"SQL: $viaSql")
+  }
 }

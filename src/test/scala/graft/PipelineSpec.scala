@@ -91,22 +91,192 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("withPartsUniverse: identical verdicts without the discovery scan") {
-    // the pipeline injects the partition universe so checks skip their
-    // per-check distinct(part) scan of the input — outputs must not change
+  /** The verdict-parts fixture: part 0 holds violations of every kind,
+    * part 1 none, part 2 a NULL in every check's key column, and part 3
+    * only empty token arrays. Read from parquet: the optimizer evaluates a
+    * filter over a local relation while planning, which would count rows
+    * for the lazy-contract test's instrument. */
+  lazy val partsFixture: org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val parts = Seq(0, 1, 2, 3)
-    for (check <- Seq[Check](
-        UniquenessCheck("doc_id"),
-        ReferentialCheck("source", vocab, "source"),
-        KsDriftCheck("n_tok",
-          reference = TokenTable.generate(spark, cfg.copy(seed = 7L)),
-          threshold = 0.05))) {
-      val base = check.run(table).verdicts.orderBy("part", "check").collect()
-      val known = check.withPartsUniverse(parts.toDF("part")).run(table)
-        .verdicts.orderBy("part", "check").collect()
-      assert(base.toSeq == known.toSeq, s"${check.name} diverged with an injected universe")
+    val dir = Files.createTempDirectory("graft-parts-fixture").resolve("t").toString
+    Seq[(Int, Option[String], Option[String], Option[Int], Seq[Int], Option[String])](
+      (0, Some("d1"), Some("web"), Some(3), Seq(1, 2, 3), Some("a")),
+      (0, Some("d1"), Some("rogue"), Some(12), Seq(4, 500), Some("b")),
+      (0, Some("d2"), Some("old"), Some(0), Seq(7), Some("z")),
+      (0, Some("d3"), Some("book"), Some(5), Seq(2, 2), Some("a")),
+      (1, Some("d4"), Some("web"), Some(2), Seq(1, 9), Some("a")),
+      (1, Some("d5"), Some("book"), Some(4), Seq(3, 3, 8), Some("b")),
+      (1, Some("d6"), Some("web"), Some(7), Seq(5), Some("c")),
+      (2, None, None, None, Seq(1, 2), None),
+      (2, None, None, None, Seq(6), None),
+      (3, Some("d2"), Some("web"), Some(1), Seq.empty[Int], Some("a")),
+      (3, Some("d8"), Some("book"), Some(9), Seq.empty[Int], Some("c"))
+    ).toDF("part", "doc_id", "source", "n_tok", "tokens", "cat").write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  lazy val partsDim: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq("web" -> true, "book" -> true, "old" -> false).toDF("source", "active")
+  }
+
+  lazy val partsRef: org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    Seq[(Option[Int], Seq[Int], Option[String])](
+      (Some(2), Seq(1, 2), Some("a")), (Some(3), Seq(2, 3), Some("a")),
+      (Some(5), Seq(5, 9), Some("b")), (Some(8), Seq(1), Some("c")),
+      (Some(4), Seq(7, 7), Some("b")), (None, Seq.empty[Int], None)
+    ).toDF("n_tok", "tokens", "cat")
+  }
+
+  val partsSpec: String =
+    """{"type":"object","required":["doc_id"],
+        "properties":{"n_tok":{"type":"integer","minimum":1},
+          "tokens":{"type":"array","items":{"type":"integer","minimum":0,"maximum":99}}}}"""
+
+  /** One of each `Check` implementation in the library, over the fixture's
+    * columns, reading `dim` as the referential dimension. */
+  def everyCheck(dim: org.apache.spark.sql.DataFrame): Seq[Check] = Seq(
+    RowConstraintCheck(Validator(partsSpec)),
+    UniquenessCheck("doc_id"),
+    ReferentialCheck("source", dim, "source"),
+    ReferentialBloomCheck("source", dim, "source", expectedKeys = 16),
+    ReferentialBloomCheck.FromBlob(
+      ReferentialBloomCheck("source", partsDim, "source", expectedKeys = 16).buildFilter(),
+      "source", "source"),
+    StatsCheck(Seq(
+      ColumnStatsSpec("n_tok", min = Some(1), quantiles = Seq(0.5)),
+      ColumnStatsSpec("doc_id", maxNullRate = Some(0.5)))),
+    KsDriftCheck("n_tok", partsRef),
+    Chi2DriftCheck("tokens", explode(col("tokens")), partsRef, explode(col("tokens")),
+      threshold = 1e6),
+    PsiDriftCheck("n_tok", partsRef, bin = c => floor(c / lit(4)).cast("long")),
+    SketchDriftCheck("n_tok", SketchDriftCheck.buildProfile(partsRef, "n_tok")),
+    FreqDriftCheck("cat", FreqDriftCheck.buildProfile(partsRef, "cat"), threshold = 10.0))
+
+  /** (passed, violation_count, metric_value) */
+  type Verdict = (Boolean, Long, Option[Double])
+
+  /** `everyCheck`'s verdicts on `partsFixture`, one entry per (check
+    * class, part, verdict name). */
+  val partsVerdicts: Map[(String, Int, String), Verdict] = Map(
+    ("RowConstraintCheck", 0, "row_constraint") -> (false, 2L, Some(0.5)),
+    ("RowConstraintCheck", 1, "row_constraint") -> (true, 0L, Some(1.0)),
+    ("RowConstraintCheck", 2, "row_constraint") -> (false, 2L, Some(0.0)),
+    ("RowConstraintCheck", 3, "row_constraint") -> (true, 0L, Some(1.0)),
+    ("UniquenessCheck", 0, "uniqueness") -> (false, 3L, None),
+    ("UniquenessCheck", 1, "uniqueness") -> (true, 0L, None),
+    ("UniquenessCheck", 2, "uniqueness") -> (true, 0L, None),
+    ("UniquenessCheck", 3, "uniqueness") -> (false, 1L, None),
+    ("ReferentialCheck", 0, "referential") -> (false, 2L, None),
+    ("ReferentialCheck", 1, "referential") -> (true, 0L, None),
+    ("ReferentialCheck", 2, "referential") -> (false, 2L, None),
+    ("ReferentialCheck", 3, "referential") -> (true, 0L, None),
+    ("ReferentialBloomCheck", 0, "referential_bloom") -> (false, 2L, None),
+    ("ReferentialBloomCheck", 1, "referential_bloom") -> (true, 0L, None),
+    ("ReferentialBloomCheck", 2, "referential_bloom") -> (true, 0L, None),
+    ("ReferentialBloomCheck", 3, "referential_bloom") -> (true, 0L, None),
+    ("FromBlob", 0, "referential_bloom") -> (false, 2L, None),
+    ("FromBlob", 1, "referential_bloom") -> (true, 0L, None),
+    ("FromBlob", 2, "referential_bloom") -> (true, 0L, None),
+    ("FromBlob", 3, "referential_bloom") -> (true, 0L, None),
+    ("StatsCheck", 0, "stats:doc_id") -> (true, 0L, Some(0.0)),
+    ("StatsCheck", 0, "stats:n_tok") -> (false, 0L, Some(0.0)),
+    ("StatsCheck", 0, "stats:n_tok:q0.5") -> (true, 0L, Some(3.0)),
+    ("StatsCheck", 1, "stats:doc_id") -> (true, 0L, Some(0.0)),
+    ("StatsCheck", 1, "stats:n_tok") -> (true, 0L, Some(0.0)),
+    ("StatsCheck", 1, "stats:n_tok:q0.5") -> (true, 0L, Some(4.0)),
+    ("StatsCheck", 2, "stats:doc_id") -> (false, 2L, Some(1.0)),
+    ("StatsCheck", 2, "stats:n_tok") -> (true, 0L, Some(1.0)),
+    ("StatsCheck", 2, "stats:n_tok:q0.5") -> (true, 0L, None),
+    ("StatsCheck", 3, "stats:doc_id") -> (true, 0L, Some(0.0)),
+    ("StatsCheck", 3, "stats:n_tok") -> (true, 0L, Some(0.0)),
+    ("StatsCheck", 3, "stats:n_tok:q0.5") -> (true, 0L, Some(1.0)),
+    ("KsDriftCheck", 0, "drift_ks:n_tok") -> (false, 0L, Some(0.25)),
+    ("KsDriftCheck", 1, "drift_ks:n_tok") -> (false, 0L, Some(0.19999999999999996)),
+    ("KsDriftCheck", 2, "drift_ks:n_tok") -> (false, 0L, Some(1.0)),
+    ("KsDriftCheck", 3, "drift_ks:n_tok") -> (false, 0L, Some(0.5)),
+    ("Chi2DriftCheck", 0, "drift_chi2:tokens") -> (true, 0L, Some(7.3125)),
+    ("Chi2DriftCheck", 1, "drift_chi2:tokens") -> (true, 0L, Some(7.750000000000001)),
+    ("Chi2DriftCheck", 2, "drift_chi2:tokens") -> (true, 0L, Some(3.6666666666666665)),
+    ("Chi2DriftCheck", 3, "drift_chi2:tokens") -> (true, 0L, Some(0.0)),
+    ("PsiDriftCheck", 0, "drift_psi:n_tok") -> (false, 0L, Some(5.64130884254657)),
+    ("PsiDriftCheck", 1, "drift_psi:n_tok") -> (false, 0L, Some(2.5895772598239173)),
+    ("PsiDriftCheck", 2, "drift_psi:n_tok") -> (false, 0L, Some(12.760552385465834)),
+    ("PsiDriftCheck", 3, "drift_psi:n_tok") -> (false, 0L, Some(5.45687660590989)),
+    ("SketchDriftCheck", 0, "drift_kll_ks:n_tok") -> (false, 0L, Some(0.25)),
+    ("SketchDriftCheck", 1, "drift_kll_ks:n_tok") -> (false, 0L, Some(0.19999999999999996)),
+    ("SketchDriftCheck", 2, "drift_kll_ks:n_tok") -> (false, 0L, Some(1.0)),
+    ("SketchDriftCheck", 3, "drift_kll_ks:n_tok") -> (false, 0L, Some(0.5)),
+    ("FreqDriftCheck", 0, "drift_freq_chi2:cat") -> (true, 0L, Some(3.125)),
+    ("FreqDriftCheck", 1, "drift_freq_chi2:cat") -> (true, 0L, Some(0.33333333333333326)),
+    ("FreqDriftCheck", 2, "drift_freq_chi2:cat") -> (true, 0L, Some(0.0)),
+    ("FreqDriftCheck", 3, "drift_freq_chi2:cat") -> (true, 0L, Some(1.57)))
+
+  /** (part, verdict name) → verdict; fails on a repeated key. */
+  def verdictMap(verdicts: org.apache.spark.sql.DataFrame): Map[(Int, String), Verdict] = {
+    val rows = verdicts.collect().toSeq.map { r =>
+      (r.getAs[Int]("part"), r.getAs[String]("check")) -> ((r.getAs[Boolean]("passed"),
+        r.getAs[Long]("violation_count"),
+        Option(r.getAs[java.lang.Double]("metric_value")).map(_.doubleValue)))
     }
+    val repeated = rows.groupBy(_._1).collect { case (k, vs) if vs.size > 1 => k }
+    assert(repeated.isEmpty, s"more than one verdict for $repeated")
+    rows.toMap
+  }
+
+  def sameVerdict(got: Verdict, want: Verdict): Boolean =
+    got._1 == want._1 && got._2 == want._2 && got._3.isDefined == want._3.isDefined &&
+      got._3.zip(want._3).forall { case (g, w) =>
+        math.abs(g - w) <= 1e-9 * math.max(math.abs(w), 1e-9) }
+
+  test("verdict parts: one verdict per input part and check, values as before") {
+    // each check names its own parts: the zero-violation part 1, the
+    // all-NULL-key part 2 and the empty-token-array part 3 all get verdicts
+    val checks = everyCheck(partsDim)
+    assert(checks.size == 11)
+    for (c <- checks) {
+      val label = c.getClass.getSimpleName
+      val want = partsVerdicts.collect { case ((`label`, p, n), v) => (p, n) -> v }
+      val got = verdictMap(c.run(partsFixture).verdicts)
+      assert(got.keySet == want.keySet, s"$label verdict keys")
+      for ((k, w) <- want) assert(sameVerdict(got(k), w), s"$label $k: ${got(k)} != $w")
+    }
+    // the pipeline's verdicts are the checks' own (the Bloom probe once,
+    // its check name being shared) plus one row_count per part
+    val dir = Files.createTempDirectory("graft-pipe-parts").toString
+    val r = new ValidationPipeline(checks.filterNot(_.isInstanceOf[ReferentialBloomCheck.FromBlob]),
+      PipelineConfig(s"$dir/ckpt", s"$dir/out")).run(partsFixture)
+    val want = partsVerdicts.collect { case ((cls, p, n), v) if cls != "FromBlob" => (p, n) -> v } ++
+      Seq(0 -> 4L, 1 -> 3L, 2 -> 2L, 3 -> 2L).map { case (p, n) =>
+        (p, "row_count") -> ((true, 0L, Some(n.toDouble))) }
+    val got = verdictMap(r.verdicts)
+    assert(got.keySet == want.keySet, "pipeline verdict keys")
+    for ((k, w) <- want) assert(sameVerdict(got(k), w), s"pipeline $k: ${got(k)} != $w")
+  }
+
+  test("lazy contract: run builds both result frames without reading the input") {
+    // TEST-ONLY instrumentation, as in the pre-count test below
+    val inputRows = spark.sparkContext.longAccumulator("graft-lazy-input")
+    val dimRows = spark.sparkContext.longAccumulator("graft-lazy-dim")
+    val countInput = udf { () => inputRows.add(1); true }.asNondeterministic()
+    val countDim = udf { () => dimRows.add(1); true }.asNondeterministic()
+    val input = partsFixture.filter(countInput())
+    val checks = everyCheck(partsDim.filter(countDim()))
+    val eager = checks.flatMap { c =>
+      val before = inputRows.value
+      val r = c.run(input)
+      r.violations.queryExecution.executedPlan
+      r.verdicts.queryExecution.executedPlan
+      Some(c.getClass.getSimpleName -> (inputRows.value - before)).filter(_._2 > 0)
+    }
+    assert(eager.isEmpty, s"input rows read before an action: $eager")
+    // the one eager step, the Bloom filter build, reads the dimension only
+    assert(dimRows.value > 0L)
+    // and the frames do read the input once acted on
+    val before = inputRows.value
+    checks.head.run(input).verdicts.collect()
+    assert(inputRows.value - before == partsFixture.count())
   }
 
   test("referential check flags rogue sources via broadcast anti-join") {
@@ -320,17 +490,16 @@ class PipelineSpec extends SparkSpec {
        "uninterrupted run") {
     val dir = Files.createTempDirectory("graft-pipe-crash").toString
     val pcfg = PipelineConfig(s"$dir/ckpt", s"$dir/out")
-    // a regular file where the commit manifests go: both writes land, then
+    // a directory where part 0's temp manifest goes: both writes land, then
     // the first Checkpoint.commit throws
-    val commits = java.nio.file.Paths.get(dir, "ckpt", "commits")
-    Files.createDirectories(commits.getParent)
-    Files.createFile(commits)
-    intercept[java.nio.file.FileAlreadyExistsException] {
+    val tmpManifest = java.nio.file.Paths.get(dir, "ckpt", "commits", ".part=0.json.tmp")
+    Files.createDirectories(tmpManifest)
+    intercept[java.io.IOException] {
       new ValidationPipeline(allChecks, pcfg).run(table)
     }
     assert(partFiles(s"$dir/out/violations").keySet == partDirs)
     assert(partFiles(s"$dir/out/verdicts").keySet == partDirs)
-    Files.delete(commits)
+    Files.delete(tmpManifest)
     assert(new Checkpoint(s"$dir/ckpt").committedParts().isEmpty)
 
     val r = new ValidationPipeline(allChecks, pcfg).run(table)
@@ -356,6 +525,26 @@ class PipelineSpec extends SparkSpec {
     }
     for (t <- Seq("violations", "verdicts"))
       assert(partFiles(s"$dir/out/$t").values.forall(_ == 1), s"$t after the re-run")
+  }
+
+  test("a damaged checkpoint fails before the first job") {
+    val dir = Files.createTempDirectory("graft-pipe-damaged").toString
+    // a regular file where the commits directory belongs
+    val commits = java.nio.file.Paths.get(dir, "ckpt", "commits")
+    Files.createDirectories(commits.getParent)
+    Files.createFile(commits)
+    val acc = spark.sparkContext.longAccumulator("graft-damaged-rows")
+    val countRows = udf { () => acc.add(1); true }.asNondeterministic()
+    val ex = intercept[java.nio.file.NotDirectoryException] {
+      new ValidationPipeline(allChecks, PipelineConfig(s"$dir/ckpt", s"$dir/out"))
+        .run(table.filter(countRows()))
+    }
+    assert(ex.getMessage.contains(commits.toString), ex.getMessage)
+    assert(acc.value == 0L, s"the failed run scanned ${acc.value} input rows")
+    assert(!Files.exists(java.nio.file.Paths.get(dir, "out")))
+    intercept[java.nio.file.NotDirectoryException] {
+      new Checkpoint(s"$dir/ckpt").readCommits()
+    }
   }
 
   /** (persisted RDDs, cache-manager entries): an entry can be registered
