@@ -4,7 +4,7 @@ import graft.checks._
 import graft.compile.ValidatorOptions
 import graft.data.TokenTable
 import graft.pipeline.{PipelineConfig, ValidationPipeline}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** spark-submit entrypoint (SURVEY.md §7.1.6):
@@ -51,21 +51,9 @@ object Main {
     val greedy = opts.get("greedy").forall(_.toBoolean)
 
     val validator = Validator(specJson, ValidatorOptions(greedy = greedy))
-    val checks = Seq.newBuilder[Check]
-    checks += RowConstraintCheck(validator, partCol, idCol)
-    checks += UniquenessCheck(idCol, partCol = partCol)
-    checks += StatsCheck(
-      input.schema.fields.toSeq.map(f => ColumnStatsSpec(f.name)), partCol)
-    opts.get("vocab").foreach { v =>
-      checks += ReferentialCheck("source", spark.read.parquet(v), "source",
-        partCol = partCol, idCol = idCol)
-    }
-    opts.get("reference").foreach { r =>
-      val ref = spark.read.parquet(r)
-      checks += KsDriftCheck("n_tok", ref, partCol = partCol)
-      checks += Chi2DriftCheck("tokens", explode(col("tokens")), ref,
-        explode(col("tokens")), threshold = 1e7, partCol = partCol)
-    }
+    val checkSet = checks(input, validator, partCol, idCol,
+      opts.get("vocab").map(spark.read.parquet(_)),
+      opts.get("reference").map(spark.read.parquet(_)))
 
     val cfg = PipelineConfig(
       checkpointDir = req("checkpoint"),
@@ -73,12 +61,34 @@ object Main {
       partCol = partCol,
       lineage = s"input=${req("input")} specHash=${specJson.hashCode}",
       maxViolationsPerPart = opts.get("max-violations-per-part").map(_.toInt))
-    val result = new ValidationPipeline(checks.result(), cfg).run(input)
+    val result = new ValidationPipeline(checkSet, cfg).run(input)
 
     println(s"processed parts: ${result.processedParts.mkString(",")}")
     println(s"skipped parts:   ${result.skippedParts.mkString(",")}")
     println(s"rows validated:  ${result.rowsValidated}")
     spark.stop()
+  }
+
+  /** The run's checks: row constraints, uniqueness and stats on every
+    * input column, plus referential integrity of `source` against `vocab`
+    * and KS (`n_tok`) and χ² (`tokens`) drift against `reference` when
+    * those are given. */
+  def checks(input: DataFrame, validator: Validator, partCol: String, idCol: String,
+             vocab: Option[DataFrame], reference: Option[DataFrame]): Seq[Check] = {
+    val checks = Seq.newBuilder[Check]
+    checks += RowConstraintCheck(validator, partCol, idCol)
+    checks += UniquenessCheck(idCol, partCol = partCol)
+    checks += StatsCheck(
+      input.schema.fields.toSeq.map(f => ColumnStatsSpec(f.name)), partCol)
+    vocab.foreach { v =>
+      checks += ReferentialCheck("source", v, "source", partCol = partCol, idCol = idCol)
+    }
+    reference.foreach { ref =>
+      checks += KsDriftCheck("n_tok", ref, partCol = partCol)
+      checks += Chi2DriftCheck("tokens", explode(col("tokens")), ref,
+        explode(col("tokens")), threshold = 1e7, partCol = partCol)
+    }
+    checks.result()
   }
 
   private def parseArgs(args: Array[String]): Map[String, String] =

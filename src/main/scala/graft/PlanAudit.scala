@@ -3,14 +3,15 @@ package graft
 import graft.checks._
 import graft.data.TokenTable
 import graft.ops._
+import graft.pipeline.ValidationPipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions._
 
 /** The plan harness (PLANS.md). Each entry prints one count line —
-  * exchanges / broadcasts / nested-loop joins in the pre-execution plan —
-  * so a regression in join strategy or an accidental shuffle shows up as
-  * a number diff.
+  * exchanges / broadcasts / nested-loop joins / file scans in the
+  * pre-execution plan — so a regression in join strategy, an accidental
+  * shuffle or an extra scan shows up as a number diff.
   *
   *  - With no query names: the operator family (PLANS.md §8e–§8g, count
   *    lines only), then the flagship token-table paths (PLANS.md §1–§5,
@@ -36,7 +37,8 @@ object PlanAudit {
       val ex = lines.count(_.contains("Exchange"))
       val bc = lines.count(_.contains("BroadcastExchange"))
       val nlj = lines.count(_.contains("NestedLoop"))
-      println(s"== $name: exchanges=$ex (broadcast=$bc) nestedLoop=$nlj")
+      val scans = lines.count(_.contains("FileScan"))
+      println(s"== $name: exchanges=$ex (broadcast=$bc) nestedLoop=$nlj fileScans=$scans")
       if (formatted || verbose) println(df.queryExecution.explainString(FormattedMode))
     }
 
@@ -150,7 +152,13 @@ object PlanAudit {
     audit("referential_broadcast_anti",
       ReferentialCheck("source", TokenTable.vocabDim(spark, TokenTable.Config(rows = 100)),
         "source").run(df).violations)
-    audit("uniqueness_salted_two_phase", UniquenessCheck("doc_id").run(df).violations)
+    audit("uniqueness_partial_aggregate", UniquenessCheck("doc_id").run(df).violations)
+    // graft.Main's per-part checks and row counts: one aggregate, so one
+    // scan of the table (the drift reference is generated, not read)
+    val perPart = Main.checks(df, validator, "part", "doc_id", None,
+      Some(TokenTable.generate(spark, cfg.copy(rows = 1000L, seed = 7L))))
+      .collect { case c: PerPartCheck => c }
+    audit("pipelineVerdicts", ValidationPipeline.partVerdicts(perPart, df, "part"))
     audit("kll_sketch_objhashagg",
       StatsCheck(Seq(ColumnStatsSpec("n_tok", quantiles = Seq(0.5)))).profile(df))
     audit("fused_greedy_errors (kernel gated behind valid)",

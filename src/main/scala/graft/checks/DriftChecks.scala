@@ -3,20 +3,24 @@ package graft.checks
 import graft.sketch.KeyCountsFunctions.{key_counts, key_counts_score}
 import graft.sketch.SortedKeyCounts
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Explode
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType}
 
 /* Distribution-drift checks against a reference sample (SURVEY.md §2.8):
   * two-sample Kolmogorov–Smirnov on a numeric column, chi-square on a
   * categorical/token histogram and PSI on binned proportions.
   *
   * Scale design ([[KeyCountDrift]]): each check is one exact aggregate,
-  * `key_counts(key)` ([[graft.sketch.KeyCounts]]), grouped by part. Map
-  * tasks keep one count buffer per part, so the input's only shuffle
-  * carries one blob per part per task, hash-partitioned on `part`; no
-  * `(part, key)` rows are exchanged and nothing is joined against the
-  * input. The reference is one `key_counts` row, broadcast, and a
-  * per-part Catalyst expression scores the two buffers by walking the
-  * sorted union of their keys.
+  * `key_counts(key)` ([[graft.sketch.KeyCounts]]), in the per-part
+  * aggregate ([[PartAggregate]]). Map tasks keep one count buffer per
+  * part, so the input's only shuffle carries one blob per part per task,
+  * hash-partitioned on `part`; no `(part, key)` rows are exchanged and
+  * nothing is joined against the input. The reference is one
+  * `key_counts` row, broadcast, and a per-part Catalyst expression scores
+  * the two buffers by walking the sorted union of their keys.
   *  - KS accumulates long counts along that walk and divides
   *    `cum / max(total, 1)` at each key: the exact two-sample D, bit for
   *    bit, with no join or window.
@@ -40,26 +44,26 @@ final case class KsDriftCheck(
     reference: DataFrame,
     threshold: Double = 0.05,
     bin: Column => Column = identity,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   val name = s"drift_ks:$column"
 
-  def run(df: DataFrame): CheckResult = {
-    val keyed = df.select(col(partCol).as("part"), KeyCountDrift.binned(column, bin).as("key"))
-    val refKeys = reference.select(KeyCountDrift.binned(column, bin).as("key"))
-    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys,
-      "ks_drift", KeyCountDrift.ks)
-    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
-  }
+  def partAggregate(df: DataFrame, id: String): PartAggregate =
+    KeyCountDrift.form(id, name, threshold, df, KeyCountDrift.binned(column, bin),
+      reference, KeyCountDrift.binned(column, bin), "ks_drift", KeyCountDrift.ks)
 }
 
 /** Chi-square drift over a histogram (e.g. token frequencies via
   * `explode(tokens)`). `keyExpr` maps a row to the histogram key column —
   * pass `explode(col("tokens"))` for token histograms or `col("source")`
-  * for categorical columns. Expected counts come from the reference's
-  * relative frequencies scaled to each partition's total, floored at 0.5
-  * to keep the statistic finite for unseen categories: per part, the sum
-  * over the union of observed and reference keys of
+  * for categorical columns. An `explode` or `explode_outer` key is not
+  * exploded: `key_counts` counts the elements of its array child, with
+  * `keyTransform` applied per element, on the observed and the reference
+  * side alike; any other generator is rejected. Expected counts come
+  * from the reference's relative frequencies scaled to each partition's
+  * total, floored at 0.5 to keep the statistic finite for unseen
+  * categories: per part, the sum over the union of observed and
+  * reference keys of
   * `(o − p·n)² / max(p·n, 0.5)`, within float summation order of the
   * term-for-term sum (see [[KeyCountDrift]]). */
 final case class Chi2DriftCheck(
@@ -69,26 +73,31 @@ final case class Chi2DriftCheck(
     refKeyExpr: Column,
     threshold: Double,
     keyTransform: Column => Column = identity,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   val name = s"drift_chi2:$keyName"
 
-  def run(df: DataFrame): CheckResult = {
-    // generators (explode) must be top-level in a select; the transform
-    // (e.g. bucketing `% B`) is applied in a second projection
-    val keys = df.select(col(partCol).as("part"), keyExpr.as("key0"))
-      .select(col("part"), keyTransform(col("key0")).as("key"))
-    // a generator key drops rows (explode of an empty array), so every
-    // input row's part is added once more with a NULL key, which the
-    // aggregate merges into the part's buffer without counting it
-    val keyed = keys.unionByName(df.select(col(partCol).as("part"),
-      lit(null).cast(keys.schema("key").dataType).as("key")))
-    val refKeys = reference.select(refKeyExpr.as("key0"))
-      .select(keyTransform(col("key0")).as("key"))
-    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys, "chi2_drift",
+  def partAggregate(df: DataFrame, id: String): PartAggregate =
+    KeyCountDrift.form(id, name, threshold, df, key(df, keyExpr), reference,
+      key(reference, refKeyExpr), "chi2_drift",
       KeyCountDrift.termSum((o, n, p) => math.pow(o - p * n, 2) / math.max(p * n, 0.5)))
-    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
-  }
+
+  /** The key column of `expr` over `df`: the transformed key, or for an
+    * `explode`/`explode_outer` key its array child with each element
+    * transformed. The generator is read from the analyzed plan, since the
+    * Column of `explode(c)` is not an `Explode` expression until analysis. */
+  private def key(df: DataFrame, expr: Column): Column =
+    df.select(expr).queryExecution.analyzed match {
+      case Project(_, g: Generate) => g.generator match {
+        case e: Explode =>
+          val elements = ColumnBridge.column(e.child)
+          if (keyTransform(elements) eq elements) elements
+          else transform(elements, keyTransform)
+        case other => throw new IllegalArgumentException(
+          s"$name: the key generator ${other.prettyName} is not explode or explode_outer")
+      }
+      case _ => keyTransform(expr)
+    }
 }
 
 /** Population Stability Index — the standard production-ML drift metric
@@ -111,36 +120,34 @@ final case class PsiDriftCheck(
     threshold: Double = 0.25,
     bin: Column => Column = identity,
     epsilon: Double = 1e-6,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   require(epsilon > 0.0, "epsilon must be positive (keeps PSI finite)")
   val name = s"drift_psi:$column"
 
-  def run(df: DataFrame): CheckResult = {
-    val keyed = df.select(col(partCol).as("part"), KeyCountDrift.binned(column, bin).as("key"))
-    val refKeys = reference.select(KeyCountDrift.binned(column, bin).as("key"))
+  def partAggregate(df: DataFrame, id: String): PartAggregate = {
     val eps = epsilon
-    val verdicts = KeyCountDrift.verdicts(name, threshold, keyed, refKeys, "psi_drift",
+    KeyCountDrift.form(id, name, threshold, df, KeyCountDrift.binned(column, bin),
+      reference, KeyCountDrift.binned(column, bin), "psi_drift",
       KeyCountDrift.termSum { (o, n, p) =>
         val q = math.max(o / math.max(n, 1.0), eps)
         val r = math.max(p, eps)
         (q - r) * math.log(q / r)
       })
-    CheckResult(Check.emptyViolations(df.sparkSession), verdicts)
   }
 }
 
-/** The plan shared by the three drift checks. Per part it scores the
+/** The form shared by the three drift checks. Per part it scores the
   * part's `key_counts` buffer against the reference's:
   *
-  *  - `keyed` (part, key) rows carry every input row's part, a NULL key
-  *    where the row has no key. NULL parts are dropped, and one
-  *    `groupBy(part)` aggregate of `key_counts(key)` and `count(key)` = n,
-  *    both of which skip NULL keys, gives each part its buffer, empty for
-  *    a part without keys. The input is shuffled once, on `part`;
+  *  - the key is one per-row column, NULL where the row has no key, or an
+  *    array whose non-NULL elements are the row's keys. The aggregate
+  *    holds `key_counts(key)` and n, the number of rows with a key, both
+  *    of which skip NULL keys, so a part without keys has an empty buffer;
   *  - the reference keys, cast to the observed key type, are one
   *    `key_counts` row crossed in as a broadcast;
-  *  - a [[graft.sketch.KeyCountsScore]] expression computes the metric.
+  *  - a [[graft.sketch.KeyCountsScore]] expression computes the metric,
+  *    once per part.
   *
   * Verdict parts are the observed parts (n > 0) plus, when the reference
   * is non-empty, every part of the input. */
@@ -179,21 +186,39 @@ private object KeyCountDrift {
     d
   }
 
-  def verdicts(name: String, threshold: Double, keyed: DataFrame, refKeys: DataFrame,
-               scoreName: String, score: Score): DataFrame = {
-    val keyType = keyed.schema("key").dataType
-    val obs = keyed.where(col("part").isNotNull)
-      .groupBy("part").agg(key_counts(col("key")).as("o"), count(col("key")).as("n"))
-    val ref = refKeys.select(col("key").cast(keyType).as("key"))
-      .agg(key_counts(col("key")).as("r"), count(col("key")).as("rn"))
-    obs.crossJoin(broadcast(ref))
-      .where(col("n") > 0 || col("rn") > 0)
-      .select(col("part"), key_counts_score(scoreName, col("o"), col("r"))(score).as("metric_value"))
-      .select(
-        col("part"),
-        lit(name).as("check"),
-        (col("metric_value") <= lit(threshold)).as("passed"),
-        lit(0L).as("violation_count"),
-        col("metric_value"))
+  /** The key type, for an array key its element type. */
+  private def elementType(dt: DataType): DataType = dt match {
+    case ArrayType(et, _) => et
+    case t => t
+  }
+
+  /** Whether a row has a key: an array key has one when some element
+    * is not NULL. */
+  private def hasKey(key: Column, dt: DataType): Column = dt match {
+    case _: ArrayType => exists(key, _.isNotNull)
+    case _ => key.isNotNull
+  }
+
+  /** `key` over `df` scored against `refKey` over `reference`. */
+  def form(id: String, name: String, threshold: Double, df: DataFrame, key: Column,
+           reference: DataFrame, refKey: Column, scoreName: String, score: Score): PartAggregate = {
+    val keyType = df.select(key).schema.head.dataType
+    val refType = reference.select(refKey).schema.head.dataType
+    val refKeyCast = refKey.cast(refType match {
+      case _: ArrayType => ArrayType(elementType(keyType))
+      case _ => elementType(keyType)
+    })
+    val k = col(s"${id}key")
+    val ref = reference.select(refKeyCast.as("key"))
+      .agg(key_counts(col("key")).as(s"${id}r"), count_if(hasKey(col("key"), refType)).as(s"${id}rn"))
+    val metric = col(s"${id}score")
+    PartAggregate(
+      rows = Seq(key.as(s"${id}key")),
+      aggs = Seq(key_counts(k).as(s"${id}o"), count_if(hasKey(k, keyType)).as(s"${id}n")),
+      refs = Seq(ref),
+      scores = Seq(key_counts_score(scoreName, col(s"${id}o"), col(s"${id}r"))(score)
+        .as(s"${id}score")),
+      verdicts = Seq(when(col(s"${id}n") > 0 || col(s"${id}rn") > 0,
+        PartAggregate.verdict(name, metric <= lit(threshold), lit(0L), metric))))
   }
 }

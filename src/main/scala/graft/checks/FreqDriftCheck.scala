@@ -37,16 +37,15 @@ final case class FreqDriftCheck(
     referenceSketch: Array[Byte],
     threshold: Double,
     capacity: Int = FreqSketch.DefaultCapacity,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   val name = s"drift_freq_chi2:$column"
 
-  def run(df: DataFrame): CheckResult = {
+  def partAggregate(df: DataFrame, id: String): PartAggregate = {
     FreqSketch.deserialize(referenceSketch) // validate the profile before shipping
-    CheckResult(Check.emptyViolations(df.sparkSession),
-      SketchDriftCheck.profileVerdicts(df, partCol, name, threshold,
-        FreqFunctions.freq_sketch(col(column).cast(StringType), capacity),
-        FreqFunctions.freq_chi2(_, lit(referenceSketch))))
+    SketchDriftCheck.profileForm(id, name, threshold,
+      FreqFunctions.freq_sketch(col(column).cast(StringType), capacity),
+      FreqFunctions.freq_chi2(_, lit(referenceSketch)))
   }
 }
 

@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   *
   * Semantics: the filter has NO false negatives, so every flagged row
   * is a DEFINITE violation; a false positive (≈ `fpp`) lets a violation
-  * escape the screen. Production shape: run this screen over the full
+  * escape the screen. A NULL key is a violation, as in the exact join.
+  * Production shape: run this screen over the full
   * fact table, then confirm/complete with [[ReferentialCheck]]'s exact
   * broadcast join only where exactness is required — the blob also persists
   * via [[graft.pipeline.IndexStore]] (kind "bloom") so later runs skip
@@ -64,9 +65,10 @@ object ReferentialBloomCheck {
 
     def run(df: DataFrame): CheckResult = {
       BloomSketch.deserialize(blob) // validate geometry before shipping
-      // a row whose key the filter cannot contain is a definite violation;
-      // a NULL key probes to NULL and is none
-      val missing = !BloomFunctions.bloom_contains(lit(blob), col(fkCol).cast("string"))
+      // a row whose key the filter cannot contain is a definite violation,
+      // and so is a NULL key, as in the exact join of [[ReferentialCheck]]
+      val missing = col(fkCol).isNull ||
+        !BloomFunctions.bloom_contains(lit(blob), col(fkCol).cast("string"))
       val violations = df
         .where(missing)
         .select(

@@ -13,29 +13,26 @@ import org.apache.spark.sql.types.DoubleType
   * Scale notes: the validator is a pure projection (narrow, whole-stage
   * codegen, zero shuffle); the verdict aggregation shuffles only
   * `(part, valid-count, violation-count)` partials — bytes per partition,
-  * not per row. Violations are produced by the same single scan.
+  * not per row. The violations are a second projection of the same
+  * compiled columns, the only per-part check with violation rows.
   */
 final case class RowConstraintCheck(
     validator: Validator,
     partCol: String = Check.PartCol,
-    idCol: String = Check.IdCol) extends Check {
+    idCol: String = Check.IdCol) extends PerPartCheck {
 
   val name = "row_constraint"
 
-  def run(df: DataFrame): CheckResult = {
-    val (validCol, errsCol) = {
-      val c = graft.compile.ConstraintCompiler.compile(validator.spec, df.schema, validator.options)
-      (c.valid, c.errors)
-    }
-    val validated = df.select(
-      col(partCol), col(idCol), validCol.as("valid"), errsCol.as("errors"))
+  private def compiled(df: DataFrame) =
+    graft.compile.ConstraintCompiler.compile(validator.spec, df.schema, validator.options)
 
-    val violations = validated
-      .where(!col("valid"))
+  override def violations(df: DataFrame): DataFrame = {
+    val c = compiled(df)
+    df.where(!c.valid)
       .select(
         col(partCol).as("part"),
         col(idCol).cast("string").as("doc_id"),
-        explode(col("errors")).as("error"))
+        explode(c.errors).as("error"))
       .select(
         col("part"), col("doc_id"),
         col("error.path").as("path"),
@@ -43,18 +40,21 @@ final case class RowConstraintCheck(
         col("error.message").as("message"),
         col("error.additionalProperties").as("additional_properties"),
         lit(name).as("check"))
+  }
 
-    val verdicts = validated
-      .groupBy(col(partCol).as("part"))
-      .agg(
-        bool_and(col("valid")).as("passed"),
-        sum(when(col("valid"), lit(0L)).otherwise(size(col("errors")).cast("long")))
-          .as("violation_count"),
-        avg(col("valid").cast(DoubleType)).as("metric_value")) // valid-rate
-      .select(lit(name).as("check"), col("part"), col("passed"),
-        col("violation_count"), col("metric_value"))
-      .select("part", "check", "passed", "violation_count", "metric_value")
-
-    CheckResult(violations, verdicts)
+  /** Per part: every row valid, the error count of the invalid rows, and
+    * the valid-rate as the metric. */
+  def partAggregate(df: DataFrame, id: String): PartAggregate = {
+    val c = compiled(df)
+    val valid = col(s"${id}valid")
+    PartAggregate(
+      rows = Seq(c.valid.as(s"${id}valid"), c.errors.as(s"${id}errors")),
+      aggs = Seq(
+        bool_and(valid).as(s"${id}passed"),
+        sum(when(valid, lit(0L)).otherwise(size(col(s"${id}errors")).cast("long")))
+          .as(s"${id}errors_n"),
+        avg(valid.cast(DoubleType)).as(s"${id}valid_rate")),
+      verdicts = Seq(PartAggregate.verdict(name,
+        col(s"${id}passed"), col(s"${id}errors_n"), col(s"${id}valid_rate"))))
   }
 }

@@ -23,41 +23,30 @@ final case class SketchDriftCheck(
     referenceSketch: Array[Byte],
     threshold: Double = 0.05,
     k: Int = KllSketch.DefaultK,
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   val name = s"drift_kll_ks:$column"
 
-  def run(df: DataFrame): CheckResult = {
+  def partAggregate(df: DataFrame, id: String): PartAggregate = {
     KllSketch.deserialize(referenceSketch) // validate the profile before shipping
-    CheckResult(Check.emptyViolations(df.sparkSession),
-      SketchDriftCheck.profileVerdicts(df, partCol, name, threshold,
-        gf.kll_sketch(col(column).cast(DoubleType), k),
-        gf.kll_ks(_, lit(referenceSketch))))
+    SketchDriftCheck.profileForm(id, name, threshold,
+      gf.kll_sketch(col(column).cast(DoubleType), k), gf.kll_ks(_, lit(referenceSketch)))
   }
 }
 
 object SketchDriftCheck {
-  /** The plan of the two profile-sketch drift checks: per part, the
+  /** The form of the two profile-sketch drift checks: per part, the
     * `sketch` aggregate (partial + final, one blob per part per task in
     * the shuffle), then `score` of it against the profile literal, once
-    * per part and shared by `passed` and `metric_value`. NULL parts are
-    * filtered before and after the int cast: a non-castable part value
-    * fails the job under ANSI mode and turns NULL otherwise, and neither
-    * must become a verdict. */
-  private[checks] def profileVerdicts(df: DataFrame, partCol: String, name: String,
-                                      threshold: Double, sketch: Column,
-                                      score: Column => Column): DataFrame =
-    df.where(col(partCol).isNotNull)
-      .groupBy(col(partCol).cast(IntegerType).as("part"))
-      .agg(sketch.as("sketch"))
-      .where(col("part").isNotNull)
-      .withColumn("_score", score(col("sketch")))
-      .select(
-        col("part"),
-        lit(name).as("check"),
-        (col("_score") <= threshold).as("passed"),
-        lit(0L).as("violation_count"),
-        col("_score").as("metric_value"))
+    * per part and shared by `passed` and `metric_value`. */
+  private[checks] def profileForm(id: String, name: String, threshold: Double,
+                                  sketch: Column, score: Column => Column): PartAggregate = {
+    val metric = col(s"${id}score")
+    PartAggregate(
+      aggs = Seq(sketch.as(s"${id}sketch")),
+      scores = Seq(score(col(s"${id}sketch")).as(s"${id}score")),
+      verdicts = Seq(PartAggregate.verdict(name, metric <= threshold, lit(0L), metric)))
+  }
 
   /** Build a reference profile sketch from a clean sample (run once,
     * persist the bytes in the profile/checkpoint table). */

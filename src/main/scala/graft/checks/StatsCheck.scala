@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Per-column statistics with optional assertions: min / max / null-rate /
-  * approx-distinct (HLL++) / approx quantiles — the table-level layer the
-  * reference has no analog for (SURVEY.md §2.8).
+  * approx quantiles (KLL), plus approx-distinct (HLL++) in [[StatsCheck.profile]]
+  * — the table-level layer the reference has no analog for (SURVEY.md §2.8).
   *
   * One hash-aggregate pass per partition computes every column's stats
   * (partial + final agg, shuffle carries one row per partition). HLL++ via
@@ -22,72 +22,52 @@ final case class ColumnStatsSpec(
 
 final case class StatsCheck(
     columns: Seq[ColumnStatsSpec],
-    partCol: String = Check.PartCol) extends Check {
+    partCol: String = Check.PartCol) extends PerPartCheck {
 
   val name = "stats"
 
-  def run(df: DataFrame): CheckResult = {
-    val spark = df.sparkSession
-
-    def wantsQuantiles(s: ColumnStatsSpec): Boolean =
-      s.quantiles.nonEmpty &&
-        df.schema(s.column).dataType.isInstanceOf[NumericType]
-
-    val aggs: Seq[Column] = columns.flatMap { s =>
+  /** One verdict row per (part, column): passed = every assertion holds,
+    * the null rate as the metric. Columns with quantiles configured emit
+    * one extra informational row per quantile (KLL estimate as
+    * metric_value, sanity-passed when it sits inside [min, max]). */
+  def partAggregate(df: DataFrame, id: String): PartAggregate = {
+    val rows = col(s"${id}rows")
+    val perColumn = columns.zipWithIndex.map { case (s, i) =>
       val c = col(s.column)
+      val p = s"$id$i"
       val isNum = df.schema(s.column).dataType.isInstanceOf[NumericType]
-      Seq(
-        count(lit(1)).as(s"${s.column}__rows"),
-        sum(c.isNull.cast(LongType)).as(s"${s.column}__nulls"),
-        (if (isNum) min(c).cast(DoubleType) else lit(null).cast(DoubleType))
-          .as(s"${s.column}__min"),
-        (if (isNum) max(c).cast(DoubleType) else lit(null).cast(DoubleType))
-          .as(s"${s.column}__max"),
-        approx_count_distinct(c).as(s"${s.column}__distinct")) ++
-        (if (wantsQuantiles(s))
+      val nulls = col(s"${p}_nulls")
+      val (mn, mx) =
+        if (isNum) (col(s"${p}_min"), col(s"${p}_max"))
+        else (lit(null).cast(DoubleType), lit(null).cast(DoubleType))
+      val aggs = Seq(sum(c.isNull.cast(LongType)).as(s"${p}_nulls")) ++
+        (if (isNum) Seq(min(c).cast(DoubleType).as(s"${p}_min"),
+                        max(c).cast(DoubleType).as(s"${p}_max"))
+         else Nil) ++
+        (if (isNum && s.quantiles.nonEmpty)
           Seq(graft.sketch.functions.kll_quantiles(
-            graft.sketch.functions.kll_sketch(c), s.quantiles)
-            .as(s"${s.column}__quantiles"))
-         else Seq.empty)
-    }
+            graft.sketch.functions.kll_sketch(c), s.quantiles).as(s"${p}_quantiles"))
+         else Nil)
 
-    val agg = df.groupBy(col(partCol).as("part")).agg(aggs.head, aggs.tail: _*)
-
-    // one verdict row per (part, column): passed = every assertion holds.
-    // Columns with quantiles configured emit one extra informational row
-    // per quantile (KLL estimate as metric_value, sanity-passed when it
-    // sits inside [min, max]).
-    val quantileVerdicts: Seq[DataFrame] = columns.filter(wantsQuantiles).flatMap { s =>
-      s.quantiles.zipWithIndex.map { case (p, i) =>
-        val est = element_at(col(s"${s.column}__quantiles"), i + 1)
-        val inRange = est.isNull ||
-          (est >= col(s"${s.column}__min") && est <= col(s"${s.column}__max"))
-        agg.select(
-          col("part"),
-          lit(s"$name:${s.column}:q$p").as("check"),
-          inRange.as("passed"),
-          lit(0L).as("violation_count"),
-          est.as("metric_value"))
-      }
-    }
-
-    val verdicts = (columns.map { s =>
-      val nullRate = col(s"${s.column}__nulls").cast(DoubleType) / col(s"${s.column}__rows")
-      val assertions = Seq(
+      val nullRate = nulls.cast(DoubleType) / rows
+      val passed = Seq(
         s.maxNullRate.map(r => nullRate <= lit(r)),
-        s.min.map(m => col(s"${s.column}__min").isNull || col(s"${s.column}__min") >= lit(m)),
-        s.max.map(m => col(s"${s.column}__max").isNull || col(s"${s.column}__max") <= lit(m)))
-        .flatten
-      val passed = assertions.foldLeft(lit(true))(_ && _)
-      agg.select(
-        col("part"),
-        lit(s"$name:${s.column}").as("check"),
-        passed.as("passed"),
-        when(passed, lit(0L)).otherwise(col(s"${s.column}__nulls")).as("violation_count"),
-        nullRate.as("metric_value"))
-    } ++ quantileVerdicts).reduce(_ unionAll _)
-
-    CheckResult(Check.emptyViolations(spark), verdicts)
+        s.min.map(m => mn.isNull || mn >= lit(m)),
+        s.max.map(m => mx.isNull || mx <= lit(m)))
+        .flatten.foldLeft(lit(true))(_ && _)
+      val quantileVerdicts =
+        if (!isNum) Nil
+        else s.quantiles.zipWithIndex.map { case (q, j) =>
+          val est = element_at(col(s"${p}_quantiles"), j + 1)
+          PartAggregate.verdict(s"$name:${s.column}:q$q",
+            est.isNull || (est >= mn && est <= mx), lit(0L), est)
+        }
+      (aggs, PartAggregate.verdict(s"$name:${s.column}", passed,
+        when(passed, lit(0L)).otherwise(nulls), nullRate) +: quantileVerdicts)
+    }
+    PartAggregate(
+      aggs = count(lit(1)).as(s"${id}rows") +: perColumn.flatMap(_._1),
+      verdicts = perColumn.flatMap(_._2))
   }
 
   /** Wide per-partition profile (all stats as columns) — reusable as a

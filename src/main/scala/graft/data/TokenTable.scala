@@ -84,7 +84,7 @@ object TokenTable {
       .otherwise(docIdBase)
 
     // skewed source distribution (Zipf-ish via squaring) to exercise the
-    // salted uniqueness/aggregation paths
+    // skew-sensitive uniqueness/aggregation paths
     val srcIdx = pmod(
       pmod(xxhash64(col("id"), lit(cfg.seed), lit("src")), lit(cfg.numSources.toLong)) *
         pmod(xxhash64(col("id"), lit(cfg.seed), lit("src2")), lit(cfg.numSources.toLong)),

@@ -12,7 +12,7 @@ final case class DocRow(doc_id: Long, text: String, lang: String,
                         source: String, n_chars: Long)
 
 /** Table-level check queries (SURVEY.md §2.8) with independent SQL
-  * oracles: exact stats, salted uniqueness, broadcast-anti referential,
+  * oracles: exact stats, uniqueness, broadcast-anti referential,
   * KS + chi-square drift, per-partition verdict assembly, the typed
   * Dataset path, and the full pipeline (checkpoint + verdict write)
   * driven end-to-end into a per-run temp dir. */

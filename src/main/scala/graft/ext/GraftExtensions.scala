@@ -25,6 +25,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringTyp
   *    (ORDER-SENSITIVE: cells come from the reference profile)
   *  - `freq_psi(observed, reference)`   → double, Population Stability
   *    Index (same order contract; scale-free in both totals)
+  *  - `key_counts(col)`                 → binary (exact counts of the
+  *    non-NULL keys, or of an array column's non-NULL elements)
   *  - `bloom_agg(col, n[, fpp])`        → binary (mergeable Bloom filter
   *    over string keys; no false negatives)
   *  - `bloom_contains(filter, key)`     → boolean membership probe
@@ -192,6 +194,13 @@ object GraftFunctions {
         case Seq(a, b) => graft.sketch.FreqPsi(a, b)
         case _ => throw new IllegalArgumentException(
           "freq_psi expects (sketch_a, sketch_b)")
+      }),
+
+    (FunctionIdentifier("key_counts"),
+      info("key_counts", "key_counts(col) - exact counts of the non-NULL keys, or of an array column's non-NULL elements (binary, keys sorted)"),
+      (args: Seq[Expression]) => args match {
+        case Seq(c) => graft.sketch.KeyCountsAgg(c)
+        case _ => throw new IllegalArgumentException("key_counts expects (col)")
       }),
 
     (FunctionIdentifier("bloom_agg"),

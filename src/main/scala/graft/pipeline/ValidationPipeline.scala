@@ -1,12 +1,21 @@
 package graft.pipeline
 
-import graft.checks.{Check, CheckResult}
+import graft.checks.{Check, CheckResult, PartAggregate, PerPartCheck}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end validation run: filter uncommitted partitions → evaluate all
   * checks → write violations + verdicts partitioned by `part` → commit each
   * partition to the checkpoint (SURVEY.md §7.1 steps 3-5).
+  *
+  * One scan for the per-part checks: the verdicts of every
+  * [[graft.checks.PerPartCheck]] (row constraints, stats, drift) and the
+  * `row_count` verdicts come from ONE `groupBy(part)` aggregate over the
+  * pending rows ([[ValidationPipeline.partVerdicts]]), so the verdicts
+  * write reads the input once for all of them, plus once per other check
+  * (uniqueness, referential). The per-part checks must group by the
+  * pipeline's `partCol`; `run` fails before the first job, naming the
+  * check, when one does not.
   *
   * Resume contract: partitions present in the checkpoint are excluded from
   * the scan with a literal NOT-IN filter on the partition column, which the
@@ -70,12 +79,19 @@ final case class PipelineResult(
     rowsValidated: Long)
 
 final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
-  import org.apache.spark.sql.types.{DoubleType, StructType}
+  import org.apache.spark.sql.types.StructType
+
+  private val perPart = checks.collect { case c: PerPartCheck => c }
+  private val others = checks.filterNot(_.isInstanceOf[PerPartCheck])
 
   def run(input0: DataFrame): PipelineResult = {
     // schema-contract pre-flight: driver-side metadata only, fail fast
     cfg.referenceSchema.foreach(ref =>
       graft.checks.SchemaDrift.check(input0, ref, failOnDrift = true))
+    perPart.find(_.partCol != cfg.partCol).foreach { c =>
+      throw new IllegalArgumentException(s"graft: check '${c.name}' groups by " +
+        s"'${c.partCol}', but the pipeline's part column is '${cfg.partCol}'")
+    }
     val spark = input0.sparkSession
     val checkpoint = new Checkpoint(cfg.checkpointDir)
     val committed = checkpoint.committedParts()
@@ -110,33 +126,25 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
         Seq.empty, committed.toSeq.sorted, 0L)
     }
 
-    // Per-partition row counts, LAZY and cached: the aggregation runs
-    // inside the verdict write job instead of a dedicated eager
-    // full-input pre-count job — at 10^12 rows that job was a whole extra
-    // pass made solely for commit metadata. The frame is (a) the
-    // `row_count` verdict rows and (b) the commit metadata, collected
-    // from the cache after the writes. The parts to commit come from this
-    // run's input, not from the written verdicts, which can still hold
-    // parts that a crashed run wrote before the input lost them.
-    val rowCounts = pending
-      .groupBy(col(cfg.partCol).cast("int").as("part"))
-      .agg(count(lit(1)).as("n_rows"))
-      .persist()
-    val rowCountVerdicts = rowCounts.select(
-      col("part"),
-      lit("row_count").as("check"),
-      lit(true).as("passed"),
-      lit(0L).as("violation_count"),
-      col("n_rows").cast(DoubleType).as("metric_value"))
+    // The per-part checks' verdicts and the row counts, LAZY and cached:
+    // one aggregate over pending, computed inside the verdict write job
+    // instead of a dedicated eager full-input pre-count job — at 10^12
+    // rows that job was a whole extra pass made solely for commit
+    // metadata. The frame is (a) verdict rows of the write and (b) the
+    // commit metadata, its `row_count` rows collected from the cache after
+    // the writes. The parts to commit come from this run's input, not
+    // from the written verdicts, which can still hold parts that a
+    // crashed run wrote before the input lost them.
+    val partVerdicts = ValidationPipeline.partVerdicts(perPart, pending, cfg.partCol).persist()
 
     // unpersisted on every path: a failed write must not leave the cached
-    // counts registered in the caller's session
+    // verdicts registered in the caller's session
     try {
       val t0 = System.nanoTime()
       // global checks see the full input (cross-partition semantics) but
       // report only for uncommitted partitions; local checks scan pending
       // only. Each check's verdict parts are the parts of what it reads.
-      val results: Seq[CheckResult] = checks.map { c =>
+      val results: Seq[CheckResult] = others.map { c =>
         if (c.isGlobal && committed.nonEmpty) {
           val r = c.run(input)
           CheckResult(
@@ -144,12 +152,13 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
             r.verdicts.where(!col("part").isin(committed.toSeq: _*)))
         } else c.run(pending)
       }
-      val violationsAll = results.map(_.violations).reduce(_ unionAll _)
+      val violationsAll = (perPart.map(_.violations(pending)) ++ results.map(_.violations))
+        .reduceOption(_ unionAll _).getOrElse(Check.emptyViolations(spark))
       val violations = cfg.maxViolationsPerPart match {
         case Some(k) => ValidationPipeline.capViolations(violationsAll, k)
         case None    => violationsAll
       }
-      val verdicts = (results.map(_.verdicts) :+ rowCountVerdicts).reduce(_ unionAll _)
+      val verdicts = (partVerdicts +: results.map(_.verdicts)).reduce(_ unionAll _)
 
       // Dynamic partition overwrite is a per-write option, so the caller's
       // session keeps its own `spark.sql.sources.partitionOverwriteMode`.
@@ -186,8 +195,9 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
       val elapsed = (System.nanoTime() - t0) / 1e9
       // commit metadata comes from the cache the verdict write populated —
       // a KB-sized read, not another input scan
-      val partCounts = rowCounts.collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val partCounts = partVerdicts.where(col("check") === ValidationPipeline.RowCount)
+        .select("part", "metric_value").collect()
+        .map(r => r.getInt(0) -> r.getDouble(1).toLong).toMap
       val pendingParts = partCounts.keys.toSeq.sorted
       val totalRows = partCounts.values.sum
       val rate = if (elapsed > 0) totalRows / elapsed else 0.0
@@ -206,11 +216,25 @@ final class ValidationPipeline(checks: Seq[Check], cfg: PipelineConfig) {
         written("violations", Check.violationsSchema),
         written("verdicts", Check.verdictsSchema),
         pendingParts, committed.toSeq.sorted, totalRows)
-    } finally rowCounts.unpersist(false)
+    } finally partVerdicts.unpersist(false)
   }
 }
 
 object ValidationPipeline {
+  private[pipeline] val RowCount = "row_count"
+
+  /** The verdicts of `checks` over `df` plus one `row_count` verdict per
+    * part (its row count as the metric), all from one aggregate
+    * ([[PartAggregate.verdicts]]): one scan of `df` and one exchange, on
+    * `part`. */
+  def partVerdicts(checks: Seq[PerPartCheck], df: DataFrame, partCol: String): DataFrame = {
+    val rowCount = (id: String) => PartAggregate(
+      aggs = Seq(count(lit(1)).as(s"${id}rows")),
+      verdicts = Seq(PartAggregate.verdict(RowCount, lit(true), lit(0L), col(s"${id}rows"))))
+    PartAggregate.verdicts(df, partCol,
+      checks.map(c => (id: String) => c.partAggregate(df, id)) :+ rowCount)
+  }
+
   /** Deterministic first-K violation rows per (part, check), ordered by
     * the full violation row (doc_id, path, keyword, message,
     * additional_properties — NULLs first, a total order up to fully

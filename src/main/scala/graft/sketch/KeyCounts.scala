@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -335,6 +336,9 @@ object KeyCounts {
 
 /** `key_counts(key)` — aggregates a column into its exact [[KeyCounts]],
   * serialized (BinaryType) with the keys sorted. NULL keys are skipped.
+  * An `array<T>` column counts each non-NULL element as a key of type
+  * `T`, as `key_counts` over the column's `explode` would, without
+  * exploding a row per element; a NULL array adds nothing.
   * Same partial/final shape as [[FreqSketchAgg]]: each task keeps one
   * buffer per group, the shuffle carries one blob per group per task,
   * and the reducer merges them. */
@@ -345,12 +349,17 @@ final case class KeyCountsAgg(
   extends TypedImperativeAggregate[KeyCounts]
   with UnaryLike[Expression] {
 
-  @transient private lazy val encoder = KeyCounts.encoder(child.dataType).get
+  /** The key type: the element type of an array column. */
+  @transient private lazy val keyType: DataType = child.dataType match {
+    case ArrayType(et, _) => et
+    case dt => dt
+  }
+  @transient private lazy val encoder = KeyCounts.encoder(keyType).get
 
-  override def checkInputDataTypes(): TypeCheckResult = KeyCounts.encoder(child.dataType) match {
+  override def checkInputDataTypes(): TypeCheckResult = KeyCounts.encoder(keyType) match {
     case Some(_) => TypeCheckResult.TypeCheckSuccess
     case None => TypeCheckResult.TypeCheckFailure(
-      s"key_counts requires an atomic key type, got ${child.dataType.simpleString}")
+      s"key_counts requires an atomic key type or an array of one, got ${child.dataType.simpleString}")
   }
 
   override def dataType: DataType = BinaryType
@@ -360,8 +369,16 @@ final case class KeyCountsAgg(
   override def createAggregationBuffer(): KeyCounts = new KeyCounts(encoder.byteKeys)
 
   override def update(buffer: KeyCounts, input: InternalRow): KeyCounts = {
-    val v = child.eval(input)
-    if (v != null) encoder.add(buffer, v)
+    child.eval(input) match {
+      case null =>
+      case a: ArrayData =>
+        var i = 0
+        while (i < a.numElements()) {
+          if (!a.isNullAt(i)) encoder.add(buffer, a.get(i, keyType))
+          i += 1
+        }
+      case v => encoder.add(buffer, v)
+    }
     buffer
   }
 
@@ -406,7 +423,8 @@ final case class KeyCountsScore(
 }
 
 object KeyCountsFunctions {
-  /** Exact counts of a column's non-NULL values, as a sorted blob. */
+  /** Exact counts of a column's non-NULL values (of an array column's
+    * non-NULL elements), as a sorted blob. */
   def key_counts(c: Column): Column =
     ColumnBridge.column(KeyCountsAgg(ColumnBridge.expression(c)).toAggregateExpression())
 

@@ -64,6 +64,35 @@ class KeyCountsSpec extends AnyFunSuite {
     assert(KeyCounts.encoder(ArrayType(IntegerType)).isEmpty)
   }
 
+  test("key_counts over an array counts its non-NULL elements, as over the explode") {
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    import graft.sketch.KeyCountsFunctions.key_counts
+    graft.ext.GraftFunctions.register(spark)
+    val df = Seq[(Int, Option[Seq[Option[Int]]], Option[Seq[String]])](
+      (0, Some(Seq(Some(1), None, Some(3), Some(1))), Some(Seq("a", null, "b", "a"))),
+      (0, None, None),
+      (1, Some(Seq()), Some(Seq())),
+      (1, Some(Seq(Some(2), None)), Some(Seq(null, "c"))),
+      (2, None, None),
+      (3, Some(Seq(None)), Some(Seq(null)))).toDF("g", "ints", "strs")
+    df.createOrReplaceTempView("key_counts_arrays")
+    def blobs(d: org.apache.spark.sql.DataFrame): Map[Int, Seq[(Any, Long)]] =
+      d.collect().map(r => r.getInt(0) -> pairs(KeyCounts.sorted(r.getAs[Array[Byte]](1)))).toMap
+    for ((c, want) <- Seq(
+        "ints" -> Map(0 -> Seq(1L -> 2L, 3L -> 1L), 1 -> Seq(2L -> 1L), 2 -> Nil, 3 -> Nil),
+        "strs" -> Map(0 -> Seq("a" -> 2L, "b" -> 1L), 1 -> Seq("c" -> 1L), 2 -> Nil, 3 -> Nil))) {
+      val arrays = blobs(df.groupBy("g").agg(key_counts(col(c))))
+      assert(arrays == want, c)
+      // explode_outer keeps the groups whose arrays are NULL or empty
+      assert(blobs(df.select(col("g"), explode_outer(col(c)).as("k"))
+        .groupBy("g").agg(key_counts(col("k")))) == arrays, s"$c exploded")
+      assert(blobs(spark.sql(s"SELECT g, key_counts($c) FROM key_counts_arrays GROUP BY g"))
+        == arrays, s"$c through SQL")
+    }
+  }
+
   test("foreign or truncated blobs fail with a message") {
     val blob = counts(IntegerType, Seq(1, 2, 2, 3)).serialize(sorted = true)
     for (bad <- Seq(Array[Byte](1, 2, 3), blob.updated(0, 0.toByte), blob.take(blob.length - 1))) {
