@@ -37,7 +37,17 @@ import org.apache.spark.sql.functions._
   * Output: (idCol, textCol, quality, split) with the cleaned text. Every
   * stage is narrow or broadcast-joined except the line-dedup rebuild and
   * the dedup aggregations (each one shuffle); nothing collects to the
-  * driver.
+  * driver except near dedup's size-gated edge set
+  * ([[Dedup.duplicateGroups]]).
+  *
+  * Eagerness: with `nearDedup` or `dedupAgainst` on, `curate` starts
+  * jobs at call time. It runs the chain up to exact dedup once into an
+  * eager `localCheckpoint`, and near and cross dedup both read its
+  * blocks instead of each re-running the chain; the blocks live as long
+  * as the returned frame and are freed by the ContextCleaner. The cross
+  * stage's drop ids stay lazy, so a second action on the result re-runs
+  * the cross verify (over the blocks, not the chain). Self-trained
+  * `maxLmBits` also checkpoints at call time. Otherwise `curate` is lazy.
   *
   * Resume story: several stages are corpus-GLOBAL (hot lines, duplicate
   * groups), so partition-granular checkpointing à la
@@ -200,35 +210,35 @@ object Curation {
     // key on the text alone: the payload already carries it, and a
     // fingerprint prefix adds no discriminating power over the text it
     // accompanies — it only widens the dedup exchange
-    val exactDeduped = Dedup.keepCanonical(lmFiltered, col(textCol), Seq(col(idCol)))
+    // near dedup and the cross stage each read their input three times
+    // (banding, shingle verify, final anti-join); lazily, every read
+    // re-ran this whole chain (NFC, line-dedup census and rebuild,
+    // redaction, quality floor, exact dedup). One eager localCheckpoint
+    // runs it once, here, at call time: the write-once/read-many
+    // materialization of a multi-consumer intermediate, spilling to
+    // executor disk past storage memory. Its blocks live as long as the
+    // returned frame and are freed by the ContextCleaner.
+    val exactDeduped = {
+      val deduped = Dedup.keepCanonical(lmFiltered, col(textCol), Seq(col(idCol)))
+      if (cfg.nearDedup || cfg.dedupAgainst.isDefined) deduped.localCheckpoint(true)
+      else deduped
+    }
     val nearDeduped =
       if (cfg.nearDedup)
         Dedup.dedupCorpus(exactDeduped, idCol, textCol, cfg.nearDedupThreshold)
       else exactDeduped
     val crossDeduped = cfg.dedupAgainst match {
       case Some(ref) =>
-        // the upstream chain (line dedup + redaction + scoring + exact
-        // dedup) feeds the cross stage THREE times (banding, shingle
-        // verify, final anti-join) — materialize it ONCE with an eager
-        // localCheckpoint and let banding, verify AND the final
-        // anti-join all read the blocks (freed by the ContextCleaner
-        // when the result is dereferenced). The r7 shape persisted only
-        // for the eager hit computation and re-evaluated the whole
-        // multi-stage chain once more for the final anti-join; at scale
-        // the checkpoint is the classic write-once/read-thrice
-        // materialization of a multi-consumer intermediate (guide §5),
-        // spilling to executor disk when larger than storage memory.
-        val cached = nearDeduped.localCheckpoint(true)
-        val hits = Dedup.crossCorpusDuplicates(cached, ref, idCol, textCol,
+        // the cross input is the checkpoint itself or near dedup's
+        // broadcast anti-join over its blocks: cheap to read three times
+        val hits = Dedup.crossCorpusDuplicates(nearDeduped, ref, idCol, textCol,
           cfg.nearDedupThreshold, cfg.crossShingleN, cfg.crossBands,
           cfg.crossRowsPerBand, shingleId = cfg.crossShingleId)
-        // the drop-id set is a pure function of the (checkpointed) pair
-        // frame and the (checkpointed) chain — the broadcast build
-        // evaluates it directly from those blocks, so an intermediate
-        // localCheckpoint here was one whole extra job for nothing
+        // the drop ids stay lazy (no job at call time): each action on the
+        // result re-runs the shingle verify over the checkpointed blocks
         val dropIds0 = hits.select(col("new_id").as(idCol)).distinct()
         val dropIds = if (cfg.broadcastDrops) broadcast(dropIds0) else dropIds0
-        cached.join(dropIds, Seq(idCol), "left_anti")
+        nearDeduped.join(dropIds, Seq(idCol), "left_anti")
       case None => nearDeduped
     }
     val decontaminated = cfg.decontaminateAgainst match {

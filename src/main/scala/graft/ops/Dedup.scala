@@ -787,9 +787,16 @@ object Dedup {
     * the degenerate boilerplate group still collapses to one survivor
     * while healthy buckets take the exact-verified pair path.
     *
-    * One banding pass (persisted and released); pairs localCheckpoint'ed
-    * (the CC iteration re-reads them each round); the final anti-join
-    * broadcasts the (small) loser set, so the corpus never shuffles. */
+    * One banding pass (persisted and released); pairs persisted while
+    * the components are solved (the CC iteration re-reads them each
+    * round) and released before return; the final anti-join broadcasts
+    * the (small) loser set, so the corpus never shuffles.
+    *
+    * `df` is read three times: by the banding, by the shingle verify and
+    * by the final anti-join. Nothing here caches it, so a caller whose
+    * `df` is an expensive lazy plan should materialize it first
+    * (`localCheckpoint(true)` or `persist()`), as [[Curation.curate]]
+    * does; a plain file scan is cheap enough to read three times. */
   def dedupCorpus(df: DataFrame, idCol: String, textCol: String,
                   threshold: Double, shingleN: Int = 3,
                   bands: Int = 16, rowsPerBand: Int = 4,
@@ -828,10 +835,18 @@ object Dedup {
           .select(col("_gmin").as("id_a"), col("id").as("id_b"))
           .distinct()
       }
-    val allPairs = verified.union(hotPairs).localCheckpoint(true)
-    banded.unpersist(false)
-    val losers = duplicateGroups(allPairs, maxIter)
-      .where(col("id") =!= col("group_id"))
+    // held only while the components are solved: the local path collects
+    // the pairs, the distributed path checkpoints its labels, so neither
+    // result reads them again and the cache is released on return
+    val allPairs = verified.union(hotPairs).persist()
+    val groups = try {
+      // fills the pair cache while the band cache serves it; an RDD count
+      // is one job, where Dataset.count adds a final-aggregate exchange
+      allPairs.rdd.count()
+      banded.unpersist(false)
+      duplicateGroups(allPairs, maxIter)
+    } finally allPairs.unpersist(false)
+    val losers = groups.where(col("id") =!= col("group_id"))
     df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
   }
 

@@ -3185,6 +3185,114 @@ class OpsSpec extends SparkSpec {
     assert(a === b && a === ((20L until 30L).toSet - 25L), s"a=$a b=$b")
   }
 
+  // parquet-backed curate corpus with planted clones: 120 bases of 30
+  // seeded words plus a shared banner line (line dedup strips it), 20
+  // exact clones of bases 0-19, 20 near clones of bases 20-39 (word 17
+  // replaced), 5 junk docs under the quality floor
+  lazy val clonesPath: String = {
+    val rnd = new scala.util.Random(13)
+    val banner = "\nSubscribe to our newsletter for updates"
+    val bases = (0 until 120).map(_ => (0 until 30).map(_ => s"w${rnd.nextInt(1000000)}"))
+    val rows = bases.zipWithIndex.map { case (w, i) => (i.toLong, w.mkString(" ") + banner) } ++
+      (0 until 20).map(i => ((120 + i).toLong, bases(i).mkString(" ") + banner)) ++
+      (20 until 40).map(i => ((120 + i).toLong, bases(i).updated(17, "zzz").mkString(" ") + banner)) ++
+      (0 until 5).map(i => ((160 + i).toLong, s"### !? $i"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-clones").resolve("docs").toString
+    rows.toDF("doc_id", "text").repartition(3).write.parquet(dir)
+    dir
+  }
+
+  /** Rows the source file scans return while `body` runs: summed over the
+    * tasks of stages that scan files, so reads of cached or checkpointed
+    * blocks do not count. */
+  def sourceRecordsRead[T](body: => T): (T, Long) = {
+    import org.apache.spark.scheduler._
+    val scanStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val records = new java.util.concurrent.atomic.AtomicLong()
+    val markerSeen = new java.util.concurrent.atomic.AtomicBoolean()
+    val marker = "graft-records-marker"
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+          scanStages.add(e.stageInfo.stageId)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (scanStages.contains(e.stageId) && e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == marker) markerSeen.set(true)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      // listener events arrive in order: once the marker job's start is
+      // seen, so is every task end of the jobs before it
+      sc.setJobGroup(marker, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!markerSeen.get && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markerSeen.get, "marker job never reached the listener")
+      (out, records.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("curate: near dedup runs the pre-dedup chain once") {
+    val src = spark.read.parquet(clonesPath)
+    def run(near: Boolean) = sourceRecordsRead {
+      val df = Curation.curate(src, "doc_id", "text", Curation.CurationConfig(
+        nearDedup = near, nearDedupThreshold = 0.7))
+      (df, df.select("doc_id").collect().map(_.getLong(0)).toSet)
+    }
+    val ((lazyDf, exactOnly), chainOnce) = run(near = false)
+    val ((nearDf, out), read) = run(near = true)
+    // the checkpoint feeds banding, verify and the final anti-join, so
+    // the source is scanned exactly as often as for one lazy evaluation
+    // (three times as often when each near-dedup read re-ran the chain)
+    assert(chainOnce > 0 && read == chainOnce, s"near dedup read $read rows, one chain $chainOnce")
+    def fileRelations(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r
+      }.size
+    assert(fileRelations(lazyDf) > 0, lazyDf.queryExecution.optimizedPlan.toString)
+    assert(fileRelations(nearDf) == 0, nearDf.queryExecution.optimizedPlan.toString)
+    // survivors as recorded before the checkpoint: exact and near clones
+    // fold into their bases, junk falls under the quality floor
+    assert(exactOnly == ((0L until 120L) ++ (140L until 160L)).toSet, exactOnly.toString)
+    assert(out == (0L until 120L).toSet, out.toString)
+  }
+
+  test("curate: near and cross dedup together") {
+    val src = spark.read.parquet(clonesPath)
+    val ref = src.where(col("doc_id").between(40, 59))
+      .withColumn("doc_id", col("doc_id") + 10000)
+    val out = Curation.curate(src, "doc_id", "text", Curation.CurationConfig(
+      nearDedup = true, nearDedupThreshold = 0.7, dedupAgainst = Some(ref)))
+    val ids = out.select("doc_id").collect().map(_.getLong(0)).toSet
+    val digest = out.agg(bit_xor(xxhash64(col("doc_id"), col("text"), col("quality"),
+      col("split")))).head().getLong(0)
+    // as recorded when the cross stage checkpointed near dedup's output
+    // on its own: bases 40-59 near-duplicate the reference, clones fold
+    assert(ids == ((0L until 40L) ++ (60L until 120L)).toSet, ids.toString)
+    assert(digest == -364134935996150630L, s"rows differ: digest $digest")
+  }
+
+  test("dedupCorpus leaves no cached pairs behind") {
+    val sc = spark.sparkContext
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+    def left() = sc.getPersistentRDDs.keySet -- rddsBefore
+    val out = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.4, shingleN = 2)
+    // the registry holds RDDs weakly: checked at once, before a GC can
+    // drop an abandoned checkpoint from it
+    assert(left().isEmpty, s"persisted RDDs left on return: ${left()}")
+    val n = out.count()
+    assert(n == 100L, s"each planted clone folds into its base: $n")
+    assert(left().isEmpty, s"persisted RDDs left: ${left()}")
+    assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == entriesBefore)
+  }
+
   test("LmScore: hand-computed smoothing arithmetic, OOV, and fluency filter") {
     val corpus = Seq((1L, "a b a"), (2L, "a b"), (3L, "c"), (4L, "z z"))
       .toDF("doc_id", "text")
