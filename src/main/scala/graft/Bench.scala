@@ -387,14 +387,12 @@ object ScalingBench {
           case "dedup" =>
             val txt = input.where(col("doc_id").isNotNull)
               .select(col("doc_id"), concat_ws(" ", col("tokens")).as("text"))
-            // eager variant: banding runs once (persisted) instead of the
-            // lazy plan's one-pass-per-join-side — size the input with
-            // SPARK_GRAFT_SCALING_ROWS (dedup is ~10× heavier per row
-            // than the validation scan; ~200k rows ≈ a 1-minute 1-core
-            // level)
+            // banding runs once (persisted by the eager pair path) — size
+            // the input with SPARK_GRAFT_SCALING_ROWS (dedup is ~10×
+            // heavier per row than the validation scan; ~200k rows ≈ a
+            // 1-minute 1-core level)
             graft.ops.Dedup.minhashDuplicates(txt, "doc_id", "text",
-              threshold = 0.5, shingleN = 3, bands = 8, rowsPerBand = 4,
-              materializePairs = true).count()
+              threshold = 0.5, shingleN = 3, bands = 8, rowsPerBand = 4).count()
           case "corpus" =>
             // the END-TO-END dedup shape 100-TB users actually run
             // (VERDICT r6 #7): banding shuffle + verified pairs +

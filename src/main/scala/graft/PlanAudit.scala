@@ -164,9 +164,11 @@ object PlanAudit {
     audit("fused_greedy_errors (kernel gated behind valid)",
       df.select(size(validator.errors(df.schema)).as("n")).agg(sum("n")))
     val docs = spark.read.parquet(s"$d/documents.parquet")
-    audit("minhash_lsh_band_join (id+band+bucket only, hot-bucket cap)",
-      Dedup.minhashDuplicates(docs, "doc_id", "text", 0.8, shingleN = 2,
-        rowsPerBand = 2, materializePairs = false))
+    // the band join minhashDuplicates checkpoints (a cold census leaves
+    // the bands uncapped)
+    audit("minhash_lsh_band_join (id+band+bucket only)",
+      Dedup.bandPairs(Dedup.bandedBuckets(docs, "doc_id", "text", shingleN = 2,
+        bands = 16, rowsPerBand = 2, seed = 42L, Dedup.xxhashShingleId)))
     val e = spark.read.parquet(s"$d/embeddings.parquet")
     audit("lsh_ann_topk (no vectors in the bucket join)",
       Similarity.lshTopK(e, "vec_id", "embedding",

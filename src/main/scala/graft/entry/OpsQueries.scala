@@ -371,13 +371,10 @@ object OpsQueries {
     // dedup, and Jaccard verification — the parts that matter at scale —
     // are identical to the production path and are restated verbatim).
     Q("q_dedup_minhash_lsh",
-      // materializePairs = false: on a 200-doc gate input the eager
-      // localCheckpoint's fixed multi-job latency dominates; the lazy
-      // plan recomputes the (cheap) signatures instead
       (s, d) => Dedup.minhashDuplicates(
         T(s, d, "documents").where(col("doc_id") < 200), "doc_id", "text",
         threshold = 0.10, shingleN = 2, bands = 16, rowsPerBand = 2,
-        shingleId = Dedup.portableShingleId, materializePairs = false),
+        shingleId = Dedup.portableShingleId),
       Some {
         val fam = Dedup.hashFamily(16 * 2, 42L)
         val slots = fam.map { case (a, b) =>
@@ -411,7 +408,7 @@ object OpsQueries {
       (s, d) => Dedup.simhashDuplicates(
         T(s, d, "documents").where(col("doc_id") < 200), "doc_id", "text",
         maxDist = 16, shingleN = 2,
-        shingleId = Dedup.portableShingleId62, materialize = false),
+        shingleId = Dedup.portableShingleId62),
       Some(
         s"""WITH $duckShingles200,
             hs AS (SELECT doc_id,
@@ -1141,13 +1138,14 @@ object OpsQueries {
     Q("q_lm_score",
       (s, d) => {
         val docs = T(s, d, "documents")
-        // tokenize ONCE (lazy persist — the train census job fills the
-        // cache, no dedicated materialization job): the unigram census,
-        // the bigram census and the scoring pass all read the cached arrays
+        // tokenize ONCE (lazy local checkpoint — the train census job
+        // fills it, no dedicated materialization job, and the
+        // ContextCleaner frees it with the frame): the unigram census,
+        // the bigram census and the scoring pass all read the stored arrays
         // instead of re-running tokenize+explode from parquet per
         // consumer — words() is deterministic, so results are identical
         val w = docs.select(col("doc_id"),
-          TextAnalysis.words(col("text")).as("ws")).persist()
+          TextAnalysis.words(col("text")).as("ws")).localCheckpoint(false)
         val model = LmScore.trainFromWords(w, "ws", topV = 500, maxBigrams = 2000)
         LmScore.crossEntropyFromWords(w, "doc_id", "ws", model)
       },
@@ -1197,8 +1195,8 @@ object OpsQueries {
     Q("q_dsir_weights",
       (s, d) => {
         val docs = T(s, d, "documents")
-        // tokenize ONCE (lazy persist — trainDual's census job fills the
-        // cache) and train BOTH models in
+        // tokenize ONCE (lazy local checkpoint — trainDual's census job
+        // fills it) and train BOTH models in
         // one shared census (LmScore.trainDual): the r7 shape re-ran
         // tokenize+explode from parquet in every one of the five
         // consumers (two unigram censuses, two bigram censuses, the
@@ -1207,7 +1205,7 @@ object OpsQueries {
         // words() is deterministic and trainDual is value-identical to
         // the two-train formulation: results identical.
         val w = docs.select(col("doc_id"), (col("lang") === "en").as("is_t"),
-          TextAnalysis.words(col("text")).as("ws")).persist()
+          TextAnalysis.words(col("text")).as("ws")).localCheckpoint(false)
         val (target, raw) = LmScore.trainDual(w, "ws", "is_t",
           topV = 500, maxBigrams = 2000)
         Dsir.importanceWeightsFromWords(w, "doc_id", "ws", target, raw)
@@ -1229,10 +1227,10 @@ object OpsQueries {
       // cannot hash DECIMAL; round-6 exact so lossless)
       (s, d) => {
         val docs = T(s, d, "documents")
-        // tokenize ONCE (lazy persist) + one shared dual-model census —
+        // tokenize ONCE (lazy local checkpoint) + one shared dual-model census —
         // the q_dsir_weights words-sharing/trainDual shape
         val w = docs.select(col("doc_id"), (col("lang") === "en").as("is_t"),
-          TextAnalysis.words(col("text")).as("ws")).persist()
+          TextAnalysis.words(col("text")).as("ws")).localCheckpoint(false)
         val (target, raw) = LmScore.trainDual(w, "ws", "is_t",
           topV = 500, maxBigrams = 2000)
         Dsir.resampleFromWords(w, "doc_id", "ws", target, raw, k = 25, seed = 42L)

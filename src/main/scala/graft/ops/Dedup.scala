@@ -149,25 +149,19 @@ object Dedup {
       .groupBy("id").agg(collect_set(col("fp")).as("_fps"))
       .select(col("id"), size(col("_fps")).cast("long").as("_sz"),
         explode(col("_fps")).as("fp"))
-      .persist()
-    // eager hot-fingerprint census first (fills the cache); a cold guard
-    // then costs the pair join nothing
-    val capped = capBucketsIf(
-      adjudicateHotBuckets("winnowOverlaps", sel, Seq("fp"), maxBucket),
-      sel, Seq("fp"), maxBucket)
-    val out = capped.select(col("fp"), col("id").as("id_a"), col("_sz").as("_na"))
-      .join(capped.select(col("fp"), col("id").as("id_b"), col("_sz").as("_nb")),
-        Seq("fp"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_fps"),
-        first("_na").as("_na"), first("_nb").as("_nb"))
-      .where(col("shared_fps") >= minShared)
-      .select(col("id_a"), col("id_b"), col("shared_fps"),
-        (col("shared_fps").cast("double") / col("_na")).as("coverage_a"),
-        (col("shared_fps").cast("double") / col("_nb")).as("coverage_b"))
-      .localCheckpoint(true) // eager: bounds the selection cache
-    sel.unpersist(false)
-    out
+    eagerBucketJoin("winnowOverlaps", Seq("fp"), maxBucket,
+        Seq(BucketSide("", sel))) { case Seq(s) =>
+      s.select(col("fp"), col("id").as("id_a"), col("_sz").as("_na"))
+        .join(s.select(col("fp"), col("id").as("id_b"), col("_sz").as("_nb")),
+          Seq("fp"))
+        .where(col("id_a") < col("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as("shared_fps"),
+          first("_na").as("_na"), first("_nb").as("_nb"))
+        .where(col("shared_fps") >= minShared)
+        .select(col("id_a"), col("id_b"), col("shared_fps"),
+          (col("shared_fps").cast("double") / col("_na")).as("coverage_a"),
+          (col("shared_fps").cast("double") / col("_nb")).as("coverage_b"))
+    }
   }
 
   /** Build a Bloom EXACT-dedup index over a corpus's `key` values — the
@@ -358,42 +352,23 @@ object Dedup {
     * shingle arrays cross the band shuffle or sit in the cache. The bucket
     * key is the band's raw signature slice (exact, no hash-bucket
     * collisions, and restateable by a SQL oracle). Candidate id pairs are
-    * deduped, eagerly materialized (they are the smallest intermediate in
-    * the pipeline — bounded by LSH collisions), and only then re-joined to
-    * the per-doc shingle sets for exact Jaccard verification; with pairs
-    * small, that re-join broadcasts the pairs and the shingles never
-    * shuffle. Materializing the pairs also bounds the band cache's
-    * lifetime to this call (no unbounded executor-storage growth across
-    * repeated dedup calls).
-    *
-    * `materializePairs = true` (default) runs the banding job AT CALL TIME
-    * and truncates its lineage into executor-local blocks
-    * (`localCheckpoint`): right for one-shot batch use, but an executor
-    * lost afterwards cannot recompute them. Pass false for a fully lazy,
-    * lineage-preserving plan (plan audits, reliability-critical clusters) —
-    * the caller then owns caching: without it the self-join and the verify
-    * re-join recompute the signatures. */
+    * deduped and checkpointed at call time by [[eagerBucketJoin]] (they
+    * are the smallest intermediate in the pipeline — bounded by LSH
+    * collisions), and only then re-joined to the per-doc shingle sets for
+    * exact Jaccard verification; with pairs small, that re-join
+    * broadcasts the pairs and the shingles never shuffle. The checkpoint
+    * truncates the pairs' lineage into executor-local blocks: an executor
+    * lost afterwards cannot recompute them. */
   def minhashDuplicates(df: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleN: Int = 3,
                         bands: Int = 16, rowsPerBand: Int = 4,
                         seed: Long = 42L,
                         shingleId: Column => Column = xxhashShingleId,
-                        materializePairs: Boolean = true,
                         maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val pairIds = if (materializePairs) {
-      // narrow banded frame, cached so the self-join doesn't recompute
-      // every signature once per side; the hot-bucket census runs FIRST
-      // (filling the cache) so a cold guard costs the pair join nothing
-      val banded = bandedBuckets(df, idCol, textCol, shingleN, bands,
-        rowsPerBand, seed, shingleId).persist()
-      val anyHot = adjudicateHotBuckets("minhashDuplicates", banded,
-        Seq("band", "bucket"), maxBucket)
-      val pairs = bandPairs(banded, maxBucket, Some(anyHot))
-        .localCheckpoint(true) // eager: bounds the band cache's lifetime
-      banded.unpersist(false)
-      pairs
-    } else bandPairs(bandedBuckets(df, idCol, textCol, shingleN, bands,
-      rowsPerBand, seed, shingleId), maxBucket)
+    val banded = bandedBuckets(df, idCol, textCol, shingleN, bands,
+      rowsPerBand, seed, shingleId)
+    val pairIds = eagerBucketJoin("minhashDuplicates", BandKeys, maxBucket,
+      Seq(BucketSide("", banded))) { case Seq(b) => bandPairs(b) }
 
     // re-join shingles by id for the exact verification pass
     val sh = df.select(col(idCol).as("id"), shingles(col(textCol), shingleN).as("sh"))
@@ -472,73 +447,71 @@ object Dedup {
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.ops.Dedup")
 
-  /** Eager hot-bucket adjudication on an already-materialized banded
-    * frame: ONE bounded agg job (reading cache, not the source) that
-    * both logs the dropped buckets (no silent caps) and tells the
-    * caller whether the guard has anything to do — when it returns
-    * false, [[capBuckets]] is provably the identity and its recount
-    * aggregation + join can be skipped in the pair job outright
-    * (guide §2.4; the r7 shape always paid the recount AND ran this
-    * same census afterwards just for the log). */
-  private def adjudicateHotBuckets(op: String, bucketed: DataFrame,
-                                   keys: Seq[String], maxBucket: Int): Boolean =
-    if (maxBucket == Int.MaxValue) false
-    else {
-      val d = oversizedBuckets(bucketed, keys, maxBucket)
-        .agg(count(lit(1)), coalesce(sum("n"), lit(0L))).head()
-      if (d.getLong(0) > 0)
-        log.warn(s"$op: dropped ${d.getLong(0)} hot buckets " +
-          s"(${d.getLong(1)} member rows) from the pair join; " +
-          "route them via exactDuplicates")
-      d.getLong(0) > 0
-    }
+  /** The (band, bucket) key of a [[bandedBuckets]] frame. */
+  private val BandKeys = Seq("band", "bucket")
 
-  /** [[capBuckets]] with an already-adjudicated verdict: identity when
-    * the eager census found no hot bucket. */
-  private def capBucketsIf(anyHot: Boolean, bucketed: DataFrame,
-                           keys: Seq[String], maxBucket: Int): DataFrame =
-    if (anyHot) capBuckets(bucketed, keys, maxBucket) else bucketed
+  /** One side of a bucket join. `tag` names it in the census log ("" for
+    * a self-join); `cache` is true when this call computed the frame, so
+    * the census and the join share one evaluation of it. A stored index
+    * frame ([[graft.pipeline.IndexStore]]) is read, not cached. */
+  private final case class BucketSide(tag: String, frame: DataFrame,
+                                      cache: Boolean = true)
 
-  /** [[adjudicateHotBuckets]] for BOTH sides of a cross join in ONE
-    * tagged-union action (one job materializes both persisted banded
-    * frames and both censuses instead of two). Same logging, same
-    * verdicts. */
-  private def adjudicateHotBucketsPair(op: String,
-                                       a: DataFrame, b: DataFrame,
-                                       keys: Seq[String],
-                                       maxBucket: Int): (Boolean, Boolean) =
-    if (maxBucket == Int.MaxValue) (false, false)
+  /** The hot-bucket census: ONE job over every side's bucket frame
+    * collects the buckets above the cap (few by construction: each holds
+    * more than `maxBucket` rows), logs each side's count of hot buckets
+    * and their member rows at one site (no silent caps), and says which
+    * sides have any. On a side with none, [[capBuckets]] is provably the
+    * identity, so its recount aggregation and join are skipped (guide
+    * §2.4). Run it on cached sides: it reads each side once. */
+  private def hotBucketCensus(op: String, keys: Seq[String], maxBucket: Int,
+                              sides: Seq[BucketSide]): Seq[Boolean] =
+    if (maxBucket == Int.MaxValue) sides.map(_ => false)
     else {
-      def census(df: DataFrame, side: Int) =
-        oversizedBuckets(df, keys, maxBucket)
-          .agg(count(lit(1)).as("k"), coalesce(sum("n"), lit(0L)).as("m"))
-          .select(lit(side).as("_side"), col("k"), col("m"))
-      val rows = census(a, 0).unionByName(census(b, 1)).collect()
-      def verdict(side: Int, tag: String): Boolean = {
-        val r = rows.find(_.getInt(0) == side).get
-        if (r.getLong(1) > 0)
-          log.warn(s"$op($tag): dropped ${r.getLong(1)} hot buckets " +
-            s"(${r.getLong(2)} member rows) from the pair join; " +
-            "route them via exactDuplicates")
-        r.getLong(1) > 0
+      val hot = sides.zipWithIndex
+        .map { case (s, i) =>
+          oversizedBuckets(s.frame, keys, maxBucket).select(lit(i).as("_side"), col("n"))
+        }
+        .reduce(_ unionByName _).collect()
+      sides.zipWithIndex.map { case (s, i) =>
+        val ns = hot.collect { case r if r.getInt(0) == i => r.getLong(1) }
+        if (ns.nonEmpty)
+          log.warn(s"$op${s.tag}: ${ns.length} hot buckets " +
+            s"(${ns.sum} member rows, over $maxBucket each) kept out of the " +
+            "pair join; route them via exactDuplicates")
+        ns.nonEmpty
       }
-      (verdict(0, "new"), verdict(1, "ref"))
     }
+
+  /** The eager lifecycle of every bucket-join operator: persist the sides
+    * this call computed, run [[hotBucketCensus]] over all sides (its job
+    * fills those caches), cap only the sides with a hot bucket, `join`
+    * the sides (in `sides` order), checkpoint the pairs eagerly, then
+    * release the caches. The pairs are the smallest intermediate (bounded
+    * by bucket collisions), so the checkpoint bounds every cache's
+    * lifetime to this call; its own blocks are freed by the ContextCleaner
+    * once the result is unreferenced. */
+  private def eagerBucketJoin(op: String, keys: Seq[String], maxBucket: Int,
+                              sides: Seq[BucketSide])
+                             (join: Seq[DataFrame] => DataFrame): DataFrame = {
+    val cached = sides.filter(_.cache).map(_.frame.persist())
+    try {
+      val hot = hotBucketCensus(op, keys, maxBucket, sides)
+      join(sides.zip(hot).map { case (s, h) =>
+        if (h) capBuckets(s.frame, keys, maxBucket) else s.frame
+      }).localCheckpoint(true)
+    } finally cached.foreach(_.unpersist(false))
+  }
 
   /** Bucket self-join: only docs agreeing on a full band collide; output
     * is the deduped (id_a, id_b) candidate list — no shingles, no
-    * signatures cross this shuffle. Buckets above `maxBucket` are dropped
-    * (hot-bucket guard — see [[DefaultMaxBucket]]). */
-  private[graft] def bandPairs(banded: DataFrame,
-                               maxBucket: Int = Int.MaxValue,
-                               adjudicatedHot: Option[Boolean] = None): DataFrame = {
-    val guarded = adjudicatedHot match {
-      case Some(anyHot) => capBucketsIf(anyHot, banded, Seq("band", "bucket"), maxBucket)
-      case None => capBuckets(banded, Seq("band", "bucket"), maxBucket)
-    }
-    val a = guarded.select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = guarded.select(col("band"), col("bucket"), col("id").as("id_b"))
-    a.join(b, Seq("band", "bucket"))
+    * signatures cross this shuffle. The hot-bucket cap is applied to
+    * `banded` before this join, by [[eagerBucketJoin]] or
+    * [[dedupCorpus]]. Exposed for plan audits. */
+  private[graft] def bandPairs(banded: DataFrame): DataFrame = {
+    val a = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
+    val b = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
+    a.join(b, BandKeys)
       .where(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
@@ -551,67 +524,26 @@ object Dedup {
     *
     * Same de-payloaded discipline as [[minhashDuplicates]]: both sides
     * band to (id, band, bucket); the band join is new×ref (no self-join,
-    * no id ordering); candidate id pairs dedup while narrow; shingles
-    * re-join by id for the exact verification. The hot-bucket cap
-    * applies to BOTH sides' bucket populations. At scale the reference
-    * side's banded frame is the thing to precompute and persist — it is
-    * a pure function of the reference corpus.
-    *
-    * `materializePairs = true` (default) persists both banded frames,
-    * eagerly materializes the (narrow) candidate pairs, and LOGS dropped
-    * hot buckets per side — the [[minhashDuplicates]] discipline, so the
-    * verify re-join sees a small sized relation and broadcasts instead
-    * of shuffling both corpora's shingle arrays. Pass false for a fully
-    * lazy, lineage-preserving plan (the caller owns caching). */
+    * no id ordering); candidate id pairs dedup while narrow and are
+    * checkpointed at call time; shingles re-join by id for the exact
+    * verification. The hot-bucket cap applies to BOTH sides' bucket
+    * populations, and the census logs each side's hot buckets. At scale
+    * the reference side's banded frame is the thing to precompute and
+    * persist — it is a pure function of the reference corpus
+    * ([[crossCorpusDuplicatesIndexed]] runs the same body over it). */
   def crossCorpusDuplicates(newDf: DataFrame, refDf: DataFrame,
                             idCol: String, textCol: String,
                             threshold: Double, shingleN: Int = 3,
                             bands: Int = 16, rowsPerBand: Int = 4,
                             seed: Long = 42L,
                             shingleId: Column => Column = xxhashShingleId,
-                            materializePairs: Boolean = true,
-                            maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    def banded(df: DataFrame) =
-      bandedBuckets(df, idCol, textCol, shingleN, bands, rowsPerBand, seed, shingleId)
-    val pairs = if (materializePairs) {
-      val bn = banded(newDf).persist(); val br = banded(refDf).persist()
-      // one tagged-union census job adjudicates BOTH sides (and fills
-      // both caches) — the r7 shape ran one census job per side
-      val (hotN, hotR) = adjudicateHotBucketsPair("crossCorpusDuplicates",
-        bn, br, Seq("band", "bucket"), maxBucket)
-      val p = crossBandPairs(bn, br, maxBucket, Some(hotN), Some(hotR))
-        .localCheckpoint(true)
-      bn.unpersist(false); br.unpersist(false)
-      p
-    } else crossBandPairs(banded(newDf), banded(refDf), maxBucket)
-    // shared verification path (oracle-proven arithmetic lives in ONE place)
-    val shN = newDf.select(col(idCol).as("id_a"),
-      shingles(col(textCol), shingleN).as("sh_a"))
-    val shR = refDf.select(col(idCol).as("id_b"),
-      shingles(col(textCol), shingleN).as("sh_b"))
-    verifyJaccard(pairs.join(shN, Seq("id_a")).join(shR, Seq("id_b")), threshold)
-      .withColumnRenamed("id_a", "new_id")
-      .withColumnRenamed("id_b", "ref_id")
-  }
-
-  /** Asymmetric (new × ref) band join: both sides' bucket populations
-    * capped, candidate id pairs deduped while narrow. */
-  private[graft] def crossBandPairs(bn: DataFrame, br: DataFrame,
-                                    maxBucket: Int,
-                                    adjudicatedHotN: Option[Boolean] = None,
-                                    adjudicatedHotR: Option[Boolean] = None): DataFrame = {
-    def guard(df: DataFrame, adjudicated: Option[Boolean]) = adjudicated match {
-      case Some(anyHot) => capBucketsIf(anyHot, df, Seq("band", "bucket"), maxBucket)
-      case None => capBuckets(df, Seq("band", "bucket"), maxBucket)
-    }
-    guard(bn, adjudicatedHotN)
-      .select(col("band"), col("bucket"), col("id").as("id_a"))
-      .join(guard(br, adjudicatedHotR)
-        .select(col("band"), col("bucket"), col("id").as("id_b")),
-        Seq("band", "bucket"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-  }
+                            maxBucket: Int = DefaultMaxBucket): DataFrame =
+    crossCorpusBody(newDf,
+      BucketSide("(ref)", bandedBuckets(refDf, idCol, textCol, shingleN, bands,
+        rowsPerBand, seed, shingleId)),
+      refDf.select(col(idCol).as("id"), shingles(col(textCol), shingleN).as("sh")),
+      idCol, textCol, threshold, shingleN, bands, rowsPerBand, seed, shingleId,
+      maxBucket)
 
   /** [[crossCorpusDuplicates]] against a PRECOMPUTED reference index —
     * the production incremental-ingestion shape: the reference side's
@@ -621,8 +553,9 @@ object Dedup {
     * existing corpus. `refBanded` must be (id, band, bucket) and
     * `refShingles` (id, sh), both produced with the SAME
     * (shingleN, bands, rowsPerBand, seed, shingleId) parameters passed
-    * here — the manifest-checked load surface enforces that. Output is
-    * identical to [[crossCorpusDuplicates]] on the original reference. */
+    * here — the manifest-checked load surface enforces that. The stored
+    * frames are read, not cached. Output is identical to
+    * [[crossCorpusDuplicates]] on the original reference. */
   def crossCorpusDuplicatesIndexed(newDf: DataFrame,
                                    refBanded: DataFrame, refShingles: DataFrame,
                                    idCol: String, textCol: String,
@@ -630,23 +563,29 @@ object Dedup {
                                    bands: Int = 16, rowsPerBand: Int = 4,
                                    seed: Long = 42L,
                                    shingleId: Column => Column = xxhashShingleId,
-                                   materializePairs: Boolean = true,
-                                   maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val pairs = if (materializePairs) {
-      val bn = bandedBuckets(newDf, idCol, textCol, shingleN, bands,
-        rowsPerBand, seed, shingleId).persist()
-      val hotN = adjudicateHotBuckets("crossCorpusDuplicatesIndexed(new)", bn,
-        Seq("band", "bucket"), maxBucket)
-      // the ref side is a stored index frame (not cached here) — its
-      // guard stays inline rather than paying an extra adjudication scan
-      val p = crossBandPairs(bn, refBanded, maxBucket, Some(hotN))
-        .localCheckpoint(true)
-      bn.unpersist(false)
-      p
-    } else crossBandPairs(
-      bandedBuckets(newDf, idCol, textCol, shingleN, bands, rowsPerBand,
-        seed, shingleId),
-      refBanded, maxBucket)
+                                   maxBucket: Int = DefaultMaxBucket): DataFrame =
+    crossCorpusBody(newDf, BucketSide("(ref)", refBanded, cache = false),
+      refShingles, idCol, textCol, threshold, shingleN, bands, rowsPerBand,
+      seed, shingleId, maxBucket)
+
+  /** The one cross-corpus body: the new batch's banded frame joins `ref`
+    * (asymmetric, both sides capped), and the pairs verify against the
+    * shared Jaccard path (oracle-proven arithmetic lives in ONE place). */
+  private def crossCorpusBody(newDf: DataFrame, ref: BucketSide,
+                              refShingles: DataFrame, idCol: String,
+                              textCol: String, threshold: Double,
+                              shingleN: Int, bands: Int, rowsPerBand: Int,
+                              seed: Long, shingleId: Column => Column,
+                              maxBucket: Int): DataFrame = {
+    val bn = BucketSide("(new)", bandedBuckets(newDf, idCol, textCol, shingleN,
+      bands, rowsPerBand, seed, shingleId))
+    val pairs = eagerBucketJoin("crossCorpusDuplicates", BandKeys, maxBucket,
+        Seq(bn, ref)) { case Seq(n, r) =>
+      n.select(col("band"), col("bucket"), col("id").as("id_a"))
+        .join(r.select(col("band"), col("bucket"), col("id").as("id_b")), BandKeys)
+        .select("id_a", "id_b")
+        .dropDuplicates("id_a", "id_b")
+    }
     val shN = newDf.select(col(idCol).as("id_a"),
       shingles(col(textCol), shingleN).as("sh_a"))
     val shR = refShingles.select(col("id").as("id_b"), col("sh").as("sh_b"))
@@ -654,6 +593,16 @@ object Dedup {
       .withColumnRenamed("id_a", "new_id")
       .withColumnRenamed("id_b", "ref_id")
   }
+
+  /** Edge-count gate below which [[duplicateGroups]] solves the
+    * components with a driver-side union-find instead of the iterative
+    * distributed loop: the loop costs several shuffle stages PER ROUND
+    * regardless of size, which dwarfs a bounded collect for small pair
+    * sets (the broadcast-join-threshold philosophy — pick the physical
+    * strategy by size). 1M edges ≈ 16 MB of ids, well inside driver
+    * budget; the labels are identical by construction (min reachable id
+    * under the same ordering). */
+  val LocalGroupsMaxEdges: Int = 1000000
 
   /** Connected components over an undirected duplicate-pair list
     * (id_a, id_b) → (id, group_id), group_id = the minimum id reachable —
@@ -671,16 +620,6 @@ object Dedup {
     * Spark iterative-algorithm discipline. `maxIter` bounds pathological
     * graphs; throws if not converged (a silent partial clustering would
     * merge nothing worse than under-grouping, but callers must know). */
-  /** Edge-count gate below which [[duplicateGroups]] solves the
-    * components with a driver-side union-find instead of the iterative
-    * distributed loop: the loop costs several shuffle stages PER ROUND
-    * regardless of size, which dwarfs a bounded collect for small pair
-    * sets (the broadcast-join-threshold philosophy — pick the physical
-    * strategy by size). 1M edges ≈ 16 MB of ids, well inside driver
-    * budget; the labels are identical by construction (min reachable id
-    * under the same ordering). */
-  val LocalGroupsMaxEdges: Int = 1000000
-
   def duplicateGroups(pairs: DataFrame, maxIter: Int = 25,
                       localMaxEdges: Int = LocalGroupsMaxEdges): DataFrame = {
     val spark = pairs.sparkSession
@@ -809,10 +748,11 @@ object Dedup {
     // eager hot-bucket census (fills the banding cache): when no bucket
     // is hot, the pair join skips the cap recount AND the star-edge
     // branch collapses to a statically-empty frame — the common cold
-    // case pays one bounded agg job instead of two extra joins
-    val anyHot = maxBucket != Int.MaxValue &&
-      !oversizedBuckets(banded, Seq("band", "bucket"), maxBucket).isEmpty
-    val pairIds = bandPairs(banded, maxBucket, Some(anyHot))
+    // case pays one bounded census job instead of two extra joins
+    val anyHot = hotBucketCensus("dedupCorpus", BandKeys, maxBucket,
+      Seq(BucketSide("", banded))).head
+    val pairIds = bandPairs(
+      if (anyHot) capBuckets(banded, BandKeys, maxBucket) else banded)
     val sh = df.select(col(idCol).as("id"), shingles(col(textCol), shingleN).as("sh"))
     val verified = verifyJaccard(
       pairIds
@@ -850,7 +790,6 @@ object Dedup {
     df.join(losers.select(col("id").as(idCol)), Seq(idCol), "left_anti")
   }
 
-  /** Exact n-gram Jaccard over candidate pairs carrying shingle arrays. */
   /** Exact n-gram Jaccard over candidate pairs carrying shingle arrays.
     * Deliberately NOT [[Barrier.opaque]]-protected: the pushed threshold
     * filter lands in the pair JOIN's condition, where it short-circuits
@@ -905,48 +844,34 @@ object Dedup {
   /** SimHash near-duplicate candidates: Hamming(sig_a, sig_b) <= maxDist,
     * blocked on 16-bit chunks (pigeonhole: dist<=3 ⇒ ≥1 of 4 chunks equal).
     * Output: (id_a, id_b, hamming). The chunk self-join carries only one
-    * long signature per side; with `materialize = true` (default) the
-    * output is eagerly computed so the signature cache's lifetime is
-    * bounded to this call — see [[minhashDuplicates]] for the
-    * laziness/lineage tradeoff. */
+    * long signature per side, and the pairs are checkpointed at call time
+    * by [[eagerBucketJoin]] — see [[minhashDuplicates]]. */
   def simhashDuplicates(df: DataFrame, idCol: String, textCol: String,
                         maxDist: Int = 3, shingleN: Int = 3,
                         shingleId: Column => Column = xxhashShingleId64,
-                        materialize: Boolean = true,
                         maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    // cached: the chunk self-join recomputes each side's projection, and
-    // the signature fold is the expensive part
-    val sigs0 = df.select(col(idCol).as("id"),
-      simhash(col(textCol), shingleN, shingleId).as("sig"))
-    val sigs = if (materialize) sigs0.persist() else sigs0
-    val chunked = sigs.select(col("id"), col("sig"),
-      posexplode(array((0 until 4).map { c =>
-        shiftright(col("sig"), c * 16).bitwiseAND(0xFFFFL)
-      }: _*)).as(Seq("chunk", "ckey")))
-    // hot-chunk guard: identical/near-empty docs all share every chunk
-    // key; with materialized signatures the census runs eagerly first
-    // (filling the cache) so a cold guard costs the pair join nothing
-    val guarded =
-      if (materialize)
-        capBucketsIf(adjudicateHotBuckets("simhashDuplicates", chunked,
-            Seq("chunk", "ckey"), maxBucket),
-          chunked, Seq("chunk", "ckey"), maxBucket)
-      else capBuckets(chunked, Seq("chunk", "ckey"), maxBucket)
-    val a = guarded.select(col("chunk"), col("ckey"),
-      col("id").as("id_a"), col("sig").as("sig_a"))
-    val b = guarded.select(col("chunk"), col("ckey"),
-      col("id").as("id_b"), col("sig").as("sig_b"))
-    val joined = a.join(b, Seq("chunk", "ckey"))
-      .where(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .where(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
-    if (materialize) {
-      val out = joined.localCheckpoint(true) // eager: bounds the sig cache
-      sigs.unpersist(false)
-      out
-    } else joined
+    // cached by the join: its two sides would otherwise each recompute
+    // the signature fold, the expensive part
+    val chunked = df.select(col(idCol).as("id"),
+        simhash(col(textCol), shingleN, shingleId).as("sig"))
+      .select(col("id"), col("sig"),
+        posexplode(array((0 until 4).map { c =>
+          shiftright(col("sig"), c * 16).bitwiseAND(0xFFFFL)
+        }: _*)).as(Seq("chunk", "ckey")))
+    // hot-chunk guard: identical/near-empty docs all share every chunk key
+    eagerBucketJoin("simhashDuplicates", Seq("chunk", "ckey"), maxBucket,
+        Seq(BucketSide("", chunked))) { case Seq(c) =>
+      val a = c.select(col("chunk"), col("ckey"),
+        col("id").as("id_a"), col("sig").as("sig_a"))
+      val b = c.select(col("chunk"), col("ckey"),
+        col("id").as("id_b"), col("sig").as("sig_b"))
+      a.join(b, Seq("chunk", "ckey"))
+        .where(col("id_a") < col("id_b"))
+        .dropDuplicates("id_a", "id_b")
+        .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+        .where(col("hamming") <= maxDist)
+        .select("id_a", "id_b", "hamming")
+    }
   }
 
   /** C4-style line-level dedup: every line whose exact text occurs in at

@@ -319,9 +319,9 @@ object Similarity {
                        maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
     val t = df.select(col(idCol).as("id"),
       lshBucket(col(vecCol), dim, planes, seed).as("bucket"))
-    // same cap as the Dedup band/chunk joins; this API is fully lazy, so
-    // (like minhashDuplicates with materializePairs = false) there is no
-    // eager dropped-bucket metric — route via Dedup.oversizedBuckets
+    // same cap as the Dedup band/chunk joins, but this API is fully lazy:
+    // no eager hot-bucket census and no log of dropped buckets — route
+    // them via Dedup.oversizedBuckets
     val guarded = Dedup.capBuckets(t, Seq("bucket"), maxBucket)
     val a = guarded.select(col("bucket"), col("id").as("id_a"))
     val b = guarded.select(col("bucket"), col("id").as("id_b"))

@@ -115,12 +115,11 @@ object IndexStore {
     * the original reference corpus. */
   def crossCorpusAgainst(newDf: DataFrame, index: DedupIndex,
                          idCol: String, textCol: String, threshold: Double,
-                         materializePairs: Boolean = true,
                          maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame =
     Dedup.crossCorpusDuplicatesIndexed(newDf, index.banded, index.shingles,
       idCol, textCol, threshold, index.params.shingleN, index.params.bands,
       index.params.rowsPerBand, index.params.seed, index.params.shingleId,
-      materializePairs, maxBucket)
+      maxBucket)
 
   // ---- IVF centroids ---------------------------------------------------
 

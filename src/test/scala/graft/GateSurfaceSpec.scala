@@ -36,6 +36,19 @@ class GateSurfaceSpec extends SparkSpec {
         "decimals to double):\n  " + offenders.mkString("\n  "))
   }
 
+  test("LM and DSIR gate queries leave no session cache entry") {
+    assume(new java.io.File(sfDir).isDirectory, s"$sfDir missing")
+    for (name <- Seq("q_lm_score", "q_dsir_weights", "q_dsir_resample")) {
+      // caching a plan that is already cached adds no entry, and the
+      // schema test above (or another suite) has built these queries
+      spark.catalog.clearCache()
+      val before = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+      assert(SparkEntry.queries(name)(spark, sfDir).collect().nonEmpty, name)
+      assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == before,
+        s"$name left its words frame in the session cache")
+    }
+  }
+
   test("registry names are unique and oracles reference registered queries") {
     val qNames = SparkEntry.queries.keySet
     val oNames = SparkEntry.oracleSql.keySet

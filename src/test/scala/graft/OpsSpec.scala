@@ -940,6 +940,10 @@ class OpsSpec extends SparkSpec {
     .map(i => ((20000 + i).toLong, "boilerplate header text repeated verbatim"))
     .toDF("doc_id", "text")
 
+  // the 20 planted clones and their 100 bases, as new batch and reference
+  lazy val clones = docs.where(col("doc_id") >= 100)
+  lazy val bases = docs.where(col("doc_id") < 100)
+
   test("minhash hot-bucket guard: degenerate bucket dropped, real pairs kept") {
     val truth = Dedup.ngramJaccardDuplicates(docs, "doc_id", "text",
       blockCol = lit(1), threshold = 0.4, shingleN = 2)
@@ -961,6 +965,33 @@ class OpsSpec extends SparkSpec {
     assert(!guarded.exists { case (a, b) => a >= 20000 || b >= 20000 })
     val planted = guarded.count { case (a, b) => b == a + 100 }
     assert(planted >= 12, s"expected >=12 planted pairs to survive, got $planted")
+  }
+
+  test("cross-corpus hot-bucket guard: a hot bucket on either side, direct and indexed agree") {
+    // one boilerplate doc on the other side: uncapped, it would pair with
+    // every member of the hot group
+    val lone = Seq((19999L, "boilerplate header text repeated verbatim"))
+      .toDF("doc_id", "text")
+    val planted = (0 until 20).map(i => ((i + 100).toLong, i.toLong)).toSet
+    def key(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for ((side, newBatch, ref) <- Seq(
+        ("ref", clones.union(lone), bases.union(hotDocs)),
+        ("new", clones.union(hotDocs), bases.union(lone)))) {
+      val direct = key(Dedup.crossCorpusDuplicates(newBatch, ref, "doc_id", "text",
+        threshold = 0.4, shingleN = 2, bands = 16, rowsPerBand = 4, maxBucket = 100))
+      val dir = java.nio.file.Files.createTempDirectory("graft-hot-index").toString
+      graft.pipeline.IndexStore.saveDedupIndex(ref, "doc_id", "text", dir,
+        shingleN = 2, bands = 16, rowsPerBand = 4)
+      val indexed = key(graft.pipeline.IndexStore.crossCorpusAgainst(newBatch,
+        graft.pipeline.IndexStore.loadDedupIndex(spark, dir), "doc_id", "text",
+        threshold = 0.4, maxBucket = 100))
+      assert(indexed == direct, s"hot $side: direct-only=${direct -- indexed} " +
+        s"indexed-only=${indexed -- direct}")
+      assert(!direct.exists { case (n, r, _) => n >= 19999 || r >= 19999 },
+        s"hot $side: pairs through the hot group")
+      assert(direct.map(t => (t._1, t._2)) == planted, s"hot $side: $direct")
+    }
   }
 
   test("cosineDuplicates: hot-bucket guard + vectors kept off the bucket join") {
@@ -3278,20 +3309,50 @@ class OpsSpec extends SparkSpec {
     assert(digest == -364134935996150630L, s"rows differ: digest $digest")
   }
 
-  test("dedupCorpus leaves no cached pairs behind") {
-    val sc = spark.sparkContext
-    val rddsBefore = sc.getPersistentRDDs.keySet
-    val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
-    def left() = sc.getPersistentRDDs.keySet -- rddsBefore
-    val out = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.4, shingleN = 2)
-    // the registry holds RDDs weakly: checked at once, before a GC can
-    // drop an abandoned checkpoint from it
-    assert(left().isEmpty, s"persisted RDDs left on return: ${left()}")
-    val n = out.count()
-    assert(n == 100L, s"each planted clone folds into its base: $n")
-    assert(left().isEmpty, s"persisted RDDs left: ${left()}")
-    assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == entriesBefore)
+  // The LSH operators' caches live only for the call. The eager pair
+  // operators return a frame over their pairs' `localCheckpoint`: its
+  // storage is one persisted RDD that stays in `getPersistentRDDs` until
+  // the frame is unreferenced and GC'd (the ContextCleaner frees it; no
+  // Dataset API can release it). Any other persisted RDD, and any session
+  // cache entry, is a leak. dedupCorpus checkpoints nothing here (its
+  // 20 pairs take the driver-side components path).
+  private lazy val baseIndex = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-cache-index").toString
+    graft.pipeline.IndexStore.saveDedupIndex(bases, "doc_id", "text", dir,
+      shingleN = 2, bands = 16, rowsPerBand = 4)
+    graft.pipeline.IndexStore.loadDedupIndex(spark, dir)
   }
+  for ((op, checkpoints, run, rows) <- Seq[(String, Int, () => org.apache.spark.sql.DataFrame, Long)](
+      ("dedupCorpus", 0, () => Dedup.dedupCorpus(docs, "doc_id", "text",
+        threshold = 0.4, shingleN = 2), 100L),
+      ("minhashDuplicates", 1, () => Dedup.minhashDuplicates(docs, "doc_id", "text",
+        threshold = 0.4, shingleN = 2), 20L),
+      ("simhashDuplicates", 1, () => Dedup.simhashDuplicates(docs, "doc_id", "text",
+        maxDist = 16, shingleN = 2).where(col("id_b") === col("id_a") + 100), 12L),
+      ("crossCorpusDuplicates", 1, () => Dedup.crossCorpusDuplicates(clones, bases,
+        "doc_id", "text", threshold = 0.4, shingleN = 2), 20L),
+      ("crossCorpusAgainst", 1, () => graft.pipeline.IndexStore.crossCorpusAgainst(
+        clones, baseIndex, "doc_id", "text", threshold = 0.4), 20L),
+      ("winnowOverlaps", 1, () => Dedup.winnowOverlaps(docs, "doc_id", "text",
+        k = 3, w = 4), 20L)))
+    test(s"$op leaves no cached pairs behind") {
+      val sc = spark.sparkContext
+      val rddsBefore = sc.getPersistentRDDs.keySet
+      val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
+      def check(when: String): Unit = {
+        val left = sc.getPersistentRDDs -- rddsBefore
+        assert(left.size <= checkpoints && left.values.forall(_.isCheckpointed),
+          s"$when: persisted RDDs other than $checkpoints pair checkpoint(s): " +
+            left.values.map(r => s"${r.id} checkpointed=${r.isCheckpointed}"))
+        assert(org.apache.spark.sql.graftbridge.CacheProbe.entries(spark) == entriesBefore,
+          s"$when: session cache entries left")
+      }
+      val out = run()
+      check("on return")
+      val n = out.collect().length
+      assert(n == rows, s"planted clones found: $n")
+      check("after collect")
+    }
 
   test("LmScore: hand-computed smoothing arithmetic, OOV, and fluency filter") {
     val corpus = Seq((1L, "a b a"), (2L, "a b"), (3L, "c"), (4L, "z z"))
