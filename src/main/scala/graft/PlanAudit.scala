@@ -117,6 +117,9 @@ object PlanAudit {
     audit("sourceReport", Report.sourceReport(docs, "source", "text", "lang"))
     audit("dedupLinesWithinDoc", docs.select(
       Dedup.dedupLinesWithinDoc(col("text"))))
+    audit("dedupLines", Dedup.dedupLines(docs, "doc_id", "text"))
+    audit("dedupLines_guarded", Dedup.dedupLines(docs, "doc_id", "text",
+      guard = HotKeys.SkewGuard.Drop(1000)))
     // r6 ops
     val pqCb = (0 until 4).map(s => pivots.map(_.slice(s * 16, s * 16 + 16)))
     audit("pqEncode", Similarity.pqEncode(emb, "vec_id", "embedding", 64, pqCb))

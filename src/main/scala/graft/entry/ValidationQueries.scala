@@ -15,31 +15,14 @@ object QueryUtil {
     spark.read.parquet(s"$dir/$name.parquet")
 
   /** [[T]] with guaranteed scan parallelism for kernel-heavy per-row
-    * work: the sf tables are ONE parquet file with ONE row group, which
-    * Spark cannot split below a single task no matter the split config
-    * (a row group is the atomic read unit) — the guide-§2.5 "huge
-    * unsplittable file" input-skew case, whose remedy is repartitioning
-    * immediately after the read. Gated on actual under-splitting AND a
-    * size floor, so a small table (or a properly laid-out production
-    * table that already reads as ≥ defaultParallelism splits) never
-    * pays the exchange; column pruning and filter pushdown pass through
-    * a Repartition node, so the shuffle carries only the columns the
-    * query reads. Row-set results are partitioning-independent
-    * throughout this library (the oracle-restatability invariant), so
-    * the spread never changes what a query computes. */
+    * work ([[graft.ops.ScanSpread]]): the sf tables are ONE parquet file
+    * with ONE row group, which Spark cannot split below a single task no
+    * matter the split config. The `minBytes` floor keeps a small table
+    * from paying the exchange. The spread hashes on the table's natural
+    * key, which is unique per row, so the spread is even. */
   def Tspread(spark: SparkSession, dir: String, name: String,
-              keys: Seq[String], minBytes: Long = 2L << 20): DataFrame = {
-    val df = T(spark, dir, name)
-    val want = spark.sparkContext.defaultParallelism
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= minBytes && df.rdd.getNumPartitions < want)
-      // hash exchange on the table's natural key: no round-robin
-      // pre-sort (SPARK-23207) and deterministic row→partition
-      // assignment under task retries (the guide-§2.5 rand()-key
-      // hazard); the key is unique per row, so the spread is even
-      df.repartition(want, keys.map(col): _*)
-    else df
-  }
+              keys: Seq[String], minBytes: Long = 2L << 20): DataFrame =
+    graft.ops.ScanSpread(T(spark, dir, name), keys.map(col), minBytes)
 
   /** greedy validator with standard outputs: valid + violation count. */
   def validate(df: DataFrame, spec: String,

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   *  8. reproducible split assignment ([[Sampling.assignSplits]]).
   *
   * Output: (idCol, textCol, quality, split) with the cleaned text. Every
-  * stage is narrow or broadcast-joined except the line-dedup rebuild and
+  * stage is narrow or broadcast-joined except the line-dedup census and
   * the dedup aggregations (each one shuffle); nothing collects to the
   * driver except near dedup's size-gated edge set
   * ([[Dedup.duplicateGroups]]).
@@ -84,13 +84,13 @@ object Curation {
     c4BadWords: Seq[String] = Nil,
     lineDedupMinDocs: Int = 3,
     lineSep: String = "\n",
-    /** Skew guard for the line-dedup per-doc rebuild — the one per-key
-      * collect stage in this composition ([[Dedup.dedupLines]]'s
-      * contract: the cap is total exploded LINES per id, covering both
-      * a pathological giant document and a duplicated-id ingestion
-      * loop). Off by default; production ingestion should set
-      * [[HotKeys.SkewGuard.Raise]] (fail fast) or `Drop` (route
-      * degenerate ids out; recover via [[HotKeys.hotKeys]]). */
+    /** Skew guard for line dedup ([[Dedup.dedupLines]]'s contract: the
+      * cap is total exploded LINES per id, covering both a pathological
+      * giant document and a duplicated-id ingestion loop). There is no
+      * per-key collect stage any more — the rebuild is narrow — so the
+      * guard is a routing policy: Off by default; production ingestion
+      * should set [[HotKeys.SkewGuard.Raise]] (fail fast) or `Drop`
+      * (route degenerate ids out; recover via [[HotKeys.hotKeys]]). */
     skewGuard: HotKeys.SkewGuard = HotKeys.SkewGuard.Off,
     redactPii: Boolean = true,
     minQuality: Double = 0.5,
@@ -129,8 +129,7 @@ object Curation {
     decontaminateAgainst: Option[(DataFrame, String)] = None,
     decontaminateMinMatches: Int = 8,
     /** Broadcast the cross-dedup / decontamination drop-id sets into
-      * their anti-joins (the [[Dedup.dedupLines]] `broadcastHot`
-      * discipline). True is right when the overlap is a sliver of the
+      * their anti-joins. True is right when the overlap is a sliver of the
       * corpus; set FALSE when a batch can overlap the reference corpus
       * heavily (a re-crawl: 30–50% overlap → billions of drop ids), so
       * the anti-join plans as a shuffle join (AQE picks the strategy)

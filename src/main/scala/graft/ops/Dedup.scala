@@ -818,11 +818,8 @@ object Dedup {
     // under-split stream side (one unsplittable input file) serializes
     // the whole O(block²) verification into a single task (guide §2.5).
     // Spread the stream side up to the default parallelism, hash-keyed
-    // on the id (deterministic under retries, no round-robin pre-sort);
-    // a well-split input is untouched.
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    val spread = if (t.rdd.getNumPartitions < want)
-      t.repartition(want, col("id")) else t
+    // on the id; a well-split input is untouched.
+    val spread = ScanSpread(t, Seq(col("id")))
     val a = spread.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
     val b = t.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
     verifyJaccard(a.join(b, Seq("block")).where(col("id_a") < col("id_b")), threshold)
@@ -884,81 +881,49 @@ object Dedup {
     * paragraph breaks survive (a blank line occurs in virtually every
     * document and would otherwise be stripped corpus-wide).
     *
-    * Scale shape: the exploded (doc, line) frame is exchanged twice to
-    * derive the hot set (per-doc distinct, then the per-line doc count —
-    * both with partial combine) and once more for the per-doc rebuild;
-    * the hot SET itself is small by construction and is BROADCAST back,
-    * so corpus lines never shuffle for the membership test. The
-    * membership join is conditional (left + null check), not an
-    * anti-join, precisely so all-boilerplate docs keep their group. For
-    * corpora where even the repeated-line set is too large to broadcast,
-    * pass `broadcastHot = false`. Returns (idCol, textCol) only.
+    * Scale shape — one path: the exploded (doc, line) frame is exchanged
+    * twice to derive the hot set (per-doc distinct, then the per-line
+    * doc count, both with partial combine); the hot set is collected
+    * into ONE row and broadcast back (guide §2.4: the build side is
+    * small, so the corpus never shuffles for the rebuild). Every input
+    * row then filters its own split line array against that row, so the
+    * output is one row PER INPUT ROW: a repeated id stays repeated, not
+    * merged (ingestion dedup is [[keepCanonical]]'s job). The hot set
+    * must fit one broadcast row, and membership is `array_contains` over
+    * it, so the per-line cost grows linearly with the hot-set size.
+    * Returns (idCol, textCol) only.
     *
-    * Skew guard: the per-doc rebuild is a collect_list grouped by id —
-    * the window-sort hazard class ([[HotKeys]]): a degenerate id (one
-    * pathological 10^8-line document, or the same id ingested millions
-    * of times) serializes its whole line set into a single task's
-    * buffer. `guard` applies to the EXPLODED (id, line) frame keyed by
-    * id, so the cap is total lines per id and covers both degeneracies;
-    * [[HotKeys.SkewGuard.Drop]] removes guarded ids from the OUTPUT
-    * entirely — and, because the guard applies before the census, also
-    * from the repeated-line CENSUS: a boilerplate line shared by the
-    * dropped id plus only `minDocs - 1` survivors no longer reaches the
-    * hot threshold, so surviving docs' dedup can differ from an
-    * unguarded run (recover dropped ids via [[HotKeys.hotKeys]] on the
-    * same exploded shape and route to a degenerate path). */
+    * Skew guard: a routing policy, not protection for a sort — there is
+    * no per-id stage. The cap is total exploded LINES per id (the
+    * [[HotKeys.hotKeys]] count over this operator's exploded shape), so
+    * it covers both a pathological giant document and an id ingested
+    * many times. [[HotKeys.SkewGuard.Raise]] counts at call time and
+    * throws; [[HotKeys.SkewGuard.Drop]] removes every row of an id over
+    * the cap (a NULL id included) from the OUTPUT and from the
+    * repeated-line CENSUS: a boilerplate line shared by the dropped id
+    * plus only `minDocs - 1` survivors no longer reaches the hot
+    * threshold, so surviving docs' dedup can differ from an unguarded
+    * run (recover dropped ids via [[HotKeys.hotKeys]] on the same
+    * exploded shape and route them to a degenerate path). */
   def dedupLines(df: DataFrame, idCol: String, textCol: String,
                  minDocs: Int = 3, sep: String = "\n",
-                 broadcastHot: Boolean = true,
                  guard: HotKeys.SkewGuard = HotKeys.SkewGuard.Off): DataFrame = {
     require(minDocs >= 2,
       s"minDocs ($minDocs) < 2 would mark every line hot and blank the corpus")
-    // NULL text → "" so posexplode keeps the document's group
-    val lines0 = df.select(col(idCol).as("id"),
-      posexplode(split(coalesce(col(textCol), lit("")),
-        java.util.regex.Pattern.quote(sep))).as(Seq("pos", "line")))
-    if (broadcastHot && guard == HotKeys.SkewGuard.Off) {
-      // Narrow-rebuild path (guide §2.4 — remove shuffles outright): the
-      // hot-line census still derives from the exploded frame, but the
-      // per-doc rebuild filters each document's OWN split array against
-      // the hot set riding as a broadcast 1-row array (the DriftChecks
-      // totals-frame pattern), so corpus lines never shuffle at all —
-      // the r7 shape re-exchanged every (id, pos, line) row of the
-      // corpus for a collect_list rebuild. Membership is array_contains
-      // over the hot set, whose broadcastability was already this
-      // branch's precondition. Whitespace-only lines never enter the
-      // hot set, so they pass the membership test unconditionally, and
-      // line order is the array's own. Unlike the grouped rebuild this
-      // emits one row PER INPUT ROW (a duplicated id stays duplicated —
-      // ingestion dedup is [[keepCanonical]]'s job, and the grouped
-      // path's pos-interleaved merge of distinct same-id texts was an
-      // accident, not a contract).
-      val hotArr = lines0.where(trim(col("line")) =!= "")
-        .select("id", "line").distinct()
-        .groupBy("line").agg(count(lit(1)).as("_docs"))
-        .where(col("_docs") >= minDocs)
-        .agg(collect_list(col("line")).as("_graft_hot"))
-      df.join(broadcast(hotArr))
-        .select(col(idCol),
-          array_join(filter(split(coalesce(col(textCol), lit("")),
-            java.util.regex.Pattern.quote(sep)),
-            l => !array_contains(col("_graft_hot"), l)), sep).as(textCol))
-    } else {
-      val lines = HotKeys.applyGuard(lines0, Seq("id"), guard, "dedupLines")
-      val hot0 = lines.where(trim(col("line")) =!= "")
-        .select("id", "line").distinct()
-        .groupBy("line").agg(count(lit(1)).as("_docs"))
-        .where(col("_docs") >= minDocs)
-        .select(col("line"), lit(true).as("_hot"))
-      val hot = if (broadcastHot) broadcast(hot0) else hot0
-      lines.join(hot, Seq("line"), "left")
-        .groupBy("id")
-        .agg(concat_ws(sep, transform(
-          array_sort(collect_list(when(col("_hot").isNull,
-            struct(col("pos"), col("line"))))),
-          s => s.getField("line"))).as(textCol))
-        .withColumnRenamed("id", idCol)
-    }
+    // NULL text → "" so the document keeps its (empty) row
+    val lineArr = split(coalesce(col(textCol), lit("")),
+      java.util.regex.Pattern.quote(sep))
+    def lines(d: DataFrame) = d.select(col(idCol).as("id"), explode(lineArr).as("line"))
+    val kept = HotKeys.applyGuardBy(df, Seq(idCol), lines(df), Seq("id"),
+      guard, "dedupLines")
+    val hotArr = lines(kept).where(trim(col("line")) =!= "")
+      .distinct()
+      .groupBy("line").agg(count(lit(1)).as("_docs"))
+      .where(col("_docs") >= minDocs)
+      .agg(collect_list(col("line")).as("_graft_hot"))
+    kept.join(broadcast(hotArr))
+      .select(col(idCol), array_join(
+        filter(lineArr, l => !array_contains(col("_graft_hot"), l)), sep).as(textCol))
   }
 
   /** INTRA-document line dedup (the other half of the published C4 rule:
@@ -1057,21 +1022,18 @@ object Dedup {
     * gid); the shared-gram set derives from a per-doc-distinct +
     * per-gram-count aggregate (both partial-combine) and is BROADCAST
     * back for the membership join, so span rows never shuffle for the
-    * test. For corpora whose repeated-gram set outgrows a broadcast,
-    * pass `broadcastHot = false`. */
+    * test. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
-                     windowWords: Int = 8, minDocs: Int = 2,
-                     broadcastHot: Boolean = true): DataFrame = {
+                     windowWords: Int = 8, minDocs: Int = 2): DataFrame = {
     require(windowWords >= 1, s"windowWords ($windowWords) must be >= 1")
     require(minDocs >= 2,
       s"minDocs ($minDocs) < 2 would mark every span shared")
     val spans = spanFrame(df, idCol, textCol, windowWords)
-    val hot0 = spans.select("id", "gid").distinct()
+    val hot = spans.select("id", "gid").distinct()
       .groupBy("gid").agg(count(lit(1)).as("_docs"))
       .where(col("_docs") >= minDocs)
       .select("gid")
-    val hot = if (broadcastHot) broadcast(hot0) else hot0
-    spans.join(hot, Seq("gid"))
+    spans.join(broadcast(hot), Seq("gid"))
       .select(col("id").as(idCol), col("pos"), col("gid"))
   }
 
@@ -1087,10 +1049,8 @@ object Dedup {
     * left join back; coverage testing is one narrow filter-with-index
     * pass over the word array. */
   def removeSharedSpans(df: DataFrame, idCol: String, textCol: String,
-                        windowWords: Int = 8, minDocs: Int = 2,
-                        broadcastHot: Boolean = true): DataFrame = {
-    val starts = duplicateSpans(df, idCol, textCol, windowWords, minDocs,
-      broadcastHot)
+                        windowWords: Int = 8, minDocs: Int = 2): DataFrame = {
+    val starts = duplicateSpans(df, idCol, textCol, windowWords, minDocs)
       .groupBy(idCol).agg(sort_array(collect_list(col("pos"))).as("_starts"))
     df.join(starts, Seq(idCol), "left")
       .withColumn("_w", TextAnalysis.words(col(textCol)))

@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   * group) serializes into a single task's sort. This is the same hazard
   * class the LSH family guards with [[Dedup.capBuckets]] /
   * [[Dedup.hotBandBuckets]]; this object is the window-sort mirror.
+  * [[Dedup.dedupLines]] takes the same guard with no per-key stage to
+  * protect: it counts exploded lines per id and uses the guard only to
+  * route degenerate ids out of its census and output.
   *
   * Detection never sorts: per-key row counts come from a hash aggregate
   * with map-side partial combine — a 10^8-row key costs one long of
@@ -68,10 +71,19 @@ object HotKeys {
     * per-policy contract. */
   private[ops] def applyGuard(df: DataFrame, keyCols: Seq[String],
                               guard: SkewGuard, op: String): DataFrame =
+    applyGuardBy(df, keyCols, df, keyCols, guard, op)
+
+  /** [[applyGuard]] with the per-key rows counted in `counted` (keyed by
+    * `countedKeys`, matched to `keyCols` by position) instead of `df`:
+    * for an operator whose cap bounds a derived unit, e.g. the exploded
+    * lines of each document. */
+  private[ops] def applyGuardBy(df: DataFrame, keyCols: Seq[String],
+                                counted: DataFrame, countedKeys: Seq[String],
+                                guard: SkewGuard, op: String): DataFrame =
     guard match {
       case SkewGuard.Off => df
       case SkewGuard.Raise(max) =>
-        val sample = hotKeys(df, keyCols, max).take(5)
+        val sample = hotKeys(counted, countedKeys, max).take(5)
         if (sample.nonEmpty)
           throw new IllegalStateException(
             s"$op: ${sample.length}+ key(s) exceed $max rows — the per-key " +
@@ -88,8 +100,8 @@ object HotKeys {
         // degenerate hot key (unattributed events), and a name-based join
         // would never match it — the guard would log a drop and keep
         // every row
-        val hot = broadcast(hotKeys(df, keyCols, max)
-          .select(keyCols.zipWithIndex.map { case (k, i) =>
+        val hot = broadcast(hotKeys(counted, countedKeys, max)
+          .select(countedKeys.zipWithIndex.map { case (k, i) =>
             col(k).as(s"_hk$i") }: _*)
           .withColumn("_hot", lit(true)))
         val cond = keyCols.zipWithIndex

@@ -571,7 +571,15 @@ object Similarity {
     // ZERO per-call quantization work — the candidate stage never
     // touches the float corpus at all (AnnScaleBench measured the
     // inline path at ~3x the persisted path's scan cost)
-    val qc = spreadForScan(
+    // candidate-scan parallelism for the compressed-code tiers: a
+    // persisted int8/PQ table is tiny in BYTES (a 4-64× compression of
+    // the float corpus), so bytes-based split sizing hands the scan a
+    // handful of partitions, but the query-broadcast candidate stage
+    // costs rows × queries regardless of bytes (AnnScaleBench measured
+    // the persisted PQ scan 5× slower than inline purely from the
+    // 8-vs-64 partition read). Round-robin with no byte floor: the small
+    // byte size is the reason to spread; pqTopK does the same
+    val qc = ScanSpread(
       preQuantized.getOrElse(quantizeInt8(corpus, corpusId, corpusVec)))
       .select(col(corpusId).as("neighbor_id"), col("qvec").as("cq"))
       .withColumn("cn", sqrt(dotQuantized(col("cq"), col("cq")).cast("double")))
@@ -599,21 +607,6 @@ object Similarity {
     exact.withColumn("rank", row_number().over(w))
       .where(col("rank") <= k)
       .select("query_id", "neighbor_id", "approx_sim", "sim", "rank")
-  }
-
-  /** Guarantee candidate-scan parallelism for the compressed-code ANN
-    * tiers: a persisted int8/PQ table is tiny in BYTES (a 4-64×
-    * compression of the float corpus), so Spark's bytes-based split
-    * sizing hands the scan a handful of partitions — but the
-    * query-broadcast candidate stage costs rows × queries regardless of
-    * bytes, and under-splitting serializes it (AnnScaleBench measured
-    * the persisted PQ scan 5× slower than inline purely from the 8-vs-64
-    * partition read). Repartition up only when the input is
-    * under-split; at cluster scale a real code table already reads as
-    * ≥ defaultParallelism splits and this is a no-op. */
-  private def spreadForScan(df: DataFrame): DataFrame = {
-    val want = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < want) df.repartition(want) else df
   }
 
   // ------------------------------------------------------------------
@@ -752,7 +745,7 @@ object Similarity {
     // plan that fused stage falls out of JIT and the candidate scan runs
     // ~6x slower (BENCH.md, "Persisted-ANN production shape": 80.7 s at
     // 1M vectors -> inline parity)
-    val codes = spreadForScan(preCodes
+    val codes = ScanSpread(preCodes
       .map(_.select(col(corpusId).as("neighbor_id"), col("pcode")))
       .getOrElse(corpus.select(col(corpusId).as("neighbor_id"),
         pqEncodeCol(col(corpusVec), dim, codebooks).as("pcode"))))

@@ -3337,6 +3337,8 @@ class OpsSpec extends SparkSpec {
         k = 3, w = 4), 20L)))
     test(s"$op leaves no cached pairs behind") {
       val sc = spark.sparkContext
+      // caching a plan that is already cached adds no entry
+      spark.catalog.clearCache()
       val rddsBefore = sc.getPersistentRDDs.keySet
       val entriesBefore = org.apache.spark.sql.graftbridge.CacheProbe.entries(spark)
       def check(when: String): Unit = {
@@ -3451,11 +3453,48 @@ class OpsSpec extends SparkSpec {
     assert(!plan.contains("array_sort"), plan)
     // the narrow path never regroups the corpus lines by doc id
     assert(!plan.contains("ObjectHashAggregate(keys=[id#"), plan)
-    // the broadcastHot=false fallback keeps the grouped-rebuild shape
-    // (an id-keyed collect_list regroup of the exploded lines)
-    val lazyPlan = Dedup.dedupLines(docs, "doc_id", "text", minDocs = 3,
-      broadcastHot = false).queryExecution.executedPlan.toString
-    assert(lazyPlan.contains("ObjectHashAggregate(keys=[id#"), lazyPlan)
+  }
+
+  test("dedupLines SkewGuard.Drop: same narrow rebuild, ids over the cap (NULL too) out of census and output") {
+    import graft.ops.HotKeys.SkewGuard
+    val corpus = Seq[(Option[Long], String)](
+      (Some(1L), "unique one\nBOILER\nSHARED"),
+      (Some(2L), "BOILER\nown line"),
+      (Some(3L), "third doc\nBOILER"),
+      // a repeated id under the cap: two output rows, not one merged row
+      (Some(7L), "seven a\nBOILER"),
+      (Some(7L), "seven b"),
+      // a repeated id over the cap only in total (3 + 3 lines)
+      (Some(8L), "eight a\nSHARED\nBOILER"),
+      (Some(8L), "eight b\nmore\nBOILER"),
+      // one degenerate document
+      (Some(999L), ((1 to 20).map(i => s"spam $i") :+ "SHARED").mkString("\n")),
+      // NULL ids are one key: 3 + 3 lines
+      (None, "orphan a\nSHARED\nBOILER"),
+      (None, "orphan b\nx\ny"))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Option[Long], String)] =
+      df.collect().map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1)))
+        .toSeq.sorted
+    val guarded = Dedup.dedupLines(corpus, "doc_id", "text", minDocs = 3,
+      guard = SkewGuard.Drop(5L))
+    val rest = corpus.where(col("doc_id").isNotNull && !col("doc_id").isin(8L, 999L))
+    val expected = rows(Dedup.dedupLines(rest, "doc_id", "text", minDocs = 3))
+    assert(rows(guarded) == expected, rows(guarded).toString)
+    // SHARED sits in one surviving doc only once the dropped ids leave
+    // the census; BOILER is still in four
+    assert(expected == Seq(
+      (Some(1L), "unique one\nSHARED"), (Some(2L), "own line"),
+      (Some(3L), "third doc"), (Some(7L), "seven a"), (Some(7L), "seven b")),
+      expected.toString)
+    val plan = guarded.queryExecution.executedPlan.toString
+    assert(!plan.contains("ObjectHashAggregate(keys=[id#"), plan)
+    assert(!plan.contains("array_sort"), plan)
+    val ex = intercept[IllegalStateException] {
+      Dedup.dedupLines(corpus, "doc_id", "text", minDocs = 3,
+        guard = SkewGuard.Raise(5L))
+    }
+    assert(ex.getMessage.contains("dedupLines"), ex.getMessage)
   }
 
   test("dedupLines skew guard: degenerate id dropped/raised, cool docs unchanged") {
